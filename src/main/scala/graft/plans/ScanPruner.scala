@@ -3,16 +3,18 @@ package graft.plans
 import java.time.{LocalDate, LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.types.{DateType, StringType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.sources.{ColStat, StatsSidecar}
+
 /** Conservative statistics-based file pruning — the reference's
-  * `_prune_metadata_files` (pydala/helpers/metadata.py:127-266) as
-  * Column expressions over the stats sidecar.
+  * `_prune_metadata_files` (pydala/helpers/metadata.py:127-266),
+  * evaluated on the driver over the stats sidecar.
   *
   * Contract (pinned by the reference's tests/test_table.py:35-224):
   *  - only a top-level AND conjunction is split; atoms are
@@ -24,6 +26,22 @@ import org.apache.spark.unsafe.types.UTF8String
   *    partition values parsed from the file path;
   *  - selected files return ALL their rows — scan() is file-level
   *    pruning, not row filtering.
+  *
+  * Evaluation: one sidecar read collects the rows of the atoms'
+  * non-partition columns (an IN filter pushed into the parquet scan),
+  * and survival is decided in plain Scala. That result holds row
+  * groups × atom columns — the same order of size as the file listing
+  * the caller already holds on the driver — so a per-atom distributed
+  * join plan would buy nothing but fixed job overhead. Predicates that
+  * do not parse, or whose atoms are all on partition columns, read
+  * nothing and launch no job.
+  *
+  * Ordering follows Catalyst, so a row group is pruned only where
+  * Spark's own filter cannot match: strings compare by UTF-8 bytes
+  * (`UTF8String.compareTo`), doubles by `SQLOrderingUtil.compareDoubles`
+  * (NaN greatest, -0.0 = 0.0), integral lanes exactly in int64.
+  * Temporal literals are read as UTC, the session zone the project
+  * pins.
   */
 object ScanPruner {
 
@@ -35,6 +53,13 @@ object ScanPruner {
   case object Eq extends Op
 
   final case class Atom(column: String, op: Op, value: Any, valueIsString: Boolean)
+
+  /** A typed `DATE`/`TIMESTAMP` literal as epoch micros (a date at its
+    * midnight). It prunes only the date and timestamp lanes: Spark
+    * compares a date with a timestamp as the date's midnight, so the
+    * raw days (or micros) must never meet the other unit.
+    */
+  final case class TemporalValue(micros: Long)
 
   /** Parse a SQL predicate into conjunctive atoms; None ⇒ unsupported
     * somewhere ⇒ caller keeps all files.
@@ -53,17 +78,15 @@ object ScanPruner {
     case x => Seq(x)
   }
 
-  private def flip(op: Op): Op = op match {
-    case Gt => Lt; case Ge => Le; case Lt => Gt; case Le => Ge; case Eq => Eq
-  }
-
   private def parseAtom(e: Expression): Option[Atom] = {
     def mk(attr: Expression, lit: Expression, op: Op): Option[Atom] = (attr, lit) match {
       case (a: UnresolvedAttribute, l: Literal) =>
         val isStr = l.dataType == StringType
-        val v = l.value match {
-          case u: UTF8String => u.toString
-          case other => other
+        val v = (l.value, l.dataType) match {
+          case (u: UTF8String, _) => u.toString
+          case (d: Integer, DateType) => TemporalValue(d.longValue * MicrosPerDay)
+          case (us: java.lang.Long, TimestampType | TimestampNTZType) => TemporalValue(us)
+          case (other, _) => other
         }
         Some(Atom(a.nameParts.mkString("."), op, v, isStr))
       case _ => None
@@ -85,6 +108,7 @@ object ScanPruner {
 
   // ---- temporal literal parsing ('YYYY-MM-DD[ HH:MM[:SS[.ffffff]]]') ----
 
+  private val MicrosPerDay = 86400000000L
   private val DateRe = """^(\d{4})-(\d{2})-(\d{2})$""".r
   private val TsRe = """^(\d{4})-(\d{2})-(\d{2})[ T](\d{2}):(\d{2})(:(\d{2})(\.(\d{1,6}))?)?$""".r
 
@@ -92,49 +116,60 @@ object ScanPruner {
   def parseTemporal(s: String): Option[(Long, Int)] = s match {
     case DateRe(_*) =>
       val d = LocalDate.parse(s)
-      Some((d.toEpochDay * 86400000000L, d.toEpochDay.toInt))
+      Some((d.toEpochDay * MicrosPerDay, d.toEpochDay.toInt))
     case TsRe(_*) =>
       val norm = s.replace(' ', 'T')
       val fmt = DateTimeFormatter.ISO_LOCAL_DATE_TIME
       val dt = LocalDateTime.parse(
         if (norm.count(_ == ':') == 1) norm + ":00" else norm, fmt)
       val micros = dt.toEpochSecond(ZoneOffset.UTC) * 1000000L + dt.getNano / 1000L
-      Some((micros, (micros / 86400000000L).toInt))
+      // floor, not truncation: a pre-1970 instant lies on the day before
+      Some((micros, Math.floorDiv(micros, MicrosPerDay).toInt))
     case _ => None
   }
 
-  // ---- stats-row predicates (null-stat tolerant) --------------------
+  // ---- row-group survival over stats rows (null-stat tolerant) ------
 
-  private def numPred(op: Op, v: Double): Column = op match {
-    case Gt => col("max_num") > v || col("max_num").isNull
-    case Ge => col("max_num") >= v || col("max_num").isNull
-    case Lt => col("min_num") < v || col("min_num").isNull
-    case Le => col("min_num") <= v || col("min_num").isNull
-    case Eq => (col("min_num") <= v || col("min_num").isNull) &&
-      (col("max_num") >= v || col("max_num").isNull)
+  /** Whether `op literal` may hold somewhere in `[min, max]`; `c` is the
+    * sign of (bound − literal) under Catalyst's ordering. `>`/`>=` test
+    * the max, `<`/`<=` the min, `=` both; a missing bound keeps.
+    */
+  private def within[T](op: Op, min: Option[T], max: Option[T])(c: T => Int): Boolean = {
+    def lo(ok: Int => Boolean) = min.forall(m => ok(c(m)))
+    def hi(ok: Int => Boolean) = max.forall(m => ok(c(m)))
+    op match {
+      case Gt => hi(_ > 0)
+      case Ge => hi(_ >= 0)
+      case Lt => lo(_ < 0)
+      case Le => lo(_ <= 0)
+      case Eq => lo(_ <= 0) && hi(_ >= 0)
+    }
   }
 
-  /** Exact-bigint lane predicate: integral columns (long/date/timestamp/
-    * bool) compare in the int64 domain, never through double — the
-    * double lane rounds past 2^53 and a rounded bound could prune a file
-    * whose true envelope contains matches. Sidecars written before the
-    * exact lanes existed have all-null `min_int`/`max_int`: those rows
+  /** Double lane under Spark's double ordering: NaN sorts greatest and
+    * -0.0 equals 0.0 (a plain `<` would drop a NaN-max row group).
+    */
+  private def numOk(op: Op, v: Double)(s: ColStat): Boolean =
+    within(op, s.min_num, s.max_num)(SQLOrderingUtil.compareDoubles(_, v))
+
+  /** String lane in UTF-8 byte order, as Catalyst and parquet compare;
+    * `String.compareTo` (UTF-16) orders supplementary characters below
+    * U+E000..U+FFFF and would drop matching row groups.
+    */
+  private def strOk(op: Op, v: UTF8String)(s: ColStat): Boolean =
+    within(op, s.min_str, s.max_str)(b => UTF8String.fromString(b).compareTo(v))
+
+  /** Exact-bigint lane: integral columns (long/date/timestamp/bool)
+    * compare in the int64 domain, never through double — the double
+    * lane rounds past 2^53 and a rounded bound could prune a file whose
+    * true envelope contains matches. Sidecars written before the exact
+    * lanes existed read back with null `min_int`/`max_int`: those rows
     * FALL BACK to the double lane (exact below 2^53) rather than losing
     * pruning entirely.
     */
-  private def lanePresent: Column =
-    col("min_int").isNotNull || col("max_int").isNotNull
-
-  private def intPred(op: Op, v: Long): Column = {
-    val exact = op match {
-      case Gt => col("max_int") > v
-      case Ge => col("max_int") >= v
-      case Lt => col("min_int") < v
-      case Le => col("min_int") <= v
-      case Eq => col("min_int") <= v && col("max_int") >= v
-    }
-    when(lanePresent, exact).otherwise(numPred(op, v.toDouble))
-  }
+  private def intOk(op: Op, v: Long)(s: ColStat): Boolean =
+    if (s.min_int.isEmpty && s.max_int.isEmpty) numOk(op, v.toDouble)(s)
+    else within(op, s.min_int, s.max_int)(java.lang.Long.compare(_, v))
 
   /** A fractional literal against an integral lane, translated to the
     * equivalent exact integer comparison (x > 10.5 ⟺ x ≥ 11). Bounds
@@ -142,93 +177,96 @@ object ScanPruner {
     * first can move it by up to an ulp and reintroduce the unsound
     * pruning the integer lanes exist to prevent.
     */
-  private def fracIntPred(op: Op, v: java.math.BigDecimal): Column = {
+  private def fracIntOk(op: Op, v: java.math.BigDecimal): ColStat => Boolean = {
     import java.math.RoundingMode
-    val lo =
-      try v.setScale(0, RoundingMode.FLOOR).longValueExact
-      catch { case _: ArithmeticException => return lit(true) } // out of int64
-    val hi =
-      try v.setScale(0, RoundingMode.CEILING).longValueExact
-      catch { case _: ArithmeticException => return lit(true) }
+    val (lo, hi) =
+      try (v.setScale(0, RoundingMode.FLOOR).longValueExact,
+        v.setScale(0, RoundingMode.CEILING).longValueExact)
+      catch { case _: ArithmeticException => return _ => true } // out of int64
     op match {
-      case Gt => if (lo == Long.MaxValue) lit(false) else intPred(Ge, lo + 1)
-      case Ge => intPred(Ge, hi)
-      case Lt => if (hi == Long.MinValue) lit(false) else intPred(Le, hi - 1)
-      case Le => intPred(Le, lo)
-      case Eq => lit(false) // no integer equals a strictly fractional value
+      case Gt => if (lo == Long.MaxValue) _ => false else intOk(Ge, lo + 1)
+      case Ge => intOk(Ge, hi)
+      case Lt => if (hi == Long.MinValue) _ => false else intOk(Le, hi - 1)
+      case Le => intOk(Le, lo)
+      case Eq => _ => false // no integer equals a strictly fractional value
     }
   }
 
-  private val IntLanes = Seq("long", "date", "timestamp", "bool")
+  /** A timestamp against a date lane, compared as the date's midnight:
+    * the exact day comparison (d < t ⟺ d < ⌈t⌉ in days).
+    */
+  private def midnightOk(op: Op, micros: Long): ColStat => Boolean = {
+    val lo = Math.floorDiv(micros, MicrosPerDay)
+    val hi = -Math.floorDiv(-micros, MicrosPerDay)
+    op match {
+      case Gt => intOk(Gt, lo)
+      case Ge => intOk(Ge, hi)
+      case Lt => intOk(Lt, hi)
+      case Le => intOk(Le, lo)
+      case Eq => if (lo == hi) intOk(Eq, lo) else _ => false
+    }
+  }
 
-  private def integralValue(v: Any): Option[Long] = v match {
-    case b: java.lang.Byte => Some(b.toLong)
-    case s: java.lang.Short => Some(s.toLong)
-    case i: java.lang.Integer => Some(i.toLong)
-    case l: java.lang.Long => Some(l)
-    case d: java.math.BigDecimal =>
-      try if (d.stripTrailingZeros.scale <= 0) Some(d.longValueExact) else None
-      catch { case _: ArithmeticException => None }
-    case d: org.apache.spark.sql.types.Decimal => integralValue(d.toJavaBigDecimal)
-    // integral-VALUED float literals (`1e1`, `10.0D`) must take the
-    // integral path: fracIntPred's Eq would prune every file
-    case d: java.lang.Double if java.lang.Double.isFinite(d) =>
-      try integralValue(new java.math.BigDecimal(d.doubleValue()))
-      catch { case _: NumberFormatException => None }
-    case f: java.lang.Float if java.lang.Float.isFinite(f) =>
-      integralValue(java.lang.Double.valueOf(f.doubleValue()))
+  private val IntLanes = Set("long", "date", "timestamp", "bool")
+
+  /** Integral-lane test for integral-lane rows, `other` for the rest. */
+  private def byLane(int: ColStat => Boolean, other: ColStat => Boolean): ColStat => Boolean =
+    s => if (IntLanes(s.typ)) int(s) else other(s)
+
+  /** Timestamp-lane test at `micros`, `onDate` for date rows, `other`
+    * for the rest.
+    */
+  private def byTemporalLane(op: Op, micros: Long, onDate: ColStat => Boolean,
+                             other: ColStat => Boolean): ColStat => Boolean =
+    s => s.typ match {
+      case "timestamp" => intOk(op, micros)(s)
+      case "date" => onDate(s)
+      case _ => other(s)
+    }
+
+  /** Exact decimal value of a numeric or boolean (0/1) literal. */
+  private def exactValue(v: Any): Option[java.math.BigDecimal] = v match {
+    case n @ (_: java.lang.Byte | _: java.lang.Short | _: java.lang.Integer | _: java.lang.Long) =>
+      Some(java.math.BigDecimal.valueOf(n.asInstanceOf[Number].longValue))
+    case b: java.lang.Boolean => Some(if (b) java.math.BigDecimal.ONE else java.math.BigDecimal.ZERO)
+    case b: java.math.BigDecimal => Some(b)
+    case d: org.apache.spark.sql.types.Decimal => Some(d.toJavaBigDecimal)
+    case d: java.lang.Double if java.lang.Double.isFinite(d) => Some(new java.math.BigDecimal(d.doubleValue))
+    case f: java.lang.Float if java.lang.Float.isFinite(f) => Some(new java.math.BigDecimal(f.doubleValue))
     case _ => None
   }
 
-  private def strPred(op: Op, v: String): Column = op match {
-    case Gt => col("max_str") > v || col("max_str").isNull
-    case Ge => col("max_str") >= v || col("max_str").isNull
-    case Lt => col("min_str") < v || col("min_str").isNull
-    case Le => col("min_str") <= v || col("min_str").isNull
-    case Eq => (col("min_str") <= v || col("min_str").isNull) &&
-      (col("max_str") >= v || col("max_str").isNull)
-  }
-
-  /** Stats-row predicate for an atom, dispatching on the row's `typ`.
-    * Integral lanes always compare through `min_int`/`max_int` (exact
-    * for the full int64 domain); the double lane serves float/double
-    * columns, whose parquet stats are already exact doubles.
+  /** The value as an int64 when it is integral — integral-VALUED float
+    * literals (`1e1`, `10.0D`) included: fracIntOk's Eq would prune
+    * every file for them.
     */
-  def statsPredicate(a: Atom): Column = a.value match {
-    case s: String =>
-      parseTemporal(s) match {
-        case Some((micros, days)) =>
-          when(col("typ") === "timestamp", intPred(a.op, micros))
-            .when(col("typ") === "date", intPred(a.op, days))
-            .otherwise(strPred(a.op, s))
-        case None => strPred(a.op, s)
+  private def integralValue(b: java.math.BigDecimal): Option[Long] =
+    try if (b.stripTrailingZeros.scale <= 0) Some(b.longValueExact) else None
+    catch { case _: ArithmeticException => None }
+
+  /** The atom as a test on one stats row, dispatching on the row's
+    * `typ`: temporal literals compare on the date/timestamp lanes,
+    * numbers on the exact integral lane or the double lane, other
+    * strings on the string lane. An unknown literal kind never prunes.
+    */
+  private def rowGroupTest(a: Atom): ColStat => Boolean = a.value match {
+    case TemporalValue(micros) =>
+      byTemporalLane(a.op, micros, midnightOk(a.op, micros), _ => true)
+    case v: String =>
+      val onString = strOk(a.op, UTF8String.fromString(v)) _
+      parseTemporal(v) match {
+        // Spark casts the string to a date for a date column
+        case Some((micros, days)) => byTemporalLane(a.op, micros, intOk(a.op, days.toLong), onString)
+        case None => onString
       }
-    case b: Boolean =>
-      when(col("typ").isin(IntLanes: _*), intPred(a.op, if (b) 1L else 0L))
-        .otherwise(numPred(a.op, if (b) 1.0 else 0.0))
     case v =>
-      integralValue(v) match {
-        case Some(l) =>
-          when(col("typ").isin(IntLanes: _*), intPred(a.op, l))
-            .otherwise(numPred(a.op, l.toDouble))
-        case None =>
-          // strictly-fractional numeric literal: keep its EXACT decimal
-          // value for the integral-lane floor/ceil translation
-          val bd: Option[java.math.BigDecimal] = v match {
-            case b: java.math.BigDecimal => Some(b)
-            case d: org.apache.spark.sql.types.Decimal => Some(d.toJavaBigDecimal)
-            case d: java.lang.Double if java.lang.Double.isFinite(d) =>
-              Some(new java.math.BigDecimal(d.doubleValue()))
-            case f: java.lang.Float if java.lang.Float.isFinite(f) =>
-              Some(new java.math.BigDecimal(f.doubleValue()))
-            case _ => None
+      exactValue(v) match {
+        case Some(b) =>
+          integralValue(b) match {
+            case Some(l) => byLane(intOk(a.op, l), numOk(a.op, l.toDouble))
+            case None => byLane(fracIntOk(a.op, b), numOk(a.op, b.doubleValue()))
           }
-          bd match {
-            case Some(b) =>
-              when(col("typ").isin(IntLanes: _*), fracIntPred(a.op, b))
-                .otherwise(numPred(a.op, b.doubleValue()))
-            case None => lit(true) // unknown literal kind: never prune on it
-          }
+        case None => _ => true
       }
   }
 
@@ -245,6 +283,8 @@ object ScanPruner {
     * sides parse, else lexicographic).
     */
   def evalPartition(a: Atom, value: String): Boolean = {
+    // a typed date/timestamp literal does not compare with path text
+    if (a.value.isInstanceOf[TemporalValue]) return true
     val numericLit: Option[Double] = a.value match {
       case n: Number => Some(n.doubleValue())
       case s: String => s.toDoubleOption
@@ -270,61 +310,42 @@ object ScanPruner {
   def selectFiles(statsDF: Option[DataFrame], allRelFiles: Seq[String],
                   filterSql: String): Option[Seq[String]] = {
     val atoms = parse(filterSql) match {
-      case None => return None
-      case Some(Nil) => return None
-      case Some(as) => as
+      case Some(as) if as.nonEmpty => as
+      case _ => return None
     }
-
-    val statCols: Set[String] = statsDF
-      .map(df => df.select("column").distinct().collect().map(_.getString(0)).toSet)
-      .getOrElse(Set.empty)
     val partCols: Set[String] =
-      allRelFiles.flatMap(f => partitionValues(f).keys).toSet
+      allRelFiles.iterator.flatMap(f => partitionValues(f).keys).toSet
+    // a partition column is decided by the path alone: its path value
+    // is what Spark reads for it
+    val statAtoms = atoms.filterNot(a => partCols.contains(a.column))
 
-    // a column we know nothing about makes the whole predicate unsafe
-    if (atoms.exists(a => !statCols.contains(a.column) && !partCols.contains(a.column)))
-      return None
-
-    // 1) partition-value pruning (driver-side: the file list is metadata)
-    val afterPart = allRelFiles.filter { f =>
-      val pv = partitionValues(f)
-      atoms.forall { a =>
-        pv.get(a.column) match {
-          case Some(v) => evalPartition(a, v)
-          case None => true
-        }
+    val rows: Seq[ColStat] =
+      if (statAtoms.isEmpty) Nil
+      else statsDF match {
+        case Some(df) => StatsSidecar.rows(df, Some(statAtoms.map(_.column).distinct)).toSeq
+        case None => return None
       }
-    }
+    // a column we know nothing about makes the whole predicate unsafe
+    val statCols = rows.iterator.map(_.column).toSet
+    if (statAtoms.exists(a => !statCols.contains(a.column))) return None
 
-    // 2) stats pruning: a row group survives iff every stats atom is
-    // possibly-true; a file survives iff some row group survives
-    val statAtoms = atoms.filter(a => statCols.contains(a.column))
-    val survivors: Set[String] = statsDF match {
-      case None => afterPart.toSet
-      case Some(df) if statAtoms.isEmpty => afterPart.toSet
-      case Some(df0) =>
-        // sidecars written before the exact-bigint lanes existed: treat the
-        // lanes as all-null (predicates fall back to "keep")
-        val df = if (df0.columns.contains("min_int")) df0
-          else df0.withColumn("min_int", lit(null).cast("long"))
-            .withColumn("max_int", lit(null).cast("long"))
-        var rg = df.select("file_path", "row_group").distinct()
-        statAtoms.zipWithIndex.foreach { case (a, i) =>
-          val ok = df.filter(col("column") === a.column)
-            .select(col("file_path"), col("row_group"),
-              statsPredicate(a).as(s"ok_$i"))
-          rg = rg.join(ok, Seq("file_path", "row_group"), "left")
-        }
-        val allOk = statAtoms.indices
-          .map(i => coalesce(col(s"ok_$i"), lit(true)))
-          .reduce(_ && _)
-        val withStats = rg.filter(allOk).select("file_path")
-          .distinct().collect().map(_.getString(0)).toSet
-        val statFiles = df.select("file_path").distinct()
-          .collect().map(_.getString(0)).toSet
-        // files unknown to the sidecar are kept (physical authoritative)
-        afterPart.filter(f => withStats.contains(f) || !statFiles.contains(f)).toSet
-    }
-    Some(allRelFiles.filter(survivors.contains))
+    // a row group survives iff every stats atom may hold on it (an atom
+    // without a stats row there holds); a file iff some row group does
+    val tests = statAtoms.map(a => (a.column, rowGroupTest(a)))
+    val survivors: Set[String] = rows.groupBy(r => (r.file_path, r.row_group))
+      .collect { case ((f, _), rg) if tests.forall { case (c, t) =>
+        val cs = rg.filter(_.column == c)
+        cs.isEmpty || cs.exists(t)
+      } => f }
+      .toSet
+    // files with no stats row for these columns are kept: unknown to
+    // the sidecar (physical authoritative) or without the columns
+    val statFiles = rows.iterator.map(_.file_path).toSet
+
+    Some(allRelFiles.filter { f =>
+      val pv = partitionValues(f)
+      atoms.forall(a => pv.get(a.column).forall(evalPartition(a, _))) &&
+        (survivors.contains(f) || !statFiles.contains(f))
+    })
   }
 }

@@ -111,8 +111,10 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
   }
 
   /** Files a scan(filter) would read — the dry-run face of pruning. */
-  def pruneFiles(filterSql: String): Seq[String] =
-    ScanPruner.selectFiles(stats, relFiles, Sanitize(filterSql)).getOrElse(relFiles)
+  def pruneFiles(filterSql: String): Seq[String] = {
+    val all = relFiles
+    ScanPruner.selectFiles(stats, all, Sanitize(filterSql)).getOrElse(all)
+  }
 
   /** Dataset time range for a timestamp column, metadata-only from the
     * sidecar (reference `SELECT MIN(ts.min), MAX(ts.max)`,
@@ -120,10 +122,11 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
     * sidecar or stats are missing.
     */
   def timeRange(column: String): Option[(Long, Long)] = stats.flatMap { s =>
-    val exact = s.columns.contains("min_int")
-    val (lo, hi) = if (exact) ("min_int", "max_int") else ("min_num", "max_num")
+    // exact lanes; sidecars written before them read back with null
+    // min_int/max_int and fall back to the double lane
+    def bound(exact: String, num: String) = coalesce(col(exact), col(num).cast("long"))
     val r = s.filter(col("column") === column && col("typ") === "timestamp")
-      .agg(min(lo).cast("long"), max(hi).cast("long")).collect()(0)
+      .agg(min(bound("min_int", "min_num")), max(bound("max_int", "max_num"))).collect()(0)
     if (r.isNullAt(0) || r.isNullAt(1)) None
     else Some((r.getLong(0), r.getLong(1)))
   }

@@ -9,7 +9,8 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** One row of the stats sidecar: file × row-group × column min/max
   * statistics — the Spark-native replacement for the reference's
@@ -76,6 +77,15 @@ object StatsSidecar {
   def sidecarPath(root: String): String =
     FsUtil.stripScheme(root).stripSuffix("/") + "/" + SidecarName
 
+  /** Footer-read task count: one task per ~64 files once the listing
+    * outgrows 32 tasks. Footer reads are small metadata I/O, and a task
+    * per file at 10⁶ files would be pure scheduler overhead (a
+    * min(files, 32) cap goes the other way — 30k files per task on huge
+    * listings).
+    */
+  private def footerTasks(files: Int): Int =
+    math.max(1, math.min(files, math.max(32, files / 64)))
+
   /** Distributed footer-stats frame: one row per file × row-group ×
     * leaf column, built on executors and NEVER collected — the
     * `update()` path writes it straight back out (round-9: at 100 TB,
@@ -87,14 +97,8 @@ object StatsSidecar {
     import spark.implicits._
     if (absFiles.isEmpty) return spark.emptyDataset[ColStat].toDF()
     val rootC = FsUtil.stripScheme(root)
-    // one task per ~64 files once the listing outgrows 32 tasks:
-    // footer reads are small metadata I/O, and a task per file at 10⁶
-    // files would be pure scheduler overhead (the old min(files, 32)
-    // cap went the other way — 30k files per task on huge listings)
-    val parts = math.max(1,
-      math.min(absFiles.size, math.max(32, absFiles.size / 64)))
     spark.createDataset(
-      spark.sparkContext.parallelize(absFiles, parts)
+      spark.sparkContext.parallelize(absFiles, footerTasks(absFiles.size))
         .mapPartitions(it => it.flatMap(f => readFooter(rootC, f)))).toDF()
   }
 
@@ -102,10 +106,8 @@ object StatsSidecar {
     * plans, specs). Plans are file-count-bounded by contract; the
     * update path must use [[collectDF]] instead.
     */
-  def collect(spark: SparkSession, root: String, absFiles: Seq[String]): Seq[ColStat] = {
-    import spark.implicits._
-    collectDF(spark, root, absFiles).as[ColStat].collect().toSeq
-  }
+  def collect(spark: SparkSession, root: String, absFiles: Seq[String]): Seq[ColStat] =
+    rows(collectDF(spark, root, absFiles)).toSeq
 
   /** Bloom-filter footer offsets for `column`: one entry per row
     * group per data file under `root` (−1 = no bloom stamped).
@@ -123,9 +125,7 @@ object StatsSidecar {
                          column: String): Seq[Long] = {
     val files = FsUtil.listParquet(root)
     if (files.isEmpty) return Nil
-    val parts = math.max(1,
-      math.min(files.size, math.max(32, files.size / 64)))
-    spark.sparkContext.parallelize(files, parts).mapPartitions { it =>
+    spark.sparkContext.parallelize(files, footerTasks(files.size)).mapPartitions { it =>
       it.flatMap { absFile =>
         val in = HadoopInputFile.fromPath(
           new HPath("file://" + absFile), new Configuration())
@@ -151,9 +151,7 @@ object StatsSidecar {
   def schemaFingerprints(spark: SparkSession,
                          absFiles: Seq[String]): Map[String, String] = {
     if (absFiles.isEmpty) return Map.empty
-    val parts = math.max(1,
-      math.min(absFiles.size, math.max(32, absFiles.size / 64)))
-    spark.sparkContext.parallelize(absFiles, parts).mapPartitions { it =>
+    spark.sparkContext.parallelize(absFiles, footerTasks(absFiles.size)).mapPartitions { it =>
       it.map { f =>
         val in = HadoopInputFile.fromPath(
           new HPath("file://" + f), new Configuration())
@@ -243,14 +241,24 @@ object StatsSidecar {
     * parquet columns as nullable).
     */
   private val colStatSchema = org.apache.spark.sql.types.StructType(
-    org.apache.spark.sql.Encoders.product[ColStat].schema
-      .map(f => f.copy(nullable = true)))
+    Encoders.product[ColStat].schema.map(f => f.copy(nullable = true)))
 
   def read(spark: SparkSession, root: String): Option[DataFrame] = {
     val p = sidecarPath(root)
     if (FsUtil.exists(p)) Some(spark.read.schema(colStatSchema).parquet(p))
     else None
   }
+
+  private val colStatEncoder: Encoder[ColStat] = Encoders.product[ColStat]
+
+  /** Stats rows on the driver, in one job — the reader behind the
+    * small-sidecar reconcile in [[update]], [[collect]] and the scan
+    * pruner. With `columns`, only those leaf columns' rows are read (an
+    * IN filter pushed into the parquet scan).
+    */
+  def rows(sidecar: DataFrame, columns: Option[Seq[String]] = None): Array[ColStat] =
+    columns.fold(sidecar)(cs => sidecar.filter(col("column").isin(cs: _*)))
+      .as(colStatEncoder).collect()
 
   /** Reconcile the sidecar with the physical files — physical discovery
     * is authoritative (ADR 0001; pydala/metadata.py:809-862): stats for
@@ -265,9 +273,9 @@ object StatsSidecar {
       FsUtil.deleteRecursively(p)
       return spark.emptyDataset[ColStat].toDF()
     }
-    // DataFrame end-to-end (round-9, verdict #2): no ColStat row ever
-    // lands on the driver. The only driver-sized values on this path
-    // are file PATHS — which the driver already holds from the listing.
+    // Past the fast-path bounds the reconcile is DataFrame end-to-end
+    // (round-9, verdict #2): no ColStat row lands on the driver, only
+    // file PATHS — which the driver already holds from the listing.
     val rel = absFiles.map(f => FsUtil.relativize(root, f))
     val sidecarBytes =
       if (FsUtil.exists(p)) {
@@ -291,7 +299,7 @@ object StatsSidecar {
         // 100 TB path below is unchanged.
         val liveSet = rel.toSet
         val kept: Seq[ColStat] = read(spark, root)
-          .map(_.as[ColStat].collect().toSeq.filter(cs => liveSet(cs.file_path)))
+          .map(rows(_).toSeq.filter(cs => liveSet(cs.file_path)))
           .getOrElse(Nil)
         val known = kept.map(_.file_path).toSet
         val rootC = FsUtil.stripScheme(root)

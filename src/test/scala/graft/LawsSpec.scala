@@ -217,6 +217,69 @@ class LawsSpec extends SparkSpecBase {
     }
   }
 
+  test("scan pruning is sound on temporal literals, partition-plus-stats " +
+    "conjunctions and an evolved schema") {
+    // the same law over the date and timestamp lanes (string and typed
+    // literals, across units and on both sides of 1970), hive partition
+    // atoms AND'ed with stats atoms, and a column only later files carry
+    import java.time.{Instant, LocalDate}
+    val rnd = new scala.util.Random(11)
+    val dir = tmpDir("law-prune-ext")
+    val spans = Seq("1969-12-20", "2024-02-01").map(LocalDate.parse(_).toEpochDay)
+    val dayMicros = 86400000000L
+    (1 to 8).foreach { f =>
+      val base = spans(f % 2) + rnd.nextInt(30)
+      val rows = (1 to 30).map { _ =>
+        val d = base + rnd.nextInt(15)
+        val micros = d * dayMicros + (rnd.nextLong() & Long.MaxValue) % dayMicros
+        (LocalDate.ofEpochDay(d), Instant.EPOCH.plusNanos(micros * 1000L),
+          rnd.nextInt(400).toLong, Seq("a", "b", "c")(rnd.nextInt(3)), rnd.nextInt(10))
+      }
+      val df = rows.toDF("d", "ts", "v", "cat", "e").coalesce(1)
+      (if (f <= 4) df.drop("e") else df).write.partitionBy("cat").mode("append").parquet(dir)
+    }
+    // single-day files pin the day boundary on both sides of 1970
+    Seq("1969-12-31", "2024-02-20").map(LocalDate.parse(_)).foreach { d =>
+      (0 until 6).map(h => (d, Instant.EPOCH.plusNanos((d.toEpochDay * dayMicros + h * 3600000000L) * 1000L),
+        h.toLong, "a", h)).toDF("d", "ts", "v", "cat", "e")
+        .coalesce(1).write.partitionBy("cat").mode("append").parquet(dir)
+    }
+    val merge = "spark.sql.parquet.mergeSchema"
+    val prior = spark.conf.getOption(merge)
+    spark.conf.set(merge, "true") // files without `e` read it as null
+    try {
+      val ds = new ParquetDataset(spark, dir)
+      ds.updateStats()
+      assert(ds.df.columns.contains("e"))
+      val preds = Seq(
+        "d >= '2024-03-01'", "d < '2024-02-10'", "d = '2024-02-20'",
+        "d >= '1969-12-31 12:00:00'", "d < '1970-01-01'", "d <= '1969-12-31 23:59'",
+        "ts > '2024-03-01 12:00:00'", "ts <= '2024-02-15'", "ts < '1970-01-01 06:30'",
+        "ts < DATE '2024-03-01'", "ts >= DATE '1970-01-02'", "ts = DATE '2024-02-20'",
+        "d >= TIMESTAMP '2024-03-01 12:00:00'", "d < TIMESTAMP '2024-02-20 12:00:00'",
+        "d = TIMESTAMP '2024-02-20 00:00:00'", "d <= TIMESTAMP '1969-12-31 12:00:00'",
+        "d > TIMESTAMP '1969-12-31 12:00:00'", "d = DATE '2024-02-20'",
+        "d < '1969-12-31 12:00:00'", "d > '1969-12-31 12:00'", "d = '1969-12-31 06:00:00'",
+        "d >= '2024-02-20 12:00:00'", "d < TIMESTAMP '1969-12-31 12:00:00'",
+        "d = TIMESTAMP '1969-12-31 00:00:00'", "ts < '1969-12-31 03:00'",
+        "ts >= TIMESTAMP '2024-02-25 08:00:00'",
+        "cat = 'b' AND v > 100", "cat >= 'b' AND d < '2024-03-01'",
+        "cat < 'c' AND ts > '2024-02-20' AND v <= 50",
+        "e > 5", "e = 3 AND cat = 'a'", "e < 2 AND d >= '2024-02-15'")
+      preds.foreach { p =>
+        val expected = ds.df.filter(p).count()
+        val got = ds.scan(p).filter(p).count()
+        assert(got == expected, s"pruning dropped rows for [$p]: $got != $expected")
+      }
+      // not vacuous: the temporal lanes do prune
+      assert(ds.pruneFiles("d < '1970-01-01'").size < ds.relFiles.size)
+      assert(ds.pruneFiles("ts >= TIMESTAMP '2024-02-25 08:00:00'").size < ds.relFiles.size)
+    } finally prior match {
+      case Some(v) => spark.conf.set(merge, v)
+      case None => spark.conf.unset(merge)
+    }
+  }
+
   test("delta equals the set-difference definition on random data with nulls") {
     import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(23)

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.plans.ScanPruner
 import graft.sources._
@@ -124,5 +128,104 @@ class ScanPrunerSpec extends SparkSpecBase {
       .coalesce(1).write.mode("append").parquet(ds.path)
     assert(ds.pruneFiles("id > 500").size == 1)
     assert(ds.scan("id > 500").count() == 1)
+  }
+
+  /** Spark jobs the calling thread launches inside `f`. */
+  private def jobsLaunched(f: => Any): Int = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.spec.tag") == tag)
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.spec.tag", tag)
+    try { f; ListenerBusDrain(sc); n.get }
+    finally {
+      sc.setLocalProperty("graft.spec.tag", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** scan(p) filtered by p holds exactly the rows of df.filter(p). */
+  private def assertSound(ds: ParquetDataset, preds: Seq[String]): Unit = preds.foreach { p =>
+    val expected = ds.df.filter(p).count()
+    assert(expected > 0, s"[$p] matches nothing: the check would be vacuous")
+    val got = ds.scan(p).filter(p).count()
+    assert(got == expected, s"pruning dropped rows for [$p]: $got != $expected")
+  }
+
+  test("pruning launches one job for stats atoms and none otherwise") {
+    val ds = mkDataset()
+    assert(jobsLaunched(assert(ds.pruneFiles("id > 60").size == 1)) == 1)
+    assert(jobsLaunched(ds.pruneFiles("id > 60 AND name < 'n7' AND id < 90")) == 1)
+    assert(jobsLaunched(assert(ds.pruneFiles("id > 60 OR id < 5").size == 3)) == 0)
+
+    val dir = tmpDir("scanjobs")
+    (1 to 40).map(i => (i, if (i <= 20) "a" else "b")).toDF("id", "cat")
+      .write.partitionBy("cat").mode("append").parquet(dir)
+    val part = new ParquetDataset(spark, dir)
+    part.updateStats()
+    assert(jobsLaunched(assert(part.pruneFiles("cat = 'a'").forall(_.contains("cat=a")))) == 0)
+    assert(jobsLaunched(part.pruneFiles("id > 30 AND cat = 'b'")) == 1)
+  }
+
+  test("pruning follows Catalyst's string (UTF-8) and double (NaN, -0.0) ordering") {
+    val dir = tmpDir("scanord")
+    // UTF-8 bytes put '～' (U+FF5E) below '😀' (U+1F600); UTF-16 code
+    // units (String.compareTo) put the surrogate pair below '～'
+    val nan = Double.NaN
+    Seq(Seq(("～", 7.0), ("😀", nan)), Seq(("～", -0.0)), Seq(("😀", nan)),
+      Seq(("a", 0.0), ("b", 1.0))).foreach { rows =>
+      rows.toDF("s", "d").coalesce(1).write.mode("append").parquet(dir)
+    }
+    val ds = new ParquetDataset(spark, dir)
+    ds.updateStats()
+    // parquet-mr drops NaN bounds and widens ±0.0 when it reads footers,
+    // so stamp each file's Catalyst-ordered double bounds into the sidecar
+    // (what a writer keeping NaN and -0.0 bounds records)
+    val bounds = ds.relFiles.map { f =>
+      val r = spark.read.parquet(s"$dir/$f").agg(min("d"), max("d")).collect()(0)
+      f -> (r.getDouble(0), r.getDouble(1))
+    }.toMap
+    val stamped = StatsSidecar.rows(ds.stats.get).toSeq.map { r =>
+      if (r.column != "d") r
+      else r.copy(min_num = Some(bounds(r.file_path)._1), max_num = Some(bounds(r.file_path)._2))
+    }
+    stamped.toDF().coalesce(1).write.mode("overwrite").parquet(StatsSidecar.sidecarPath(dir))
+    assert(StatsSidecar.rows(ds.stats.get).exists(_.max_num.exists(_.isNaN)))
+    assertSound(ds, Seq("s > '～'", "s < '😀'", "s = '😀'", "s = '～'",
+      "d > 5", "d < 5", "d = 7", "d >= 0", "d = 0", "d <= 0"))
+    // and it still prunes: only the 'a'/'b' file can hold s < '～'
+    assert(ds.pruneFiles("s < '～'").size == 1)
+  }
+
+  test("a sidecar written before the exact lanes prunes through the double lane") {
+    val dir = tmpDir("scanold")
+    val t0 = java.time.Instant.parse("2024-01-01T00:00:00Z").toEpochMilli
+    Seq(1 to 30, 31 to 60, 61 to 100).foreach { ids =>
+      ids.map(i => (i.toLong, new java.sql.Timestamp(t0 + i * 3600000L), s"n$i"))
+        .toDF("id", "ts", "name").coalesce(1).write.mode("append").parquet(dir)
+    }
+    val ds = new ParquetDataset(spark, dir)
+    ds.updateStats()
+    val exact = ds.timeRange("ts")
+    val p = StatsSidecar.sidecarPath(dir)
+    StatsSidecar.rows(ds.stats.get).toSeq.toDF().drop("min_int", "max_int")
+      .coalesce(1).write.mode("overwrite").parquet(p)
+    assert(!spark.read.parquet(p).columns.contains("min_int"))
+    assert(StatsSidecar.rows(ds.stats.get).forall(r => r.min_int.isEmpty && r.max_int.isEmpty))
+
+    assert(ds.pruneFiles("id > 60").size == 1)
+    assert(ds.pruneFiles("id = 45").size == 1)
+    assert(ds.pruneFiles("id > 60.5").size == 1)
+    assert(ds.pruneFiles("ts >= '2024-01-03 06:00:00'").size == 2)
+    assert(ds.pruneFiles("ts < '2024-01-01 12:00'").size == 1)
+    assertSound(ds, Seq("id > 60", "id <= 30", "id = 31", "id >= 30.5",
+      "ts >= '2024-01-03 06:00:00'", "ts < '2024-01-02'", "ts = '2024-01-02 06:00:00'",
+      "id > 10 AND ts < '2024-01-03'"))
+    assert(exact.nonEmpty && ds.timeRange("ts") == exact)
   }
 }
