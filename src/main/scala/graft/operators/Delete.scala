@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.sources.{FsUtil, ParquetDataset, WriteConfig, WritePipeline}
+import graft.sources.{FsUtil, ParquetDataset, Swap, WriteConfig, WritePipeline}
 
 /** Result of a row-level delete — mirrors MergeResult's file
   * accounting.
@@ -29,19 +29,16 @@ final case class RetentionResult(
   * Null semantics are SQL DELETE's: a row is deleted when the
   * predicate is TRUE; FALSE and NULL rows survive.
   *
-  * Failure contract (a plain filesystem has no multi-file atomic
-  * rename, so the swap is journaled):
-  *  - failure BEFORE the swap: tmp dir is removed, dataset unchanged;
-  *  - failure DURING the swap (after the journal is written): the
-  *    dataset may transiently hold kept rows twice, but the journal
-  *    (`_graft_delete_journal`) records the staged files and the
-  *    originals to remove, and the NEXT `Delete.where` (or an explicit
-  *    [[Delete.recover]]) completes the swap deterministically —
-  *    promote whatever is still staged, remove the listed originals,
-  *    drop the journal. Replay is idempotent in every crash window
-  *    because the journal is only written once the staged files are
-  *    fully materialized, and recovery never re-derives anything from
-  *    the (possibly half-swapped) data files.
+  * Failure contract: the journaled swap of [[graft.sources.Swap]]
+  * (`_tmp_delete`, `_graft_delete_journal`) —
+  *  - a failure before the swap (discovery or the staged write) leaves
+  *    the dataset unchanged; a staged-write failure raises
+  *    [[StagedRewriteException]];
+  *  - a failed promote raises `FsUtil.PromoteFailedException` and a
+  *    failed original-delete [[MaintenanceCleanupError]]: kept rows may
+  *    show twice, never vanish, and the NEXT `Delete.where` (or any
+  *    swapping operator, or an explicit [[Delete.recover]]) completes
+  *    the swap from the journal.
   *
   * Scale notes: the discovery pass filters on the predicate, which
   * pushes down to parquet — files whose row-group stats exclude the
@@ -52,108 +49,41 @@ final case class RetentionResult(
   */
 object Delete {
 
-  private def journalPath(path: String) = s"$path/_graft_delete_journal"
-  private def tmpPath(path: String) = s"$path/_tmp_delete"
-
   /** Complete a swap interrupted mid-flight, if a journal exists.
     * Safe to call any time; no-op without a journal. Returns true if
     * a pending swap was completed.
     */
-  def recover(ds: ParquetDataset): Boolean = {
-    val path = ds.path
-    val jp = journalPath(path)
-    if (!FsUtil.exists(jp)) return false
-    val originals = java.nio.file.Files
-      .readAllLines(java.nio.file.Paths.get(FsUtil.stripScheme(jp)))
-      .toArray(Array.empty[String]).toSeq.filter(_.nonEmpty)
-    // staged files still in tmp move into place (idempotent: promote
-    // moves only what exists); then the journaled originals go
-    if (FsUtil.exists(tmpPath(path))) FsUtil.promote(tmpPath(path), path)
-    FsUtil.delete(path, originals.map(r => s"$path/$r"))
-    FsUtil.delete(path, Seq(jp))
-    ds.spark.catalog.refreshByPath(path)
-    true
-  }
+  def recover(ds: ParquetDataset): Boolean = Swap.recover(ds)
 
   def where(ds: ParquetDataset, predicate: String): DeleteResult = {
-    val spark = ds.spark
-    val path = ds.path
-    recover(ds) // complete any interrupted prior swap FIRST
+    Swap.recover(ds) // complete any interrupted prior swap FIRST
     if (ds.isEmpty) return DeleteResult(0, Nil, Nil)
 
     val pred = expr(graft.sources.Sanitize(predicate))
     // resolve the target through the dataset's schema memo: the bare
     // spark.read.parquet here paid a footer-inference job per delete
     val tgt0 = ds.df
-    val tgtF = tgt0.withColumn("__file", input_file_name())
     // the discovery pass traverses exactly the pred-TRUE rows, which
-    // ARE the deleted rows — observe the count here instead of paying
-    // two more count jobs (affected total minus kept) later
-    val delObs = org.apache.spark.sql.Observation()
-    val affectedAbs = tgtF.filter(pred)
-      .observe(delObs, count(lit(1)).as("n"))
-      .select("__file").distinct()
-      .collect().map(r => FsUtil.stripScheme(r.getString(0)))
-    // a missing metric means the optimizer eliminated the observed
-    // subtree as provably empty (empty-relation propagation) — which
-    // can only happen when zero rows matched (bounded wait — see
-    // ObservedCount)
-    val deleted = ObservedCount(delObs)
-    val affectedRel = affectedAbs.map(f => FsUtil.relativize(path, f)).sorted.toSeq
+    // ARE the deleted rows: per-file counts give both the affected
+    // files and the deleted total
+    val perFile = tgt0.withColumn("__file", input_file_name())
+      .filter(pred).groupBy("__file").count().collect()
+    val deleted = perFile.map(_.getLong(1)).sum
+    val affectedRel = perFile
+      .map(r => FsUtil.relativize(ds.path, r.getString(0))).sorted.toSeq
     val preserved = ds.relFiles.filterNot(affectedRel.contains)
     if (affectedRel.isEmpty) return DeleteResult(0, Nil, preserved)
 
-    // single traversal: the staged rewrite below is the only consumer
-    // of the affected slab, so there is nothing left to cache for
-    val affected = spark.read.option("basePath", path)
+    val affected = ds.spark.read.option("basePath", ds.path)
       .schema(tgt0.schema)
-      .parquet(affectedAbs.toIndexedSeq: _*)
-    try {
+      .parquet(affectedRel.map(f => s"${ds.path}/$f"): _*)
+    Swap(ds, "delete", affectedRel) { tmp =>
       // TRUE deletes; FALSE and NULL survive
-      val keep = affected.filter(!coalesce(pred, lit(false)))
-      // Staged rewrite (Maintenance's failure contract): surviving
-      // rows land in a tmp dir first, so a mid-write failure leaves
-      // the original files — and therefore every row — untouched. A
-      // direct append would commit part-files before the originals
-      // are removed, double-counting kept rows on failure.
-      val tmp = tmpPath(path)
-      FsUtil.deleteRecursively(tmp)
-      try WritePipeline.write(keep, tmp,
-        WriteConfig(mode = "overwrite", partitionBy = ds.partitionColumns))
-      catch {
-        case e: Exception =>
-          FsUtil.deleteRecursively(tmp)
-          throw new graft.operators.StagedRewriteException(affectedRel,
-            s"staged delete failed before swap; dataset unchanged: ${e.getMessage}", e)
-      }
-      // Journal THEN swap: the journal lists the originals to remove,
-      // and is only written once the staged files are complete — so a
-      // crash anywhere in the swap is completed by recover() (promote
-      // the remaining staged files, remove the journaled originals).
-      // Without the journal, a re-run after a partial swap would
-      // re-stage kept rows from the originals and promote them NEXT TO
-      // the first run's promoted files — permanent duplication.
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(FsUtil.stripScheme(journalPath(path))),
-        (affectedRel.mkString("\n") + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      try {
-        FsUtil.promote(tmp, path)
-        FsUtil.delete(path, affectedAbs.toIndexedSeq)
-        FsUtil.delete(path, Seq(journalPath(path)))
-      } catch {
-        case e: Exception =>
-          throw new graft.operators.StagedRewriteException(affectedRel,
-            "staged delete failed DURING swap; journal retained — the next " +
-              s"Delete.where or Delete.recover completes it: ${e.getMessage}", e)
-      }
-      spark.catalog.refreshByPath(path)
-      // the rewrite can shrink the unified schema (e.g. the only file
-      // carrying an evolved column was fully deleted)
-      ds.refreshSchema()
-      if (ds.stats.nonEmpty) ds.updateStats()
-      DeleteResult(deleted, affectedRel, preserved)
-    } finally ()
+      WritePipeline.write(affected.filter(!coalesce(pred, lit(false))), tmp,
+        WriteConfig(partitionBy = ds.partitionColumns))
+    }
+    if (ds.stats.nonEmpty) ds.updateStats()
+    DeleteResult(deleted, affectedRel, preserved)
   }
 
   /** Retention (TTL) delete: remove every row whose `tsCol` is
@@ -176,10 +106,10 @@ object Delete {
   def retention(ds: ParquetDataset, tsCol: String,
                 cutoffMicros: Long): RetentionResult = {
     // a prior interrupted swap leaves the sidecar stale — complete it
-    // and refresh BEFORE classifying from those stats (where()'s own
-    // "recover FIRST" discipline), or the metadata lane would drop
-    // files whose kept rows were already promoted and double-count
-    if (recover(ds)) ds.updateStats()
+    // (recovery refreshes the sidecar) BEFORE classifying from those
+    // stats, or the metadata lane would drop files whose kept rows were
+    // already promoted and double-count
+    Swap.recover(ds)
     val s = ds.stats.getOrElse(throw new IllegalStateException(
       "retention needs the stats sidecar — call updateStats() first"))
     // one row per (file, row_group) after the column filter, so the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.functions.SchemaOps
-import graft.sources.{FsUtil, ParquetDataset, SortKey, StatsSidecar, UniqueAll, UniqueOff, WriteConfig, WritePipeline}
+import graft.sources.{FsUtil, ParquetDataset, SortKey, StatsSidecar, Swap, UniqueAll, UniqueOff, WriteConfig, WritePipeline}
 
 /** Dry-run plan shapes (reference pydala/dataset.py:129-219: every
   * maintenance op returns a plain plan when dry_run=True).
@@ -27,13 +27,14 @@ final class StagedRewriteException(
     message: String,
     cause: Throwable) extends RuntimeException(message, cause)
 
-/** Post-promote cleanup failure during a maintenance rewrite
-  * (round-10, the Merge.MergeCleanupError contract applied to
-  * compaction/repartition): the staged rewrite fully promoted — data
-  * is durable and complete — but deleting superseded originals failed
-  * partway, so their rows are visible TWICE until
-  * `remainingOriginals` are removed; never lost or torn. Stats were
-  * NOT refreshed.
+/** Post-promote cleanup failure of a swap ([[graft.sources.Swap]]
+  * step 5; Merge wraps it in [[MergeCleanupError]]): the staged rewrite
+  * fully promoted — data is durable and complete — but deleting
+  * superseded originals failed partway, so their rows are visible
+  * TWICE until `remainingOriginals` (dataset-relative) are removed;
+  * never lost or torn. Stats were NOT refreshed. The swap's journal
+  * stays, so the next swapping call on the dataset (or
+  * `Delete.recover`) finishes the cleanup.
   */
 final class MaintenanceCleanupError(
     val remainingOriginals: Seq[String],
@@ -47,9 +48,13 @@ final class MaintenanceCleanupError(
   * optionally ordered), repartitioning, dtype optimization, schema
   * repair, vacuum — reference pydala/dataset.py:1802-2603.
   *
-  * Failure contract (pydala/dataset.py:172-203): rewrites stage into a
-  * `_tmp` dir and only delete originals after the staged write
-  * succeeds; the stats sidecar refreshes only after a successful swap.
+  * Failure contract (pydala/dataset.py:172-203): every rewrite is one
+  * journaled swap ([[graft.sources.Swap]], `_tmp_maint`) — a failure
+  * in the staged write raises [[StagedRewriteException]] with the
+  * dataset unchanged, a failed promote `FsUtil.PromoteFailedException`,
+  * a failed original-delete [[MaintenanceCleanupError]]; after the
+  * latter two the next swapping call completes the swap from its
+  * journal. The stats sidecar refreshes only after a successful swap.
   *
   * Scale notes: planning is metadata-only (footers / sidecar, never a
   * data scan); execution reads exactly the planned file groups; the
@@ -59,7 +64,8 @@ final class MaintenanceCleanupError(
   */
 object Maintenance {
 
-  private val TmpDir = "_tmp_maint"
+  /** Swap tag: stages under `_tmp_maint`. */
+  private val TmpOp = "maint"
 
   /** rows per data file, from footers (metadata-only). Aggregated on
     * executors; only the file-sized (path, rows) frame is collected —
@@ -85,6 +91,7 @@ object Maintenance {
   def compactPartitions(ds: ParquetDataset, maxRowsPerFile: Long = 10000000L,
                         sortBy: Seq[SortKey] = Nil,
                         dryRun: Boolean = false): CompactPlan = {
+    if (!dryRun) Swap.recover(ds) // a pending swap would skew the plan
     val rows = fileRows(ds)
     val groups = rows.keys.toSeq.groupBy(partitionOf).toSeq
       .map { case (p, fs) => CompactGroup(p, fs.sorted, fs.map(rows).sum) }
@@ -103,6 +110,7 @@ object Maintenance {
                     dryRun: Boolean = false): CompactPlan = {
     if (ds.partitionColumns.nonEmpty)
       return compactPartitions(ds, maxRowsPerFile, sortBy, dryRun)
+    if (!dryRun) Swap.recover(ds) // a pending swap would skew the plan
     val rows = fileRows(ds)
     val plan =
       if (rows.size <= 1) CompactPlan(Nil)
@@ -119,6 +127,7 @@ object Maintenance {
                           maxRowsPerFile: Long = 10000000L,
                           dryRun: Boolean = false): CompactPlan = {
     import org.apache.spark.sql.functions.{coalesce, col, max, min}
+    if (!dryRun) Swap.recover(ds) // a pending swap would skew the plan
     // exact bigint lanes: the double lanes round past 2^53 (nanosecond
     // timestamps) and a rounded window bound could misassign files.
     // Per-file bounds are aggregated on executors; the collect below is
@@ -188,55 +197,49 @@ object Maintenance {
     plan
   }
 
-  /** Rewrite each planned group: stage into `_tmp_maint`, then move
-    * files into the group's partition dir and delete originals.
+  /** Rewrite every planned group in one swap: each group stages under
+    * `_tmp_maint/<partition dir>/`, read in the unified schema of its
+    * own files — a column a later append added survives compaction.
     */
   private def execute(ds: ParquetDataset, plan: CompactPlan,
                       maxRowsPerFile: Long, sortBy: Seq[SortKey]): Unit = {
+    if (plan.groups.isEmpty) return
     val spark = ds.spark
-    // one resolved data schema for every group read (partition values
-    // live in the directory names, not the footers, so the group read
-    // carries only data columns); re-inferring per group is a pure
-    // extra driver job per group. Lazy: an empty plan must not pay it.
-    lazy val dataSchema = StructType(ds.df.schema
-      .filterNot(f => ds.partitionColumns.contains(f.name)))
-    plan.groups.foreach { g =>
-      val partDir = g.partition.split("@t=")(0)
-      val abs = g.files.map(f => s"${ds.path}/$f")
-      var d = spark.read.schema(dataSchema).parquet(abs: _*)
-      if (sortBy.nonEmpty) d = d.orderBy(sortBy.map(_.toColumn): _*)
-      // coalesce (narrow, no shuffle) down to the target file count;
-      // after an orderBy the range partitions are adjacent, so each
-      // merged output file stays internally ordered
-      val nFiles = math.max(1, math.ceil(g.rows.toDouble / maxRowsPerFile).toInt)
-      d = d.coalesce(nFiles)
-      val tmp = s"${ds.path}/$TmpDir"
-      FsUtil.deleteRecursively(tmp)
-      d.write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("maxRecordsPerFile", maxRowsPerFile)
-        .parquet(tmp)
-      val dst = if (partDir.isEmpty) ds.path else s"${ds.path}/$partDir"
-      FsUtil.promote(tmp, dst)
-      deleteOriginals(ds, abs)
+    // partition values live in the directory names, not the footers,
+    // so file schemas carry only data columns
+    val schemaOf = fileSchemas(spark, plan.plannedFiles.map(f => s"${ds.path}/$f"))
+    Swap(ds, TmpOp, plan.plannedFiles) { tmp =>
+      plan.groups.foreach { g =>
+        val partDir = g.partition.split("@t=")(0)
+        val abs = g.files.map(f => s"${ds.path}/$f")
+        val target = SchemaOps.unify(abs.map(schemaOf))
+        var d = abs.groupBy(schemaOf).values.toSeq.sortBy(_.head)
+          .map(fs => SchemaOps.align(spark.read.schema(schemaOf(fs.head)).parquet(fs: _*), target))
+          .reduce(_ unionByName _)
+        if (sortBy.nonEmpty) d = d.orderBy(sortBy.map(_.toColumn): _*)
+        // coalesce (narrow, no shuffle) down to the target file count;
+        // after an orderBy the range partitions are adjacent, so each
+        // merged output file stays internally ordered
+        val nFiles = math.max(1, math.ceil(g.rows.toDouble / maxRowsPerFile).toInt)
+        WritePipeline.write(d.coalesce(nFiles), if (partDir.isEmpty) tmp else s"$tmp/$partDir",
+          WriteConfig(maxRowsPerFile = maxRowsPerFile))
+      }
     }
-    if (plan.groups.nonEmpty) { spark.catalog.refreshByPath(ds.path); ds.refreshSchema() }
-    if (plan.groups.nonEmpty && ds.stats.nonEmpty) ds.updateStats()
+    if (ds.stats.nonEmpty) ds.updateStats()
   }
 
-
-  /** Delete superseded originals after a successful promote, wrapping
-    * a partial failure in the recovery contract (round-10): the
-    * rewrite is durable, so the caller must learn exactly which
-    * originals still duplicate rows.
+  /** Spark schema of each file: ONE executor-side footer pass, then
+    * one driver-side inference per DISTINCT physical schema (round-12,
+    * verdict #3): files sharing a parquet schema resolve to the same
+    * Spark schema under the same session confs, so a dataset pays 1–2
+    * inference jobs, not one per file (10⁵ at scale).
     */
-  private def deleteOriginals(ds: ParquetDataset, abs: Seq[String]): Unit =
-    try FsUtil.delete(ds.path, abs)
-    catch { case e: Throwable =>
-      throw new MaintenanceCleanupError(
-        abs.filter(FsUtil.exists)
-          .map(f => FsUtil.relativize(ds.path, f)).sorted, e)
-    }
+  private def fileSchemas(spark: org.apache.spark.sql.SparkSession,
+                          files: Seq[String]): Map[String, StructType] = {
+    val fps = StatsSidecar.schemaFingerprints(spark, files)
+    val byFp = fps.groupBy(_._2).map { case (fp, fs) => fp -> spark.read.parquet(fs.keys.min).schema }
+    files.map(f => f -> byFp(fps(f))).toMap
+  }
 
   // ---- repartition --------------------------------------------------
 
@@ -248,25 +251,14 @@ object Maintenance {
                   dateparts: Seq[String] = Nil,
                   maxRowsPerFile: Long = 10000000L,
                   unique: Boolean = false): Unit = {
-    val spark = ds.spark
+    Swap.recover(ds)
     val cfg = WriteConfig(
       partitionBy = partitionBy,
       unique = if (unique) UniqueAll else UniqueOff,
       datepartsFrom = datepartsFrom,
       dateparts = dateparts,
       maxRowsPerFile = maxRowsPerFile)
-    val data = WritePipeline.prepare(ds.df, cfg)
-    val tmp = s"${ds.path}/$TmpDir"
-    FsUtil.deleteRecursively(tmp)
-    val w = data.write.mode("overwrite")
-      .option("compression", cfg.compression)
-      .option("maxRecordsPerFile", maxRowsPerFile)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(tmp)
-    val old = ds.files
-    FsUtil.promote(tmp, ds.path)
-    deleteOriginals(ds, old)
-    spark.catalog.refreshByPath(ds.path)
-    ds.refreshSchema() // dateparts can add partition columns
+    Swap(ds, TmpOp, ds.relFiles)(WritePipeline.write(ds.df, _, cfg))
     if (ds.stats.nonEmpty) ds.updateStats()
   }
 
@@ -292,6 +284,7 @@ object Maintenance {
                      dryRun: Boolean = false,
                      tz: Option[String] = None,
                      removeTz: Boolean = false): DtypePlan = {
+    if (!dryRun) Swap.recover(ds) // a pending swap would skew the plan
     val raw = ds.df
     // tz normalization is an EXPRESSION, not a schema cast: a plain
     // TIMESTAMP↔NTZ cast renders wall clocks in the session zone,
@@ -336,84 +329,45 @@ object Maintenance {
     * failed cast leaves the original intact (pydala/schema.py:406-578).
     */
   def repairSchema(ds: ParquetDataset, dryRun: Boolean = false): RepairPlan = {
+    if (!dryRun) Swap.recover(ds) // a pending swap would skew the plan
     val spark = ds.spark
     val files = ds.files
-    // per-file schemas via ONE executor-side footer pass (round-12,
-    // verdict #3): the old per-file spark.read.parquet ran one driver
-    // inference job PER FILE — fine at gate scale, a hazard at 10⁵
-    // files. Files sharing a physical parquet schema resolve to the
-    // same Spark schema under the same session confs, so the driver
-    // pays one inference per DISTINCT fingerprint (usually 1–2), not
-    // per file.
-    val fps = StatsSidecar.schemaFingerprints(spark, files)
-    val sparkSchemaFor: Map[String, StructType] =
-      files.map(fps).distinct.map { fp =>
-        val rep = files.find(f => fps(f) == fp).get
-        fp -> spark.read.parquet(rep).schema
-      }.toMap
-    val perFile: Seq[(String, StructType)] =
-      files.map(f => f -> sparkSchemaFor(fps(f)))
-    val schemaOf = perFile.toMap
-    val partCols = ds.partitionColumns.toSet
+    val schemaOf = fileSchemas(spark, files)
+    val perFile: Seq[(String, StructType)] = files.map(f => f -> schemaOf(f))
     val target = SchemaOps.unify(perFile.map(_._2))
     val candidates = perFile.collect { case (f, s) if s != target => f }
     val plan = RepairPlan(target.simpleString,
       candidates.map(f => FsUtil.relativize(ds.path, f)))
     if (dryRun) return plan
 
+    // each divergent file is its own swap, so a failed cast leaves that
+    // one file intact and the others proceed; a failure after promote
+    // is loud (MaintenanceCleanupError) like every swap's
     candidates.foreach { f =>
-      try {
-        val repaired = SchemaOps.align(
-          spark.read.schema(schemaOf(f)).parquet(f), target)
-        val tmp = s"${ds.path}/$TmpDir"
-        FsUtil.deleteRecursively(tmp)
-        repaired.coalesce(1).write.mode("overwrite")
-          .option("compression", "zstd").parquet(tmp)
-        val dstDir = {
-          val rel = FsUtil.relativize(ds.path, f)
-          val p = partitionOf(rel)
-          if (p.isEmpty) ds.path else s"${ds.path}/$p"
-        }
-        FsUtil.promote(tmp, dstDir)
-        FsUtil.delete(ds.path, Seq(f))
-        spark.catalog.refreshByPath(ds.path)
-      } catch {
-        case e: Exception =>
-          System.err.println(s"[repair] ${f} left intact: ${e.getMessage}")
+      val rel = FsUtil.relativize(ds.path, f)
+      try Swap(ds, TmpOp, Seq(rel)) { tmp =>
+        val p = partitionOf(rel)
+        WritePipeline.write(SchemaOps.align(spark.read.schema(schemaOf(f)).parquet(f), target)
+          .coalesce(1), if (p.isEmpty) tmp else s"$tmp/$p", WriteConfig())
+      } catch { case e: StagedRewriteException =>
+        System.err.println(s"[repair] $f left intact: ${e.getCause.getMessage}")
       }
     }
-    ds.refreshSchema() // repaired files now carry the unified schema
     if (ds.stats.nonEmpty) ds.updateStats()
     plan
   }
 
-  /** Whole-dataset rewrite to a target schema (staging + swap),
-    * optionally through a row `transform` applied BEFORE the schema
-    * align (tz normalization). A failure during staging deletes the
-    * temp dir and raises [[StagedRewriteException]] — originals and
-    * sidecar untouched.
+  /** Whole-dataset rewrite (one swap): the dataset's rows through a
+    * row `transform` (tz normalization, a z-order sort), aligned to
+    * `target`, in the same hive layout.
     */
   private def rewriteAll(ds: ParquetDataset, target: StructType,
-                         transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = identity): Unit = {
-    val spark = ds.spark
-    val parts = ds.partitionColumns
-    val data = SchemaOps.align(transform(ds.df), target)
-    val tmp = s"${ds.path}/$TmpDir"
-    FsUtil.deleteRecursively(tmp)
-    try {
-      val w = data.write.mode("overwrite").option("compression", "zstd")
-      (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(tmp)
-    } catch {
-      case e: Exception =>
-        FsUtil.deleteRecursively(tmp)
-        throw new StagedRewriteException(ds.relFiles,
-          s"staged rewrite failed before swap; dataset unchanged: ${e.getMessage}", e)
+                         transform: DataFrame => DataFrame,
+                         maxRowsPerFile: Long = 10000000L): Unit = {
+    Swap(ds, TmpOp, ds.relFiles) { tmp =>
+      WritePipeline.write(SchemaOps.align(transform(ds.df), target), tmp,
+        WriteConfig(partitionBy = ds.partitionColumns, maxRowsPerFile = maxRowsPerFile))
     }
-    val old = ds.files
-    FsUtil.promote(tmp, ds.path)
-    deleteOriginals(ds, old)
-    spark.catalog.refreshByPath(ds.path)
-    ds.refreshSchema() // the rewrite's whole point is a schema change
     if (ds.stats.nonEmpty) ds.updateStats()
   }
 
@@ -484,31 +438,11 @@ object Maintenance {
     */
   def zorderN(ds: ParquetDataset, cols: Seq[String],
               maxRowsPerFile: Long = 10000000L): Unit = {
-    import org.apache.spark.sql.functions.col
-    val spark = ds.spark
-    val parts = ds.partitionColumns
-    val data = ds.df.orderBy(mortonKeyN(cols.map(col)))
-    val tmp = s"${ds.path}/$TmpDir"
-    FsUtil.deleteRecursively(tmp)
-    try {
-      // hive layout preserved: z-ordering re-clusters WITHIN the
-      // existing partitioning, it must not flatten it
-      val w = data.write.mode("overwrite")
-        .option("compression", "zstd")
-        .option("maxRecordsPerFile", maxRowsPerFile)
-      (if (parts.nonEmpty) w.partitionBy(parts: _*) else w).parquet(tmp)
-    } catch {
-      case e: Exception =>
-        FsUtil.deleteRecursively(tmp)
-        throw new StagedRewriteException(ds.relFiles,
-          s"z-order rewrite failed before swap; dataset unchanged: ${e.getMessage}", e)
-    }
-    val old = ds.files
-    FsUtil.promote(tmp, ds.path)
-    deleteOriginals(ds, old)
-    spark.catalog.refreshByPath(ds.path)
-    ds.refreshSchema()
-    if (ds.stats.nonEmpty) ds.updateStats()
+    Swap.recover(ds)
+    // hive layout preserved: z-ordering re-clusters WITHIN the
+    // existing partitioning, it must not flatten it
+    rewriteAll(ds, ds.df.schema,
+      _.orderBy(mortonKeyN(cols.map(org.apache.spark.sql.functions.col))), maxRowsPerFile)
   }
 
   /** Parse "1d" / "6h" / "30m" / "10s" interval specs to micros. */

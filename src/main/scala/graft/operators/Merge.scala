@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.SchemaOps
-import graft.sources.{FsUtil, ParquetDataset, WriteConfig, WritePipeline}
+import graft.sources.{FsUtil, ParquetDataset, Swap, WriteConfig, WritePipeline}
 
 /** Result of a keyed merge — same fields as the reference's
   * MergeResult (pydala/dataset.py:1671-1684).
@@ -30,8 +30,9 @@ final case class MergeResult(
   * refreshed, originals are untouched (the swap promotes strictly
   * before deleting), `promoted` lists rewrite files that landed in
   * the dataset and `remaining` those still staged under `_tmp_merge`.
-  * The post-promote cleanup half of the swap has its own sibling
-  * contract, [[MergeCleanupError]].
+  * The swap's journal stays, so the next merge, delete or maintenance
+  * call on the dataset completes the swap. The post-promote cleanup
+  * half of the swap has its own sibling contract, [[MergeCleanupError]].
   */
 final class PartialMergeError(
     val affectedFiles: Seq[String],
@@ -43,16 +44,15 @@ final class PartialMergeError(
       s"${remaining.size} still staged; originals untouched", cause)
 
 /** Post-promote cleanup failure — the other half of the swap
-  * (round-10, advisor finding): every rewrite file landed, so the
+  * (round-10, advisor finding): every staged file landed, so the
   * merge's DATA is durable and complete, but deleting the superseded
   * originals failed partway. Until `remainingOriginals` are removed,
   * their rows are visible TWICE (original + rewrite) — never lost or
-  * torn. `result` reflects the completed UPDATE phase (mirroring the
-  * reference's succeeded-but-unclean payload shape; the
-  * insert-remainder phase is not attempted after a failed cleanup, so
-  * `result.inserted` is 0); operators finish cleanup by deleting
-  * `remainingOriginals`, refreshing stats, and re-running the merge
-  * (idempotent: the rewritten keys now match and rewrite in place).
+  * torn. `result` is the completed merge's result (mirroring the
+  * reference's succeeded-but-unclean payload shape). The swap's
+  * journal stays, so the next merge, delete or maintenance call on the
+  * dataset (or `Delete.recover`) finishes the cleanup and refreshes
+  * the stats; operators can also delete `remainingOriginals` by hand.
   */
 final class MergeCleanupError(
     val result: MergeResult,
@@ -74,19 +74,28 @@ final class MergeCleanupError(
   *  - update rewrites ONLY the files containing matched rows;
   *  - an update that would change a partition value is rejected.
   *
+  * Every strategy is ONE journaled swap ([[graft.sources.Swap]],
+  * `_tmp_merge`): update stages `keep ∪ matched source`, upsert
+  * `keep ∪ source` — every target row whose key the source carries
+  * lies in an affected file, so the unmatched source rows are exactly
+  * the inserts — and insert stages the anti-join and retires nothing.
+  * Counts come from passes the merge runs anyway: `updated` is the
+  * discovery pass's distinct matched source keys, `inserted` is
+  * `sourceCount − updated` for upsert and the staged files' footer row
+  * counts for insert.
+  *
   * Scale notes: the only shuffles are the key joins; matched-file
   * discovery rides on `input_file_name()` so no extra pass over the
   * target is needed; unmatched files are never read past their footer
   * (semi-join probes push the key filter down).
   *
-  * Source-reads-target rule (round-11, found by the q546 gate): a
-  * `source` whose LINEAGE reads this same dataset (incremental index
-  * maintenance — new values computed from current values) must be
-  * materialized by the caller first (`localCheckpoint(true)` or a
-  * staging write). The swap's `refreshByPath` invalidates cached
-  * plans that depend on the target path, so a merely-cached source
-  * would silently recompute against the half-updated dataset in the
-  * insert-remainder phase and double-apply its own delta.
+  * Source-reads-target rule: a `source` may read this same dataset
+  * (incremental index maintenance — new values computed from current
+  * values). Every read of the source, and of the target, finishes in
+  * the staged write, before anything is promoted. Once the swap
+  * promotes, `refreshByPath` invalidates every cached plan over the
+  * target path, so a caller that reuses such a frame after the merge
+  * sees the new state, not the one the merge read.
   */
 object Merge {
 
@@ -94,7 +103,7 @@ object Merge {
             strategy: String): MergeResult = {
     require(Seq("insert", "update", "upsert").contains(strategy),
       s"unknown merge strategy: $strategy")
-    val spark = ds.spark
+    Swap.recover(ds) // complete any interrupted prior swap FIRST
     val partCols = ds.partitionColumns
 
     // empty target: everything inserts
@@ -102,33 +111,31 @@ object Merge {
       val src = dedupLastWins(source, effectiveKeys(source.columns.toSeq, source.columns.toSeq, keys))
       if (strategy == "update")
         return MergeResult(src.count(), 0, 0, Nil, Nil, Nil)
-      val before = ds.relFiles.toSet
-      // one counted pass: the write's observed row count IS the source
-      // count (post-dedup), so no separate count job re-scans the source
-      val obs = org.apache.spark.sql.Observation()
-      ds.write(src.observe(obs, count(lit(1)).as("n")),
-        WriteConfig(mode = "append", partitionBy = partCols))
-      // missing metric ⇒ the observed subtree was optimized away as
-      // provably empty ⇒ zero rows (bounded wait — see ObservedCount)
-      val n = ObservedCount(obs)
-      val after = ds.relFiles
-      return MergeResult(n, n, 0, Nil,
-        after.filterNot(before.contains), Nil)
+      val ins = swap(ds, Nil, src, partCols)
+      return MergeResult(ins.rows, ins.rows, 0, Nil, ins.files, Nil)
     }
 
     // resolve the target ONCE: every spark.read.parquet pays a driver
-    // footer-inference job, and a merge needs the same schema in four
-    // places (key resolution, range-bounded probe, affected-file read,
-    // insert-remainder read)
+    // footer-inference job, and a merge needs the same schema in three
+    // places (key resolution, range-bounded probe, affected-file read)
     val tgt0 = ds.df
     val ks = effectiveKeys(source.columns.toSeq, tgt0.columns.toSeq, keys)
     require(ks.nonEmpty, "no common key columns between source and target")
     val src = dedupLastWins(source, ks).cache()
 
-    try strategy match {
-      case "insert" => doInsert(ds, src, ks, partCols, tgt0)
-      case "update" => doUpdate(ds, src, ks, partCols, insertRemainder = false, tgt0)
-      case "upsert" => doUpdate(ds, src, ks, partCols, insertRemainder = true, tgt0)
+    try {
+      // every target-side scan is range-bounded by the source's key
+      // min/max (the reference's delta pre-filter) — the predicates
+      // push down to parquet, so target row groups outside the merge's
+      // key range are never decoded
+      val (bounds, srcCount) = keyBounds(src, ks)
+      val tgtB = rangeBound(tgt0, ks, bounds)
+      if (strategy == "insert") {
+        val before = ds.relFiles
+        val newRows = src.join(keysOf(tgtB, ks).distinct(), keyCond(src, ks), "left_anti")
+        val ins = swap(ds, Nil, SchemaOps.align(newRows, tgt0.schema), partCols)
+        MergeResult(srcCount, ins.rows, 0, Nil, ins.files, before)
+      } else rewrite(ds, src, ks, partCols, strategy == "upsert", tgt0, tgtB, srcCount)
     } finally {
       // a long-lived session runs many merges — don't let per-merge
       // caches accumulate executor memory
@@ -199,196 +206,89 @@ object Merge {
       else t.filter(col(k).isNull || col(k).between(lit(mn), lit(mx)))
     }
 
-  private def doInsert(ds: ParquetDataset, src: DataFrame,
-                       ks: Seq[String], partCols: Seq[String],
-                       tgt0: DataFrame): MergeResult = {
-    // rename target keys so the join condition is unambiguous; the
-    // target read is range-bounded by the source's key min/max
-    val (bounds, srcCount) = keyBounds(src, ks)
-    val tgtKeys = rangeBound(tgt0, ks, bounds)
-      .select(ks.map(k => col(k).as(s"__t_$k")): _*).distinct()
-    val cond = ks.map(k => col(k) <=> col(s"__t_$k")).reduce(_ && _)
-    val newRows = src.join(tgtKeys, cond, "left_anti")
-    val before = ds.relFiles.toSet
-    val inserted =
-      stagedObservedAppend(ds, SchemaOps.align(newRows, tgt0.schema), partCols)
-    val after = ds.relFiles
-    MergeResult(srcCount, inserted, 0, Nil,
-      after.filterNot(before.contains), before.toSeq.sorted)
-  }
+  /** Key columns renamed `__k_<key>`, the probe side of [[keyCond]]. */
+  private def keysOf(d: DataFrame, ks: Seq[String]): DataFrame =
+    d.select(ks.map(k => col(k).as(s"__k_$k")): _*)
 
-  /** Append `data` through a staged observed write (round-12, verdict
-    * #5): ONE traversal of the anti-join remainder yields both the
-    * inserted-row count and the files — the old shape paid a
-    * cache + count() + write (two jobs over the remainder). Zero rows
-    * ⇒ the staging dir is dropped and nothing is promoted (a direct
-    * empty append could land empty part-files in `relFiles`
-    * bookkeeping). A promote failure surfaces as [[PartialMergeError]]
-    * with no affected originals — the insert phase rewrites nothing,
-    * so originals are untouched by construction and `remaining` lists
-    * the still-staged insert files.
+  /** Null-safe key equality of `t` against a [[keysOf]] frame. */
+  private def keyCond(t: DataFrame, ks: Seq[String]): Column =
+    ks.map(k => t(k) <=> col(s"__k_$k")).reduce(_ && _)
+
+  /** The merge's one swap: stage `data` under `_tmp_merge`, retire
+    * `originals`. A failed promote surfaces as [[PartialMergeError]].
     */
-  private def stagedObservedAppend(ds: ParquetDataset, data: DataFrame,
-                                   partCols: Seq[String],
-                                   refreshStats: Boolean = true): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    val tmp = s"${ds.path}/_tmp_merge_ins"
-    FsUtil.deleteRecursively(tmp)
-    // count-preserving by construction: the insert config runs no
-    // dedup/unique stage, so the observed input count IS the written
-    // row count
-    WritePipeline.write(data.observe(obs, count(lit(1)).as("n")), tmp,
-      WriteConfig(mode = "append", partitionBy = partCols))
-    val n = ObservedCount(obs)
-    if (n > 0) {
-      try FsUtil.promote(tmp, ds.path)
-      catch { case e: FsUtil.PromoteFailedException =>
-        throw new PartialMergeError(Nil, e.promoted, e.remaining, e)
+  private def swap(ds: ParquetDataset, originals: Seq[String], data: DataFrame,
+                   partCols: Seq[String]): Swap.Result = {
+    val res =
+      try Swap(ds, "merge", originals) { tmp =>
+        WritePipeline.write(data, tmp, WriteConfig(partitionBy = partCols))
+      } catch { case e: FsUtil.PromoteFailedException =>
+        throw new PartialMergeError(originals, e.promoted, e.remaining, e)
       }
-      ds.spark.catalog.refreshByPath(ds.path)
-      ds.refreshSchema()
-      if (refreshStats && ds.stats.nonEmpty) ds.updateStats()
-    } else FsUtil.deleteRecursively(tmp)
-    n
+    if (ds.stats.nonEmpty) ds.updateStats()
+    res
   }
 
-  private def doUpdate(ds: ParquetDataset, src: DataFrame,
-                       ks: Seq[String], partCols: Seq[String],
-                       insertRemainder: Boolean,
-                       tgt0: DataFrame): MergeResult = {
-    val spark = ds.spark
+  private def rewrite(ds: ParquetDataset, src: DataFrame, ks: Seq[String],
+                      partCols: Seq[String], upsert: Boolean, target: DataFrame,
+                      tgtB: DataFrame, srcCount: Long): MergeResult = {
     val path = ds.path
-    // every target-side scan below is range-bounded by the source's
-    // key min/max (the reference's delta pre-filter) — the predicates
-    // push down to parquet, so target row groups outside the update's
-    // key range are never decoded
-    val (bounds, srcCount) = keyBounds(src, ks)
-    val target = tgt0
-    val tgtF = rangeBound(target, ks, bounds).withColumn("__file", input_file_name())
+    val tgtF = tgtB.withColumn("__file", input_file_name())
 
-    val joinKeysOnly = src.select(ks.map(k => col(k).as(s"__k_$k")): _*).distinct()
-    def keyCond(t: DataFrame): Column =
-      ks.map(k => t(k) <=> col(s"__k_$k")).reduce(_ && _)
-
-    // ONE bounded pass over the target yields both the matched-file
-    // set (only these are rewritten) and the partition-change
-    // rejection (tests/test_dataset_merge.py:400-427: a source row's
-    // partition value must equal the matched target row's). Keys are
-    // unique after dedupLastWins, so the inner join cannot multiply.
+    // ONE bounded pass over the target, one global aggregate: the
+    // matched-file set (only these are rewritten), the distinct
+    // matched source keys (`updated`; source keys are unique after
+    // dedupLastWins) and the partition-change rejection
+    // (tests/test_dataset_merge.py:400-427: a source row's partition
+    // value must equal the matched target row's)
     val srcPartCols = partCols.filter(src.columns.contains)
     val srcProj = src.select(ks.map(k => col(k).as(s"__k_$k")) ++
       srcPartCols.map(p => col(p).as(s"__p_$p")): _*)
     val violFlag: Column =
-      if (srcPartCols.isEmpty) lit(0)
-      else srcPartCols.map(p => !(col(p) <=> col(s"__p_$p")))
-        .reduce(_ || _).cast("int")
-    val perFile = tgtF.join(srcProj, keyCond(tgtF), "inner")
-      .groupBy("__file").agg(max(violFlag).as("__viol"))
-      .collect()
-    if (perFile.exists(_.getInt(1) > 0))
+      if (srcPartCols.isEmpty) lit(false)
+      else srcPartCols.map(p => !(col(p) <=> col(s"__p_$p"))).reduce(_ || _)
+    val found = tgtF.join(srcProj, keyCond(tgtF, ks), "inner")
+      .agg(collect_set("__file"),
+        count_distinct(struct(ks.map(k => col(s"__k_$k")): _*)),
+        coalesce(max(violFlag), lit(false)))
+      .collect()(0)
+    if (found.getBoolean(2))
       throw new IllegalArgumentException(
         "merge update would change a partition value; rewrite rejected")
-    val affectedAbs = perFile.map(r => FsUtil.stripScheme(r.getString(0)))
-    val affectedRel = affectedAbs.map(f => FsUtil.relativize(path, f)).sorted.toSeq
-
+    val affectedRel = found.getSeq[String](0)
+      .map(f => FsUtil.relativize(path, f)).sorted
+    val updated = found.getLong(1)
+    val inserted = if (upsert) srcCount - updated else 0L
     val allRel = ds.relFiles
     val preserved = allRel.filterNot(affectedRel.contains)
+    if (affectedRel.isEmpty && !upsert)
+      return MergeResult(srcCount, 0, 0, Nil, Nil, preserved)
 
-    var updated = 0L
-    var insertedCount = 0L
-    val beforeAll = allRel.toSet
-
-    if (affectedRel.nonEmpty) {
-      // explicit schema: the affected files are a subset of the target
-      // just resolved, so re-inferring their footers is a pure extra
-      // driver job (partition columns ride in via basePath + the
-      // provided schema, exactly as inference would place them)
-      val affected = spark.read.option("basePath", path)
-        .schema(target.schema)
-        .parquet(affectedAbs.toIndexedSeq: _*)
-      // rows whose key is NOT being updated survive as-is
-      val keep = affected.join(joinKeysOnly, keyCond(affected), "left_anti")
-      // matched source rows, aligned to the target schema; `updated` is
-      // harvested from an observed metric on the staged write below —
-      // a separate count() would re-run the whole semi-join as its own
-      // job just to throw the rows away
-      val updObs = org.apache.spark.sql.Observation()
-      val matchedSrc = src.join(
-        affected.select(ks.map(col): _*).distinct().select(
-          ks.map(k => col(k).as(s"__k_$k")): _*),
-        ks.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _), "left_semi")
-        .observe(updObs, count(lit(1)).as("n"))
-      val newData = SchemaOps.align(keep, target.schema)
-        .unionByName(SchemaOps.align(matchedSrc, target.schema))
-      // Staged copy-on-write swap (round-9): the rewrite lands in a
-      // `_`-prefixed staging dir (invisible to listings and scans),
-      // then promotes file-by-file through the SAME rename-degraded /
-      // chaos-hooked path as compaction, and ONLY then are the
-      // originals deleted — so a mid-swap failure can duplicate
-      // visibility of rewritten rows but never lose or tear a row,
-      // and managed metadata is never refreshed on failure.
-      val tmp = s"$path/_tmp_merge"
-      FsUtil.deleteRecursively(tmp)
-      WritePipeline.write(newData, tmp,
-        WriteConfig(mode = "append", partitionBy = partCols))
-      updated = ObservedCount(updObs)
-      try FsUtil.promote(tmp, path)
-      catch { case e: FsUtil.PromoteFailedException =>
-        throw new PartialMergeError(affectedRel, e.promoted, e.remaining, e)
-      }
-      // the cleanup half of the swap carries its own recovery contract
-      // (round-10): after a successful promote the rewrite is durable,
-      // so a failed original-delete must surface the not-yet-deleted
-      // paths — silently returning would leave rows durably duplicated
-      // with no payload for operator cleanup. The payload inputs are
-      // computed BEFORE the delete (round-11, advisor): if the same FS
-      // fault that broke the delete also broke a fresh count/listing,
-      // a payload built inside the catch would mask the cleanup error
-      // with a secondary exception and lose the recovery details.
-      val sourceCount = srcCount // from the keyBounds pass — no extra job
-      val insertedRel = ds.relFiles.filterNot(beforeAll.contains)
-      try FsUtil.delete(path, affectedAbs.toIndexedSeq)
-      catch { case e: Throwable =>
-        // best-effort narrowing: existence probes touch the same FS
-        // that just failed, so fall back to "all originals remain"
-        // (conservative — over-reporting duplicates is safe, the
-        // cleanup delete is idempotent) rather than mask the error
-        val remainingOriginals =
-          try affectedAbs.filter(FsUtil.exists)
-            .map(f => FsUtil.relativize(path, f)).sorted.toSeq
-          catch { case _: Throwable => affectedRel }
+    // explicit schema: the affected files are a subset of the target
+    // just resolved, so re-inferring their footers is a pure extra
+    // driver job (partition columns ride in via basePath + the
+    // provided schema, exactly as inference would place them)
+    val affected = Option.when(affectedRel.nonEmpty)(ds.spark.read
+      .option("basePath", path).schema(target.schema)
+      .parquet(affectedRel.map(f => s"$path/$f"): _*))
+    // upsert stages the whole source; update only its matched rows
+    val incoming =
+      if (upsert) src
+      else src.join(keysOf(affected.get, ks).distinct(), keyCond(src, ks), "left_semi")
+    // rows whose key is NOT being merged survive as-is
+    val data = affected.foldLeft(SchemaOps.align(incoming, target.schema)) { (in, a) =>
+      SchemaOps.align(a.join(keysOf(src, ks), keyCond(a, ks), "left_anti"), target.schema)
+        .unionByName(in)
+    }
+    val staged =
+      try swap(ds, affectedRel, data, partCols)
+      catch { case e: MaintenanceCleanupError =>
+        // the rewrite landed; only the superseded originals remain
+        val landed = scala.util.Try(ds.relFiles.filterNot(allRel.contains)).getOrElse(Nil)
         throw new MergeCleanupError(
-          MergeResult(sourceCount, 0L, updated, affectedRel,
-            insertedRel, preserved),
-          remainingOriginals, e)
+          MergeResult(srcCount, inserted, updated, affectedRel, landed, preserved),
+          e.remainingOriginals, e)
       }
-      // invalidate the cached listing: the files just deleted must not
-      // be served to the insert-remainder read below
-      spark.catalog.refreshByPath(path)
-      ds.refreshSchema() // the memoized schema pre-dates the swap
-    }
-
-    if (insertRemainder) {
-      // bounded too: target keys outside the source's range can never
-      // anti-match a source row (explicit schema: the post-promote
-      // files were all aligned to the target schema, so re-inference
-      // would be an extra driver job returning the same answer)
-      val tgtKeys = rangeBound(
-        spark.read.schema(target.schema).parquet(path), ks, bounds)
-        .select(ks.map(k => col(k).as(s"__t_$k")): _*).distinct()
-      val cond = ks.map(k => col(k) <=> col(s"__t_$k")).reduce(_ && _)
-      val newRows = src.join(tgtKeys, cond, "left_anti")
-      // one traversal: observed staged append (see stagedObservedAppend)
-      // instead of the old cache + count() + write pair; the tail below
-      // owns the sidecar refresh, as it always has
-      insertedCount = stagedObservedAppend(ds,
-        SchemaOps.align(newRows, target.schema), partCols,
-        refreshStats = false)
-    }
-
-    if (ds.stats.nonEmpty) ds.updateStats()
-    val afterAll = ds.relFiles
-    MergeResult(srcCount, insertedCount, updated,
-      affectedRel, afterAll.filterNot(beforeAll.contains), preserved)
+    MergeResult(srcCount, inserted, updated, affectedRel, staged.files, preserved)
   }
 }

@@ -1,0 +1,147 @@
+package graft.sources
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import graft.operators.{MaintenanceCleanupError, StagedRewriteException}
+
+/** The journaled copy-on-write swap behind every rewriting operator
+  * (Merge, Delete, Maintenance) — the reference's PartialWriteError
+  * recovery contract (pydala/io.py:41-64, pydala/dataset.py:172-203)
+  * in one place. A plain filesystem has no multi-file atomic rename, so
+  * one swap runs:
+  *
+  *  1. clear the staging dir `_tmp_<op>`;
+  *  2. stage: the caller writes the replacement files under it, laid
+  *     out like the dataset (partition dirs included); zero-row files
+  *     are dropped, so an empty rewrite promotes nothing;
+  *  3. journal `_graft_<op>_journal`, listing the dataset-relative
+  *     originals to retire;
+  *  4. promote the staged files into the dataset root;
+  *  5. delete the originals;
+  *  6. drop the journal;
+  *  7. `refreshByPath` and `refreshSchema`. The stats sidecar is the
+  *     caller's to refresh, once per operation.
+  *
+  * Failure contract:
+  *  - in step 2: the staging dir is removed and
+  *    [[graft.operators.StagedRewriteException]] is raised — the
+  *    dataset is unchanged;
+  *  - in step 4: [[FsUtil.PromoteFailedException]] (landed and still
+  *    staged files); originals untouched, so rows may show twice but
+  *    are never lost;
+  *  - in step 5: [[graft.operators.MaintenanceCleanupError]] with the
+  *    originals that still exist — the rewrite is complete, their rows
+  *    show twice.
+  *
+  * After a failure in step 4 or 5 (or a crash anywhere from step 3 on)
+  * the journal stays, and [[recover]] — which every swapping operator
+  * calls first — completes the swap: promote what is still staged,
+  * delete the journaled originals, drop the journal. Replay is
+  * idempotent because the journal is only written once the staged
+  * files are complete, and recovery never re-derives anything from the
+  * (possibly half-swapped) data files.
+  */
+object Swap {
+
+  /** Dataset-relative files the swap promoted, and their rows (from
+    * the staged footers).
+    */
+  final case class Result(files: Seq[String], rows: Long)
+
+  private val Journal = "_graft_(\\w+)_journal".r
+  private val Staging = "_tmp_(\\w+)".r
+
+  private def stagingPath(root: String, op: String) = s"$root/_tmp_$op"
+  private def journalPath(root: String, op: String) = s"$root/_graft_${op}_journal"
+
+  def apply(ds: ParquetDataset, op: String, originals: Seq[String])(
+      stage: String => Unit): Result = {
+    val root = ds.path
+    val tmp = stagingPath(root, op)
+    FsUtil.deleteRecursively(tmp)
+    val rows =
+      try { stage(tmp); dropEmpty(ds, tmp) }
+      catch { case e: Exception =>
+        FsUtil.deleteRecursively(tmp)
+        throw new StagedRewriteException(originals,
+          s"staged $op rewrite failed before swap; dataset unchanged: ${e.getMessage}", e)
+      }
+    // written beside the staged files, then moved into place: a torn
+    // journal would retire only some originals on replay
+    val jp = Paths.get(journalPath(root, op))
+    val draft = Paths.get(tmp, "_journal")
+    Files.createDirectories(draft.getParent)
+    Files.write(draft, originals.map(_ + "\n").mkString.getBytes(StandardCharsets.UTF_8))
+    Files.move(draft, jp, StandardCopyOption.ATOMIC_MOVE)
+    val landed = FsUtil.promote(tmp, root)
+    retire(root, originals)
+    Files.delete(jp)
+    ds.spark.catalog.refreshByPath(root)
+    ds.refreshSchema()
+    Result(landed.map(FsUtil.relativize(root, _)), rows)
+  }
+
+  /** Complete every swap a journal records as pending, and discard
+    * staging dirs no journal covers (a swap that failed or crashed
+    * before its journal: nothing was promoted). Refreshes the sidecar,
+    * if there is one, after completing a swap. Safe to call any time;
+    * returns true if a pending swap was completed.
+    */
+  def recover(ds: ParquetDataset): Boolean = {
+    val root = ds.path
+    if (!Files.isDirectory(Paths.get(root))) return false
+    val names = {
+      val st = Files.list(Paths.get(root))
+      try st.iterator().asScala.map(_.getFileName.toString).toSeq finally st.close()
+    }
+    val pending = names.collect { case Journal(op) => op }
+    names.foreach {
+      case n @ Staging(op) if !pending.contains(op) => FsUtil.deleteRecursively(s"$root/$n")
+      case _ =>
+    }
+    pending.foreach { op =>
+      val jp = journalPath(root, op)
+      val originals = Files.readAllLines(Paths.get(jp)).asScala.toSeq.filter(_.nonEmpty)
+      if (FsUtil.exists(stagingPath(root, op))) FsUtil.promote(stagingPath(root, op), root)
+      FsUtil.delete(root, originals.map(r => s"$root/$r"))
+      Files.delete(Paths.get(jp))
+    }
+    if (pending.isEmpty) return false
+    ds.spark.catalog.refreshByPath(root)
+    ds.refreshSchema()
+    if (ds.stats.nonEmpty) ds.updateStats()
+    true
+  }
+
+  /** Row count of the staged files; zero-row files are deleted (a
+    * non-partitioned Spark write leaves one even when it has no rows).
+    */
+  private def dropEmpty(ds: ParquetDataset, tmp: String): Long = {
+    val conf = ds.spark.sparkContext.hadoopConfiguration
+    FsUtil.listParquet(tmp).map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f), conf))
+      val n = try reader.getRecordCount finally reader.close()
+      if (n == 0) Files.delete(Paths.get(f))
+      n
+    }.sum
+  }
+
+  /** Step 5; a failure reports the originals that still exist (all of
+    * them if the filesystem cannot even answer that — over-reporting
+    * is safe, the cleanup delete is idempotent).
+    */
+  private def retire(root: String, originals: Seq[String]): Unit =
+    try FsUtil.delete(root, originals.map(r => s"$root/$r"))
+    catch { case e: Throwable =>
+      val remaining =
+        try originals.filter(r => FsUtil.exists(s"$root/$r"))
+        catch { case _: Throwable => originals }
+      throw new MaintenanceCleanupError(remaining.sorted, e)
+    }
+}

@@ -160,6 +160,131 @@ class LawsSpec extends SparkSpecBase {
     assert(got == expected)
   }
 
+  test("merge counts equal the relational expectation for insert, update " +
+    "and upsert, with a key duplicated across files and null keys") {
+    // `updated` counts matched SOURCE keys, `inserted` the source keys the
+    // target lacks (null-safe); a key held by two target files matches
+    // once, so a count of matched target rows is off by one here
+    val rnd = new scala.util.Random(57)
+    val dup = 7
+    val files = Seq(
+      (0 until 40 by 2).map(k => (Option(k), s"a$k")) :+ ((Some(dup), "a-dup")),
+      (1 until 40 by 2).filter(_ != dup).map(k => (Option(k), s"b$k")) :+
+        ((Some(dup), "b-dup")) :+ ((None, "b-null")))
+    val target = files.flatten
+    val tKeys = target.map(_._1).toSet
+    for (strategy <- Seq("insert", "update", "upsert"); trial <- 1 to 3) {
+      val dir = tmpDir(s"law-merge-counts-$strategy")
+      files.foreach(_.toDF("id", "v").coalesce(1).write.mode("append").parquet(dir))
+      val ds = new ParquetDataset(spark, dir)
+      val source = (Some(dup), s"s$trial-dup") +: (1 to 30).map { i =>
+        (if (rnd.nextInt(6) == 0) None else Some(rnd.nextInt(70) - 10), s"s$trial-$i")
+      }
+      // last row wins per (null-safe) key
+      val last = source.foldLeft(Map.empty[Option[Int], String])(_ + _)
+      val matched = last.keySet.intersect(tKeys)
+      val (expIns, expUpd) = strategy match {
+        case "insert" => (last.size - matched.size, 0)
+        case "update" => (0, matched.size)
+        case _ => (last.size - matched.size, matched.size)
+      }
+      val merged = target.filterNot(r => last.contains(r._1))
+      val expected = strategy match {
+        case "insert" => target ++ last.filter(kv => !tKeys(kv._1))
+        case "update" => merged ++ last.filter(kv => tKeys(kv._1))
+        case _ => merged ++ last
+      }
+      val r = Merge(ds, source.toDF("id", "v"), Seq("id"), strategy)
+      assert((r.sourceCount, r.inserted, r.updated) == ((last.size, expIns, expUpd)),
+        s"$strategy trial $trial")
+      val got = ds.df.collect().map(row =>
+        (Option(row.get(0)).map(_.asInstanceOf[Int]), row.getString(1)))
+      assert(got.toSeq.sorted == expected.toSeq.sorted, s"$strategy trial $trial state")
+    }
+  }
+
+  test("every swap ends in exactly the before- or the after-state after a " +
+    "fault at each point and recovery: no staging, no journal, sidecar == files") {
+    import org.apache.spark.sql.functions._
+    import graft.operators.{Delete, Maintenance, MaintenanceCleanupError,
+      MergeCleanupError, PartialMergeError}
+    import graft.sources.FsUtil
+    // three partitions of two files each: every operation below stages
+    // at least two files and retires at least two originals
+    val template = tmpDir("law-fault")
+    (0 until 2).foreach { f =>
+      (0 until 30).map(i => (f * 100 + i, s"v$i", i % 3, i % 2)).toDF("k", "v", "p", "q")
+        .coalesce(1).write.partitionBy("p").mode("append").parquet(template)
+    }
+    new ParquetDataset(spark, template).updateStats()
+    def copyOf(from: String): ParquetDataset = {
+      val to = tmpDir("law-fault-run")
+      val src = java.nio.file.Paths.get(from)
+      java.nio.file.Files.walk(src).iterator().forEachRemaining { p =>
+        val d = java.nio.file.Paths.get(to).resolve(src.relativize(p).toString)
+        if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(d)
+        else java.nio.file.Files.copy(p, d)
+      }
+      new ParquetDataset(spark, to)
+    }
+    def state(ds: ParquetDataset): Seq[String] = {
+      val d = ds.df
+      d.select(d.columns.sorted.map(c => col(c).cast("string")): _*)
+        .collect().map(_.mkString("|")).toSeq.sorted
+    }
+    def withProps[T](props: (String, String)*)(body: => T): T = {
+      props.foreach { case (k, v) => sys.props(k) = v }
+      try body finally props.foreach { case (k, _) => sys.props.remove(k) }
+    }
+    val upsertSrc = Seq(4, 105, 17, 999).map(k => (k, s"new$k", (k % 100) % 3, 0))
+      .toDF("k", "v", "p", "q")
+    // an operation, and its input with a row that fails inside it
+    val ops: Seq[(String, ParquetDataset => Any, Option[ParquetDataset => Any])] = Seq(
+      ("upsert", ds => operators.Merge(ds, upsertSrc, Seq("k"), "upsert"),
+        Some(ds => operators.Merge(ds, upsertSrc.withColumn("v",
+          when(col("k") === 17, raise_error(lit("injected fault"))).otherwise(col("v"))),
+          Seq("k"), "upsert"))),
+      ("delete", ds => Delete.where(ds, "v IN ('v4', 'v5')"),
+        Some(ds => Delete.where(ds,
+          "CASE WHEN k = 17 THEN raise_error('injected fault') ELSE v IN ('v4', 'v5') END"))),
+      ("compactPartitions", ds => Maintenance.compactPartitions(ds), None),
+      ("repartition", ds => Maintenance.repartition(ds, Seq("q")), None))
+    val before = state(copyOf(template))
+    ops.foreach { case (name, op, faulty) =>
+      // compaction and repartition keep the rows: their after-state is
+      // the before-state, and a fault may only add nothing to it
+      val after = { val ds = copyOf(template); op(ds); state(ds) }
+      val faults: Seq[(String, ParquetDataset => Any)] = Seq(
+        ("promote", (ds: ParquetDataset) => {
+          val e = intercept[Exception] {
+            withProps("graft.fs.rename" -> "degraded", "graft.fs.rename.failAfter" -> "1")(op(ds))
+          }
+          assert(e.isInstanceOf[FsUtil.PromoteFailedException] ||
+            (name == "upsert" && e.isInstanceOf[PartialMergeError]), s"$name: $e")
+        }),
+        ("cleanup", (ds: ParquetDataset) => {
+          val e = intercept[Exception] {
+            withProps("graft.fs.delete.failAfter" -> "1")(op(ds))
+          }
+          assert(e.isInstanceOf[MaintenanceCleanupError] ||
+            (name == "upsert" && e.isInstanceOf[MergeCleanupError]), s"$name: $e")
+        })) ++ faulty.map(f => ("staged", (ds: ParquetDataset) => intercept[Exception](f(ds))))
+      faults.foreach { case (point, inject) =>
+        val ds = copyOf(template)
+        inject(ds)
+        Delete.recover(ds)
+        val got = state(ds)
+        assert(got == before || got == after,
+          s"$name/$point: neither before nor after (${got.size} rows)")
+        val leftovers = new java.io.File(ds.path).list()
+          .filter(n => n.startsWith("_tmp_") || n.endsWith("_journal"))
+        assert(leftovers.isEmpty, s"$name/$point left ${leftovers.toSeq}")
+        val side = ds.stats.get.select("file_path").distinct().collect().map(_.getString(0)).toSet
+        assert(side == ds.relFiles.toSet, s"$name/$point: sidecar != files")
+      }
+    }
+  }
+
   test("delete-where equals the relational filter on random data with nulls") {
     import org.apache.spark.sql.functions._
     val rnd = new scala.util.Random(41)

@@ -335,4 +335,58 @@ class MaintenanceSpec extends SparkSpecBase {
     }
     assert(ex.getMessage.contains("min/max statistics"), ex.getMessage)
   }
+
+  test("compaction keeps a column a later append added") {
+    val dir = tmpDir("cmp_evolved")
+    val ds = new ParquetDataset(spark, dir)
+    Seq((1, "a")).toDF("id", "cat").coalesce(1)
+      .write.partitionBy("cat").mode("append").parquet(dir)
+    Seq((2, "b")).toDF("id", "cat").coalesce(1)
+      .write.partitionBy("cat").mode("append").parquet(dir)
+    Seq((3, "b", "x3")).toDF("id", "cat", "extra").coalesce(1)
+      .write.partitionBy("cat").mode("append").parquet(dir)
+    // the dataset's single-footer schema (the first file by path, in
+    // cat=a) does not know the column the cat=b group carries
+    assert(!ds.df.columns.contains("extra"))
+    val plan = Maintenance.compactPartitions(ds)
+    assert(plan.groups.map(_.partition) == Seq("cat=b"))
+    assert(ds.files.count(_.contains("cat=b")) == 1)
+    val all = spark.read.option("mergeSchema", "true").parquet(dir)
+    assert(all.select("id", "extra").collect().map(r => r.getInt(0) -> r.getString(1)).toMap ==
+      Map(1 -> null, 2 -> null, 3 -> "x3"))
+  }
+
+  test("repairSchema: a failed original-delete after promote is loud, " +
+    "and recovery retires the original") {
+    val dir = tmpDir("rep_clean")
+    val ds = new ParquetDataset(spark, dir)
+    Seq((1, 1.5f)).toDF("id", "v").coalesce(1).write.mode("append").parquet(dir)
+    Seq((2L, 2.5)).toDF("id", "v").coalesce(1).write.mode("append").parquet(dir)
+    sys.props("graft.fs.delete.failAfter") = "0"
+    val ex = try intercept[graft.operators.MaintenanceCleanupError] {
+      Maintenance.repairSchema(ds)
+    } finally sys.props.remove("graft.fs.delete.failAfter")
+    assert(ex.remainingOriginals.size == 1, ex.remainingOriginals)
+    assert(graft.operators.Delete.recover(ds))
+    assert(ds.df.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))
+    assert(!new java.io.File(dir).list().exists(_.startsWith("_tmp_")))
+  }
+
+  test("repairSchema: a file whose cast fails stays intact; the others are repaired") {
+    val dir = tmpDir("rep_iso")
+    val ds = new ParquetDataset(spark, dir)
+    // unified: decimal(38,30), which holds 8 integer digits — the long
+    // file overflows it, the int file fits
+    Seq(BigDecimal("1.5")).toDF("d").select(col("d").cast("decimal(38,30)"))
+      .coalesce(1).write.mode("append").parquet(dir)
+    Seq(123456789012L).toDF("d").coalesce(1).write.mode("append").parquet(dir)
+    val wide = ds.files.filter(f => spark.read.parquet(f).schema("d").dataType == LongType)
+    Seq(7).toDF("d").coalesce(1).write.mode("append").parquet(dir)
+    val plan = Maintenance.repairSchema(ds)
+    assert(plan.candidates.size == 2)
+    assert(ds.files.size == 3)
+    assert(wide.forall(f => ds.files.contains(f)), "the failing file must stay as it was")
+    val types = ds.files.map(f => spark.read.parquet(f).schema("d").dataType)
+    assert(types.count(_ == DecimalType(38, 30)) == 2 && types.count(_ == LongType) == 1, types)
+  }
 }

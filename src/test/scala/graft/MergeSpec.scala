@@ -121,4 +121,36 @@ class MergeSpec extends SparkSpecBase {
     assert(r.inserted == 1)
     assert(ds.df.count() == 1)
   }
+
+  test("upsert with matches issues one staged data write and one promote") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val ds = seed(tmpDir("mone"))
+    ds.updateStats()
+    val before = ds.relFiles.toSet
+    val outputs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.analyzed.collectFirst { case c: InsertIntoHadoopFsRelationCommand =>
+          c.outputPath.toString }.foreach(outputs.add)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val r = try {
+      val res = Merge(ds, Seq((2, "B!", 22.0), (9, "i", 90.0)).toDF("id", "name", "v"),
+        Seq("id"), "upsert")
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      res
+    } finally spark.listenerManager.unregister(listener)
+    assert(r.updated == 1 && r.inserted == 1)
+    val staged = outputs.toArray.map(_.toString).filter(_.contains("/_tmp_"))
+    assert(staged.length == 1, outputs)
+    // one promote: every file the merge added came from that one write
+    // job (Spark names a job's files part-<n>-<job uuid>-c<n>)
+    val added = ds.relFiles.filterNot(before)
+    assert(added.nonEmpty && added.map(_.split("-").slice(2, 7).mkString("-")).distinct.size == 1,
+      added)
+    assert(r.insertedFiles.toSet == added.toSet)
+  }
 }
