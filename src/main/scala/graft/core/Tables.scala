@@ -2,6 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.SchemaOps
+import graft.sources.{FsUtil, ParquetDataset}
 
 /** Canonical access to the driver-generated test tables.
   *
@@ -202,7 +204,7 @@ object Tables {
         // keeps its LRU tick fresh, so trimStorage evicts it last.
         memo(spark, s"events#$sfDir") {
           spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          val raw = spark.read.parquet(s"$sfDir/events.parquet")
+          val raw = read(spark, s"$sfDir/events.parquet")
           val tsCol = raw.schema("ts").dataType match {
             case org.apache.spark.sql.types.LongType => // TIMESTAMP(NANOS) gen
               expr("timestamp_micros(ts div 1000)")
@@ -212,48 +214,19 @@ object Tables {
           }
           raw.withColumn("ts", tsCol)
         }
-      case other =>
-        // schema memo (round-11, metadata only — the role a metastore
-        // plays for catalog tables): a bare spark.read.parquet runs a
-        // one-task footer-inference job per CALL (~35–60 ms on this
-        // box), and the suite loads these immutable inputs thousands
-        // of times. The first load per path infers and remembers; the
-        // rest supply the schema and plan with zero jobs. Data is
-        // never cached — only the resolved StructType.
-        val p = s"$sfDir/$other.parquet"
-        spark.read.schema(memoSchema(spark, p)).parquet(p)
+      case other => read(spark, s"$sfDir/$other.parquet")
     }
   }
 
-  /** Resolved parquet schemas per input path — see [[load]]. Keyed on
-    * (mtime, size) of the path (round-12, advisor): a regenerated
-    * input at the same path gets a fresh inference instead of a
-    * silently stale schema (absent columns reading as all-null). The
-    * stat is a driver-local filesystem call (~µs), never a Spark job —
-    * the memo still removes the per-load footer-INFERENCE job, which
-    * is the expensive part.
+  /** An input table — one parquet file or a directory of them — read in
+    * the unified schema of its footers (`ParquetDataset.footerSchemas`:
+    * about a millisecond a file, no Spark job). Nothing is remembered
+    * between loads, so a table regenerated at the same path reads in
+    * its new schema.
     */
-  private val schemaMemo = scala.collection.concurrent.TrieMap
-    .empty[String, ((Long, Long), org.apache.spark.sql.types.StructType)]
-
-  private def statToken(p: String): (Long, Long) = {
-    val path = java.nio.file.Paths.get(p)
-    try (java.nio.file.Files.getLastModifiedTime(path).toMillis,
-      java.nio.file.Files.size(path))
-    catch { case _: Exception => (-1L, -1L) }
-  }
-
-  private def memoSchema(spark: SparkSession, p: String)
-      : org.apache.spark.sql.types.StructType = {
-    val tok = statToken(p)
-    schemaMemo.get(p) match {
-      case Some((t, sch)) if t == tok => sch
-      case _ =>
-        val sch = spark.read.parquet(p).schema
-        schemaMemo.put(p, (tok, sch))
-        sch
-    }
-  }
+  private def read(spark: SparkSession, p: String): DataFrame =
+    spark.read.schema(SchemaOps.unify(ParquetDataset.footerSchemas(spark, FsUtil.listParquet(p))))
+      .parquet(p)
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

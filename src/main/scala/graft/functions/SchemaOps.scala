@@ -70,7 +70,8 @@ object SchemaOps {
   }
 
   /** Permissive unification: field order of first appearance, types
-    * promoted pairwise; fields missing in some schemas become nullable.
+    * promoted pairwise; fields missing in some schemas become nullable;
+    * a field keeps the metadata of its first appearance.
     */
   def unify(schemas: Seq[StructType]): StructType = {
     val order = scala.collection.mutable.LinkedHashMap[String, StructField]()
@@ -78,8 +79,8 @@ object SchemaOps {
       order.get(f.name) match {
         case None => order(f.name) = f
         case Some(prev) =>
-          order(f.name) = StructField(f.name, promote(prev.dataType, f.dataType),
-            prev.nullable || f.nullable)
+          order(f.name) = prev.copy(dataType = promote(prev.dataType, f.dataType),
+            nullable = prev.nullable || f.nullable)
       }
     })
     // a field absent from any schema must be nullable in the union

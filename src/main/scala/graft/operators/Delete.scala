@@ -60,13 +60,10 @@ object Delete {
     if (ds.isEmpty) return DeleteResult(0, Nil, Nil)
 
     val pred = expr(graft.sources.Sanitize(predicate))
-    // resolve the target through the dataset's schema memo: the bare
-    // spark.read.parquet here paid a footer-inference job per delete
-    val tgt0 = ds.df
     // the discovery pass traverses exactly the pred-TRUE rows, which
     // ARE the deleted rows: per-file counts give both the affected
     // files and the deleted total
-    val perFile = tgt0.withColumn("__file", input_file_name())
+    val perFile = ds.df.withColumn("__file", input_file_name())
       .filter(pred).groupBy("__file").count().collect()
     val deleted = perFile.map(_.getLong(1)).sum
     val affectedRel = perFile
@@ -74,12 +71,9 @@ object Delete {
     val preserved = ds.relFiles.filterNot(affectedRel.contains)
     if (affectedRel.isEmpty) return DeleteResult(0, Nil, preserved)
 
-    val affected = ds.spark.read.option("basePath", ds.path)
-      .schema(tgt0.schema)
-      .parquet(affectedRel.map(f => s"${ds.path}/$f"): _*)
     Swap(ds, "delete", affectedRel) { tmp =>
       // TRUE deletes; FALSE and NULL survive
-      WritePipeline.write(affected.filter(!coalesce(pred, lit(false))), tmp,
+      WritePipeline.write(ds.read(affectedRel).filter(!coalesce(pred, lit(false))), tmp,
         WriteConfig(partitionBy = ds.partitionColumns))
     }
     if (ds.stats.nonEmpty) ds.updateStats()

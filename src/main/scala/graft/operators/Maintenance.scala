@@ -207,7 +207,7 @@ object Maintenance {
     val spark = ds.spark
     // partition values live in the directory names, not the footers,
     // so file schemas carry only data columns
-    val schemaOf = fileSchemas(spark, plan.plannedFiles.map(f => s"${ds.path}/$f"))
+    val schemaOf = ds.schemaOf _
     Swap(ds, TmpOp, plan.plannedFiles) { tmp =>
       plan.groups.foreach { g =>
         val partDir = g.partition.split("@t=")(0)
@@ -226,19 +226,6 @@ object Maintenance {
       }
     }
     if (ds.stats.nonEmpty) ds.updateStats()
-  }
-
-  /** Spark schema of each file: ONE executor-side footer pass, then
-    * one driver-side inference per DISTINCT physical schema (round-12,
-    * verdict #3): files sharing a parquet schema resolve to the same
-    * Spark schema under the same session confs, so a dataset pays 1–2
-    * inference jobs, not one per file (10⁵ at scale).
-    */
-  private def fileSchemas(spark: org.apache.spark.sql.SparkSession,
-                          files: Seq[String]): Map[String, StructType] = {
-    val fps = StatsSidecar.schemaFingerprints(spark, files)
-    val byFp = fps.groupBy(_._2).map { case (fp, fs) => fp -> spark.read.parquet(fs.keys.min).schema }
-    files.map(f => f -> byFp(fps(f))).toMap
   }
 
   // ---- repartition --------------------------------------------------
@@ -332,10 +319,10 @@ object Maintenance {
     if (!dryRun) Swap.recover(ds) // a pending swap would skew the plan
     val spark = ds.spark
     val files = ds.files
-    val schemaOf = fileSchemas(spark, files)
-    val perFile: Seq[(String, StructType)] = files.map(f => f -> schemaOf(f))
-    val target = SchemaOps.unify(perFile.map(_._2))
-    val candidates = perFile.collect { case (f, s) if s != target => f }
+    // captured once: each repair swap drops the dataset's resolved schema
+    val schemaOf = files.map(f => f -> ds.schemaOf(f)).toMap
+    val target = SchemaOps.unify(files.map(schemaOf))
+    val candidates = files.filter(schemaOf(_) != target)
     val plan = RepairPlan(target.simpleString,
       candidates.map(f => FsUtil.relativize(ds.path, f)))
     if (dryRun) return plan

@@ -115,11 +115,7 @@ object Merge {
       return MergeResult(ins.rows, ins.rows, 0, Nil, ins.files, Nil)
     }
 
-    // resolve the target ONCE: every spark.read.parquet pays a driver
-    // footer-inference job, and a merge needs the same schema in three
-    // places (key resolution, range-bounded probe, affected-file read)
-    val tgt0 = ds.df
-    val ks = effectiveKeys(source.columns.toSeq, tgt0.columns.toSeq, keys)
+    val ks = effectiveKeys(source.columns.toSeq, ds.schema.fieldNames.toSeq, keys)
     require(ks.nonEmpty, "no common key columns between source and target")
     val src = dedupLastWins(source, ks).cache()
 
@@ -129,13 +125,13 @@ object Merge {
       // push down to parquet, so target row groups outside the merge's
       // key range are never decoded
       val (bounds, srcCount) = keyBounds(src, ks)
-      val tgtB = rangeBound(tgt0, ks, bounds)
+      val tgtB = rangeBound(ds.df, ks, bounds)
       if (strategy == "insert") {
         val before = ds.relFiles
         val newRows = src.join(keysOf(tgtB, ks).distinct(), keyCond(src, ks), "left_anti")
-        val ins = swap(ds, Nil, SchemaOps.align(newRows, tgt0.schema), partCols)
+        val ins = swap(ds, Nil, SchemaOps.align(newRows, ds.schema), partCols)
         MergeResult(srcCount, ins.rows, 0, Nil, ins.files, before)
-      } else rewrite(ds, src, ks, partCols, strategy == "upsert", tgt0, tgtB, srcCount)
+      } else rewrite(ds, src, ks, partCols, strategy == "upsert", tgtB, srcCount)
     } finally {
       // a long-lived session runs many merges — don't let per-merge
       // caches accumulate executor memory
@@ -230,9 +226,8 @@ object Merge {
   }
 
   private def rewrite(ds: ParquetDataset, src: DataFrame, ks: Seq[String],
-                      partCols: Seq[String], upsert: Boolean, target: DataFrame,
+                      partCols: Seq[String], upsert: Boolean,
                       tgtB: DataFrame, srcCount: Long): MergeResult = {
-    val path = ds.path
     val tgtF = tgtB.withColumn("__file", input_file_name())
 
     // ONE bounded pass over the target, one global aggregate: the
@@ -256,7 +251,7 @@ object Merge {
       throw new IllegalArgumentException(
         "merge update would change a partition value; rewrite rejected")
     val affectedRel = found.getSeq[String](0)
-      .map(f => FsUtil.relativize(path, f)).sorted
+      .map(f => FsUtil.relativize(ds.path, f)).sorted
     val updated = found.getLong(1)
     val inserted = if (upsert) srcCount - updated else 0L
     val allRel = ds.relFiles
@@ -264,20 +259,14 @@ object Merge {
     if (affectedRel.isEmpty && !upsert)
       return MergeResult(srcCount, 0, 0, Nil, Nil, preserved)
 
-    // explicit schema: the affected files are a subset of the target
-    // just resolved, so re-inferring their footers is a pure extra
-    // driver job (partition columns ride in via basePath + the
-    // provided schema, exactly as inference would place them)
-    val affected = Option.when(affectedRel.nonEmpty)(ds.spark.read
-      .option("basePath", path).schema(target.schema)
-      .parquet(affectedRel.map(f => s"$path/$f"): _*))
+    val affected = Option.when(affectedRel.nonEmpty)(ds.read(affectedRel))
     // upsert stages the whole source; update only its matched rows
     val incoming =
       if (upsert) src
       else src.join(keysOf(affected.get, ks).distinct(), keyCond(src, ks), "left_semi")
     // rows whose key is NOT being merged survive as-is
-    val data = affected.foldLeft(SchemaOps.align(incoming, target.schema)) { (in, a) =>
-      SchemaOps.align(a.join(keysOf(src, ks), keyCond(a, ks), "left_anti"), target.schema)
+    val data = affected.foldLeft(SchemaOps.align(incoming, ds.schema)) { (in, a) =>
+      SchemaOps.align(a.join(keysOf(src, ks), keyCond(a, ks), "left_anti"), ds.schema)
         .unionByName(in)
     }
     val staged =

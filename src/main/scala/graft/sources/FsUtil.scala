@@ -13,11 +13,12 @@ object FsUtil {
 
   /** Recursive listing of data files, absolute paths, sorted. Sidecar
     * and temp dirs (`_`-prefixed) are skipped — physical data files
-    * are authoritative (reference ADR 0001).
+    * are authoritative (reference ADR 0001). A file root lists itself.
     */
   def listParquet(root: String): Seq[String] = {
     val base = Paths.get(stripScheme(root))
     if (!Files.exists(base)) return Nil
+    if (Files.isRegularFile(base)) return Seq(base.toString)
     val out = scala.collection.mutable.ArrayBuffer[String]()
     def walk(p: Path): Unit = {
       val entries = Files.list(p).iterator().asScala.toSeq

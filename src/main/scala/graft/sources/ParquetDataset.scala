@@ -1,7 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Bridge
+import org.apache.spark.sql.types.StructType
+import graft.functions.SchemaOps
 import graft.plans.ScanPruner
 
 /** Managed parquet dataset: a directory of parquet files with optional
@@ -11,7 +15,8 @@ import graft.plans.ScanPruner
   * Everything relational (filter/sort/agg/join) happens on the plain
   * `DataFrame` from [[df]]; the class adds the management layer:
   * sidecar statistics, explicit file-level scan pruning, the
-  * normalizing write pipeline, keyed merge, and maintenance.
+  * normalizing write pipeline, keyed merge, and maintenance. Each
+  * dataset version has one [[schema]], decided here and nowhere else.
   */
 final class ParquetDataset(val spark: SparkSession, rawPath: String) {
 
@@ -35,36 +40,53 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
     })
     .getOrElse(Nil)
 
-  /** Resolved schema memo (round-12, verdict #2): every bare
-    * `spark.read.parquet` pays a one-task footer-inference job at plan
-    * time (~35–60 ms + inter-job gap), and lifecycle/merge/maintenance
-    * paths consult [[df]] many times per operation. The first call
-    * infers; later calls supply the remembered schema and plan with
-    * zero jobs. Instance-scoped and dropped by [[refreshSchema]],
-    * which every mutating path (write/delete/merge/maintenance swap)
-    * calls — an EXTERNAL writer mutating the same path must use its
-    * own instance (it already must, for `refreshByPath` reasons).
-    * Metadata only; no data is ever cached here.
+  /** This version's footer schemas, resolved once; dropped by
+    * [[refreshSchema]], which every mutating path (write, swap) calls.
+    * An EXTERNAL writer to the same path must use its own instance.
     */
-  @volatile private var schemaMemo: Option[org.apache.spark.sql.types.StructType] = None
+  @volatile private var resolved: Option[ParquetDataset.Resolved] = None
 
-  /** Forget the memoized schema — called after every mutation of the
+  /** Forget the resolved schema — called after every mutation of the
     * underlying files (the schema can evolve on append, repartition's
     * dateparts, dtype optimization, schema repair).
     */
-  def refreshSchema(): Unit = schemaMemo = None
+  def refreshSchema(): Unit = resolved = None
 
-  /** The full lazy scan. Partition discovery and row-group pruning are
-    * native; this is the entry point for all relational work.
-    */
-  def df: DataFrame = schemaMemo match {
-    case Some(sc) => spark.read.schema(sc).parquet(path)
-    case None =>
-      val d = spark.read.parquet(path)
-      // inference already yields an all-nullable tree; memoized as-is
-      schemaMemo = Some(d.schema)
-      d
+  private def resolve(): ParquetDataset.Resolved = resolved.getOrElse {
+    val fs = files
+    val perFile = fs.zip(ParquetDataset.footerSchemas(spark, fs)).toMap
+    // no files: Spark's own "unable to infer schema" error, as before
+    val reader = if (fs.isEmpty) spark.read else spark.read.schema(SchemaOps.unify(fs.map(perFile)))
+    val r = ParquetDataset.Resolved(perFile, reader.parquet(path).schema)
+    resolved = Some(r)
+    r
   }
+
+  /** The [[SchemaOps.unify]] of every file's footer schema in path
+    * order, then the hive partition columns: what `spark.read.parquet`
+    * infers when the files agree. [[df]], [[scan]], Delete, Merge and
+    * compaction all read in it, so a column only a later file carries
+    * survives; types Spark cannot read under it fail at read time
+    * (`Maintenance.repairSchema` rewrites them). Cost per version: one
+    * footer read per file and no Spark job up to
+    * `StatsSidecar.SmallSidecarFiles` files, one executor pass beyond.
+    */
+  def schema: StructType = resolve().schema
+
+  /** Footer schema of one data file (absolute path); a file this
+    * version does not know yet re-resolves.
+    */
+  def schemaOf(file: String): StructType =
+    resolve().files.getOrElse(file, { refreshSchema(); resolve().files(file) })
+
+  /** The full lazy scan. Partition discovery and row-group pruning
+    * are native; this is the entry point for all relational work.
+    */
+  def df: DataFrame = spark.read.schema(schema).parquet(path)
+
+  /** The given dataset-relative files, with their partition columns. */
+  def read(rel: Seq[String]): DataFrame =
+    spark.read.option("basePath", path).schema(schema).parquet(rel.map(f => s"$path/$f"): _*)
 
   /** SQL-string filter — the reference's whole predicate-translation
     * subsystem collapses into Catalyst (SURVEY §2.2).
@@ -99,15 +121,7 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
     val chosen = ScanPruner.selectFiles(stats, all, Sanitize(filterSql)).getOrElse(all)
     if (chosen.isEmpty) df.limit(0)
     else if (chosen.size == all.size) df
-    else {
-      // explicit schema (the Merge affected-read pattern): the chosen
-      // files are a subset of the dataset just resolved, so
-      // re-inferring their footers is a pure extra driver job;
-      // partition columns ride in via basePath + the provided schema
-      val sc = schemaMemo.getOrElse(df.schema)
-      spark.read.option("basePath", path).schema(sc)
-        .parquet(chosen.map(f => s"$path/$f"): _*)
-    }
+    else read(chosen)
   }
 
   /** Files a scan(filter) would read — the dry-run face of pruning. */
@@ -135,7 +149,7 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
     * autodetection, pydala/dataset.py:497-500).
     */
   def timestampColumn: Option[String] =
-    df.schema.fields.find(f =>
+    schema.fields.find(f =>
       f.dataType == org.apache.spark.sql.types.TimestampType ||
         f.dataType == org.apache.spark.sql.types.TimestampNTZType).map(_.name)
 
@@ -167,6 +181,27 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
     // keep the sidecar in sync: count()/timeRange()/scan() prefer it, so a
     // stale sidecar would keep serving rows for the files just deleted
     if (stats.nonEmpty) updateStats()
+  }
+}
+
+object ParquetDataset {
+
+  private final case class Resolved(files: Map[String, StructType], schema: StructType)
+
+  /** Spark schema of each file's footer (`Bridge.footerSchema`), in
+    * `files` order: read on the driver up to `StatsSidecar.SmallSidecarFiles`
+    * files, as `StatsSidecar.update` reads them, in one executor pass beyond.
+    */
+  def footerSchemas(spark: SparkSession, files: Seq[String]): Seq[StructType] = {
+    val conf = spark.conf.getAll
+    def read(hadoop: Configuration, fs: Iterator[String]): Iterator[StructType] = {
+      val toSchema = Bridge.footerSchema(conf)
+      fs.map(f => toSchema(StatsSidecar.footer(hadoop, f)))
+    }
+    if (files.size <= StatsSidecar.SmallSidecarFiles)
+      read(spark.sparkContext.hadoopConfiguration, files.iterator).toSeq
+    else spark.sparkContext.parallelize(files, StatsSidecar.footerTasks(files.size))
+      .mapPartitions(it => read(new Configuration(), it)).collect().toSeq
   }
 }
 

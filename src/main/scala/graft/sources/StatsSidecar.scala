@@ -4,7 +4,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
@@ -83,7 +85,7 @@ object StatsSidecar {
     * min(files, 32) cap goes the other way — 30k files per task on huge
     * listings).
     */
-  private def footerTasks(files: Int): Int =
+  private[sources] def footerTasks(files: Int): Int =
     math.max(1, math.min(files, math.max(32, files / 64)))
 
   /** Distributed footer-stats frame: one row per file × row-group ×
@@ -99,7 +101,10 @@ object StatsSidecar {
     val rootC = FsUtil.stripScheme(root)
     spark.createDataset(
       spark.sparkContext.parallelize(absFiles, footerTasks(absFiles.size))
-        .mapPartitions(it => it.flatMap(f => readFooter(rootC, f)))).toDF()
+        .mapPartitions { it =>
+          val conf = new Configuration()
+          it.flatMap(f => readFooter(conf, rootC, f))
+        }).toDF()
   }
 
   /** Driver-side ColStat view — the PLANNING tier (maintenance dry-run
@@ -126,111 +131,92 @@ object StatsSidecar {
     val files = FsUtil.listParquet(root)
     if (files.isEmpty) return Nil
     spark.sparkContext.parallelize(files, footerTasks(files.size)).mapPartitions { it =>
+      val conf = new Configuration()
       it.flatMap { absFile =>
-        val in = HadoopInputFile.fromPath(
-          new HPath("file://" + absFile), new Configuration())
-        val reader = ParquetFileReader.open(in)
-        try reader.getFooter.getBlocks.asScala.toSeq.flatMap { blk =>
+        footer(conf, absFile).getBlocks.asScala.toSeq.flatMap { blk =>
           blk.getColumns.asScala.find(_.getPath.toDotString == column)
             .map(_.getBloomFilterOffset)
         }
-        finally reader.close()
       }
     }.collect().toSeq
   }
 
-  /** Per-file physical parquet schema fingerprints (the footer's
-    * MessageType rendered to its canonical string), read on EXECUTORS
-    * like [[collectDF]] — one distributed metadata pass instead of a
-    * driver job per file. Two files with equal fingerprints resolve to
-    * the same Spark schema under the same session confs, so callers
-    * (Maintenance.repairSchema) need only one driver-side schema
-    * resolution per DISTINCT fingerprint. The collect is
-    * file-count-sized — paths and schema strings, never data.
+  /** One data file's footer — the only place the management layer
+    * opens parquet files for metadata. The read options come from
+    * `conf`, so callers pass one configuration per driver call or
+    * executor task: `ParquetFileReader.open(inputFile)` alone builds a
+    * fresh one per file, which costs more than the footer read.
     */
-  def schemaFingerprints(spark: SparkSession,
-                         absFiles: Seq[String]): Map[String, String] = {
-    if (absFiles.isEmpty) return Map.empty
-    spark.sparkContext.parallelize(absFiles, footerTasks(absFiles.size)).mapPartitions { it =>
-      it.map { f =>
-        val in = HadoopInputFile.fromPath(
-          new HPath("file://" + f), new Configuration())
-        val reader = ParquetFileReader.open(in)
-        try f -> reader.getFooter.getFileMetaData.getSchema.toString
-        finally reader.close()
-      }
-    }.collect().toMap
+  private[sources] def footer(conf: Configuration, file: String): ParquetMetadata = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf),
+      HadoopReadOptions.builder(conf).build())
+    try reader.getFooter finally reader.close()
   }
 
-  private[sources] def readFooter(root: String, absFile: String): Seq[ColStat] = {
-    val conf = new Configuration()
-    val in = HadoopInputFile.fromPath(new HPath("file://" + absFile), conf)
-    val reader = ParquetFileReader.open(in)
-    try {
-      val rel = FsUtil.relativize(root, absFile)
-      reader.getFooter.getBlocks.asScala.toSeq.zipWithIndex.flatMap { case (blk, rg) =>
-        blk.getColumns.asScala.toSeq.map { cc =>
-          val name = cc.getPath.toDotString
-          val pt = cc.getPrimitiveType
-          val logical = pt.getLogicalTypeAnnotation
-          val stats = cc.getStatistics
-          val has = stats != null && stats.hasNonNullValue
-          val nulls = if (stats == null || stats.getNumNulls < 0) -1L else stats.getNumNulls
+  private[sources] def readFooter(conf: Configuration, root: String, absFile: String): Seq[ColStat] = {
+    val rel = FsUtil.relativize(root, absFile)
+    footer(conf, absFile).getBlocks.asScala.toSeq.zipWithIndex.flatMap { case (blk, rg) =>
+      blk.getColumns.asScala.toSeq.map { cc =>
+        val name = cc.getPath.toDotString
+        val pt = cc.getPrimitiveType
+        val logical = pt.getLogicalTypeAnnotation
+        val stats = cc.getStatistics
+        val has = stats != null && stats.hasNonNullValue
+        val nulls = if (stats == null || stats.getNumNulls < 0) -1L else stats.getNumNulls
 
-          // integral lanes go through Long EXACTLY; the double lane is a
-          // rounded convenience view (exact only below 2^53)
-          def ints(f: Any => Long): (Option[Long], Option[Long]) =
-            if (has) (Some(f(stats.genericGetMin)), Some(f(stats.genericGetMax))) else (None, None)
+        // integral lanes go through Long EXACTLY; the double lane is a
+        // rounded convenience view (exact only below 2^53)
+        def ints(f: Any => Long): (Option[Long], Option[Long]) =
+          if (has) (Some(f(stats.genericGetMin)), Some(f(stats.genericGetMax))) else (None, None)
 
-          val (typ, minInt, maxInt, minStr, maxStr) = pt.getPrimitiveTypeName match {
-            case INT32 =>
-              val lane = if (logical.isInstanceOf[DateLogicalTypeAnnotation]) "date" else "long"
-              val (mn, mx) = ints(_.asInstanceOf[Integer].toLong)
-              (lane, mn, mx, None, None)
-            case INT64 =>
-              logical match {
-                case ts: TimestampLogicalTypeAnnotation =>
-                  val toMicros: Long => Long = ts.getUnit match {
-                    case TimeUnit.MILLIS => v => v * 1000L
-                    case TimeUnit.MICROS => v => v
-                    case TimeUnit.NANOS => v => v / 1000L
-                  }
-                  val (mn, mx) = ints(v => toMicros(v.asInstanceOf[java.lang.Long]))
-                  ("timestamp", mn, mx, None, None)
-                case _ =>
-                  val (mn, mx) = ints(_.asInstanceOf[java.lang.Long].longValue())
-                  ("long", mn, mx, None, None)
-              }
-            case BOOLEAN =>
-              val (mn, mx) = ints(v => if (v.asInstanceOf[java.lang.Boolean]) 1L else 0L)
-              ("bool", mn, mx, None, None)
-            case FLOAT | DOUBLE =>
-              ("double", None, None, None, None)
-            case BINARY if logical.isInstanceOf[StringLogicalTypeAnnotation] =>
-              val (mn, mx) =
-                if (has)
-                  (Some(stats.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8),
-                    Some(stats.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8))
-                else (None, None)
-              ("string", None, None, mn, mx)
-            case other =>
-              (other.toString.toLowerCase, None, None, None, None)
-          }
-          val (minNum, maxNum) = pt.getPrimitiveTypeName match {
-            case FLOAT =>
-              val (mn, mx) = (if (has) Some(stats.genericGetMin.asInstanceOf[java.lang.Float].toDouble) else None,
-                if (has) Some(stats.genericGetMax.asInstanceOf[java.lang.Float].toDouble) else None)
-              (mn, mx)
-            case DOUBLE =>
-              (if (has) Some(stats.genericGetMin.asInstanceOf[java.lang.Double].doubleValue()) else None,
-                if (has) Some(stats.genericGetMax.asInstanceOf[java.lang.Double].doubleValue()) else None)
-            case _ => (minInt.map(_.toDouble), maxInt.map(_.toDouble))
-          }
-          ColStat(rel, rg, blk.getRowCount, blk.getTotalByteSize, name, typ,
-            cc.getValueCount, nulls, minNum, maxNum, minStr, maxStr, minInt, maxInt)
+        val (typ, minInt, maxInt, minStr, maxStr) = pt.getPrimitiveTypeName match {
+          case INT32 =>
+            val lane = if (logical.isInstanceOf[DateLogicalTypeAnnotation]) "date" else "long"
+            val (mn, mx) = ints(_.asInstanceOf[Integer].toLong)
+            (lane, mn, mx, None, None)
+          case INT64 =>
+            logical match {
+              case ts: TimestampLogicalTypeAnnotation =>
+                val toMicros: Long => Long = ts.getUnit match {
+                  case TimeUnit.MILLIS => v => v * 1000L
+                  case TimeUnit.MICROS => v => v
+                  case TimeUnit.NANOS => v => v / 1000L
+                }
+                val (mn, mx) = ints(v => toMicros(v.asInstanceOf[java.lang.Long]))
+                ("timestamp", mn, mx, None, None)
+              case _ =>
+                val (mn, mx) = ints(_.asInstanceOf[java.lang.Long].longValue())
+                ("long", mn, mx, None, None)
+            }
+          case BOOLEAN =>
+            val (mn, mx) = ints(v => if (v.asInstanceOf[java.lang.Boolean]) 1L else 0L)
+            ("bool", mn, mx, None, None)
+          case FLOAT | DOUBLE =>
+            ("double", None, None, None, None)
+          case BINARY if logical.isInstanceOf[StringLogicalTypeAnnotation] =>
+            val (mn, mx) =
+              if (has)
+                (Some(stats.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8),
+                  Some(stats.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8))
+              else (None, None)
+            ("string", None, None, mn, mx)
+          case other =>
+            (other.toString.toLowerCase, None, None, None, None)
         }
+        val (minNum, maxNum) = pt.getPrimitiveTypeName match {
+          case FLOAT =>
+            val (mn, mx) = (if (has) Some(stats.genericGetMin.asInstanceOf[java.lang.Float].toDouble) else None,
+              if (has) Some(stats.genericGetMax.asInstanceOf[java.lang.Float].toDouble) else None)
+            (mn, mx)
+          case DOUBLE =>
+            (if (has) Some(stats.genericGetMin.asInstanceOf[java.lang.Double].doubleValue()) else None,
+              if (has) Some(stats.genericGetMax.asInstanceOf[java.lang.Double].doubleValue()) else None)
+          case _ => (minInt.map(_.toDouble), maxInt.map(_.toDouble))
+        }
+        ColStat(rel, rg, blk.getRowCount, blk.getTotalByteSize, name, typ,
+          cc.getValueCount, nulls, minNum, maxNum, minStr, maxStr, minInt, maxInt)
       }
-    } finally reader.close()
+    }
   }
 
   /** The sidecar's schema is the fixed [[ColStat]] layout, so reads
@@ -303,9 +289,10 @@ object StatsSidecar {
           .getOrElse(Nil)
         val known = kept.map(_.file_path).toSet
         val rootC = FsUtil.stripScheme(root)
+        val conf = spark.sparkContext.hadoopConfiguration
         val freshRows = absFiles
           .filterNot(f => known.contains(FsUtil.relativize(root, f)))
-          .flatMap(f => readFooter(rootC, f))
+          .flatMap(f => readFooter(conf, rootC, f))
         (kept ++ freshRows).toDF()
       } else {
         val live = rel.toDF("file_path")

@@ -5,9 +5,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import graft.operators.{MaintenanceCleanupError, StagedRewriteException}
 
 /** The journaled copy-on-write swap behind every rewriting operator
@@ -125,8 +122,7 @@ object Swap {
   private def dropEmpty(ds: ParquetDataset, tmp: String): Long = {
     val conf = ds.spark.sparkContext.hadoopConfiguration
     FsUtil.listParquet(tmp).map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(f), conf))
-      val n = try reader.getRecordCount finally reader.close()
+      val n = StatsSidecar.footer(conf, f).getBlocks.asScala.map(_.getRowCount).sum
       if (n == 0) Files.delete(Paths.get(f))
       n
     }.sum

@@ -6,10 +6,9 @@ import org.apache.spark.sql.functions._
 /** Probe: repairSchema's schema-discovery cost vs file count
   * (round-12, r11 verdict #3 "Done" criterion). Builds N+1 tiny
   * parquet files (N uniform + 1 divergent so the plan is non-empty)
-  * and times `repairSchema(dryRun = true)` — the discovery phase is
-  * exactly what changed (per-file driver inference jobs → one
-  * executor-side footer pass + one driver inference per DISTINCT
-  * physical schema). Run against both code generations for the A/B.
+  * and times `repairSchema(dryRun = true)` — only the discovery phase:
+  * the per-file footer schemas `ParquetDataset` resolves. Run against
+  * two code generations for an A/B.
   *
   * Usage: RepairProbe [nFiles] [reps]
   */

@@ -1,10 +1,15 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Column ⇄ Expression bridge. Spark 4 made these converters
   * `private[sql]`; a shim package under org.apache.spark.sql is the
@@ -39,4 +44,17 @@ object Bridge {
                               ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
     ext.registerFunctions(
       spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry)
+
+  /** Spark's footer-to-schema rule under the settings `confs` (a
+    * session's `spark.conf.getAll`: plain strings, which an executor
+    * task can carry, unlike a `SQLConf`), as schema inference applies
+    * it: the Spark row metadata if the writer stored it, else the
+    * converted parquet schema; all nullable, as parquet reads are.
+    */
+  def footerSchema(confs: Map[String, String]): ParquetMetadata => StructType = {
+    val conf = new SQLConf
+    confs.foreach { case (k, v) => conf.setConfString(k, v) }
+    val converter = new ParquetToSparkSchemaConverter(conf)
+    m => ParquetFileFormat.readSchemaFromFooter(new Footer(null, m), converter).asNullable
+  }
 }

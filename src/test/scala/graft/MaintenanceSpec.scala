@@ -345,9 +345,9 @@ class MaintenanceSpec extends SparkSpecBase {
       .write.partitionBy("cat").mode("append").parquet(dir)
     Seq((3, "b", "x3")).toDF("id", "cat", "extra").coalesce(1)
       .write.partitionBy("cat").mode("append").parquet(dir)
-    // the dataset's single-footer schema (the first file by path, in
-    // cat=a) does not know the column the cat=b group carries
-    assert(!ds.df.columns.contains("extra"))
+    // the first file by path (in cat=a) does not know the column the
+    // cat=b group carries; the dataset's schema, from every footer, does
+    assert(ds.df.columns.contains("extra"))
     val plan = Maintenance.compactPartitions(ds)
     assert(plan.groups.map(_.partition) == Seq("cat=b"))
     assert(ds.files.count(_.contains("cat=b")) == 1)

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import graft.plans.ScanPruner
 import graft.sources._
@@ -128,25 +124,6 @@ class ScanPrunerSpec extends SparkSpecBase {
       .coalesce(1).write.mode("append").parquet(ds.path)
     assert(ds.pruneFiles("id > 500").size == 1)
     assert(ds.scan("id > 500").count() == 1)
-  }
-
-  /** Spark jobs the calling thread launches inside `f`. */
-  private def jobsLaunched(f: => Any): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.spec.tag") == tag)
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.spec.tag", tag)
-    try { f; ListenerBusDrain(sc); n.get }
-    finally {
-      sc.setLocalProperty("graft.spec.tag", null)
-      sc.removeSparkListener(listener)
-    }
   }
 
   /** scan(p) filtered by p holds exactly the rows of df.filter(p). */

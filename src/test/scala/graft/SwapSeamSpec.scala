@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards the one-swap seam: only `sources/Swap.scala` (and `FsUtil`,
-  * which implements promote) may stage, promote or observe counts in
-  * the management layer, so a second copy of the copy-on-write swap
-  * cannot be forked back into an operator.
+/** Guards the management layer's seams: only `sources/Swap.scala`
+  * (and `FsUtil`, which implements promote) may stage, promote or
+  * observe counts, so a second copy of the copy-on-write swap cannot be
+  * forked back into an operator; and only `ParquetDataset` reads a
+  * dataset's files by path, so every reader shares its one schema.
   */
 class SwapSeamSpec extends AnyFunSuite {
 
@@ -19,17 +20,31 @@ class SwapSeamSpec extends AnyFunSuite {
   private def code(text: String): String =
     text.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
 
-  test("only the swap module stages, promotes or observes counts") {
+  /** `tokens` found in the code of the management layer's files
+    * other than `allowed`.
+    */
+  private def offenders(tokens: Seq[String], allowed: Set[String]): Seq[String] = {
     val files = Seq("operators", "sources").flatMap { d =>
       val st = Files.list(Paths.get("src/main/scala/graft", d))
       try st.iterator().asScala.toSeq finally st.close()
     }.filter(_.toString.endsWith(".scala"))
     assert(files.exists(_.getFileName.toString == "Merge.scala"), "sources not found")
-    val offenders = for {
-      f <- files if !Set("Swap.scala", "FsUtil.scala")(f.getFileName.toString)
+    for {
+      f <- files if !allowed(f.getFileName.toString)
       text = code(Files.readString(f))
-      token <- forbidden if text.contains(token)
+      token <- tokens if text.contains(token)
     } yield s"${f.getFileName}: $token"
-    assert(offenders.isEmpty, offenders.mkString("; "))
+  }
+
+  test("only the swap module stages, promotes or observes counts") {
+    val found = offenders(forbidden, Set("Swap.scala", "FsUtil.scala"))
+    assert(found.isEmpty, found.mkString("; "))
+  }
+
+  test("only ParquetDataset reads a dataset's files by path") {
+    // a bare read infers its schema from one footer; a basePath read
+    // picks its own; both bypass the dataset's one schema
+    val found = offenders(Seq("read.parquet(", "\"basePath\""), Set("ParquetDataset.scala"))
+    assert(found.isEmpty, found.mkString("; "))
   }
 }

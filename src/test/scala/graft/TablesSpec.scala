@@ -78,6 +78,27 @@ class TablesSpec extends SparkSpecBase {
     assert(reread.select("o_extra").collect().map(_.getLong(0)).toSeq == Seq(9L))
   }
 
+  test("load reads a table regenerated with the same directory mtime in its new schema") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tables-same-mtime").toString
+    val p = s"$dir/orders.parquet"
+    Seq((1L, "a")).toDF("o_orderkey", "o_comment").write.mode("overwrite").parquet(p)
+    assert(Tables.load(spark, dir, "orders").columns.toSeq == Seq("o_orderkey", "o_comment"))
+    val mtime = java.nio.file.Files.getLastModifiedTime(java.nio.file.Paths.get(p))
+    Seq((2L, "b", 9L)).toDF("o_orderkey", "o_comment", "o_extra")
+      .write.mode("overwrite").parquet(p)
+    java.nio.file.Files.setLastModifiedTime(java.nio.file.Paths.get(p), mtime)
+    val reread = Tables.load(spark, dir, "orders")
+    assert(reread.select("o_extra").collect().map(_.getLong(0)).toSeq == Seq(9L))
+  }
+
+  test("a first load launches no Spark job") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tables-jobs").toString
+    Seq((1L, "a")).toDF("o_orderkey", "o_comment").write.parquet(s"$dir/orders.parquet")
+    assert(jobsLaunched(Tables.load(spark, dir, "orders")) == 0)
+  }
+
   test("partitionBy's source pin is owned by the memo LRU") {
     import spark.implicits._
     val df = Seq(("x", 1), ("y", 2), ("x", 3)).toDF("cat", "v")
