@@ -260,15 +260,14 @@ object Lifecycle {
         .orderBy("o_orderstatus")
     },
 
-    // q108 under OBJECT-STORE rename semantics (round-8): the same
-    // fragment→compact→read-back gate, but the swap runs with
-    // graft.fs.rename=degraded — per-file copy+delete instead of
-    // ATOMIC_MOVE, the s3a degradation the reference documents as
-    // best-effort (performance.md:127-131). A completed degraded
-    // compaction must be value-identical to the atomic one, so the
-    // oracle is the same direct rollup over the source rows; the
-    // failure-window half of the contract (no row loss, recovery
-    // details) is ObjectStoreContractSpec's chaos-hook laws.
+    // q108's fragment→compact→read-back gate under the object-store
+    // contract the reference documents as best-effort
+    // (performance.md:127-131). ObjectStoreContractSpec runs this
+    // compaction on a copy+delete-rename filesystem (the s3a
+    // semantics) and pins that a completed swap there is
+    // value-identical to an atomic one, so the oracle is the same
+    // direct rollup over the source rows; the spec also holds the
+    // failure-window half (no row loss, recovery details).
     "q472_degraded_compact" -> { (s, d) =>
       val dir = tmpDir("q472")
       val src = Tables.orders(s, d).filter("o_orderkey % 5 = 0")
@@ -278,13 +277,10 @@ object Lifecycle {
         WriteConfig(partitionBy = Seq("o_orderstatus"), maxRowsPerFile = frag))
       val ds = new ParquetDataset(s, dir)
       val before = ds.files.size
-      sys.props("graft.fs.rename") = "degraded"
-      try {
-        val plan = Maintenance.compactPartitions(ds)
-        require(plan.groups.nonEmpty, s"q472: nothing planned over $before files")
-      } finally sys.props.remove("graft.fs.rename")
+      val plan = Maintenance.compactPartitions(ds)
+      require(plan.groups.nonEmpty, s"q472: nothing planned over $before files")
       require(ds.files.size < before,
-        s"q472: degraded compaction did not shrink file count " +
+        s"q472: compaction did not shrink file count " +
           s"($before -> ${ds.files.size})")
       ds.df.groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),

@@ -20,7 +20,10 @@ import graft.plans.ScanPruner
   */
 final class ParquetDataset(val spark: SparkSession, rawPath: String) {
 
-  val path: String = FsUtil.stripScheme(rawPath).stripSuffix("/")
+  /** The root, named as [[files]] name its data files: a plain path on
+    * `file:`, the URI on any other scheme.
+    */
+  val path: String = FsUtil.name(rawPath)
 
   /** Physical data files, absolute paths — authoritative (ADR 0001). */
   def files: Seq[String] = FsUtil.listParquet(path)
@@ -200,8 +203,11 @@ object ParquetDataset {
     }
     if (files.size <= StatsSidecar.SmallSidecarFiles)
       read(spark.sparkContext.hadoopConfiguration, files.iterator).toSeq
-    else spark.sparkContext.parallelize(files, StatsSidecar.footerTasks(files.size))
-      .mapPartitions(it => read(new Configuration(), it)).collect().toSeq
+    else {
+      val hadoop = StatsSidecar.taskConf(spark)
+      spark.sparkContext.parallelize(files, StatsSidecar.footerTasks(files.size))
+        .mapPartitions(it => read(hadoop.value, it)).collect().toSeq
+    }
   }
 }
 

@@ -13,6 +13,7 @@ import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotatio
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.util.SerializableConfiguration
 
 /** One row of the stats sidecar: file × row-group × column min/max
   * statistics — the Spark-native replacement for the reference's
@@ -59,8 +60,8 @@ object StatsSidecar {
   /** Fast-path bounds for [[update]]: a sidecar within BOTH limits is
     * reconciled driver-side (one tiny local-relation write) instead of
     * paying the distributed reconcile's per-call fixed cost. The file
-    * bound is MEASURED, not chosen (round-11 SidecarProbe sweep at
-    * 256/512/1024/2048 files, min of 9 reps): the fast path wins at
+    * bound is MEASURED, not chosen (the archived sweep in docs/SCALE.md
+    * at 256/512/1024/2048 files, min of 9 reps): the fast path wins at
     * every size through 2048 (276–305 ms vs the distributed path's
     * 409–444 ms fixed cost) with a ~16 µs/file slope, so the wall
     * crossover extrapolates to ~10⁴ files — far above this bound; the
@@ -72,12 +73,9 @@ object StatsSidecar {
     */
   def SmallSidecarFiles: Int =
     sys.props.get("graft.sidecar.small.files").map(_.toInt).getOrElse(2048)
-  def SmallSidecarBytes: Long =
-    sys.props.get("graft.sidecar.small.bytes").map(_.toLong)
-      .getOrElse(16L * 1024 * 1024)
+  val SmallSidecarBytes: Long = 16L * 1024 * 1024
 
-  def sidecarPath(root: String): String =
-    FsUtil.stripScheme(root).stripSuffix("/") + "/" + SidecarName
+  def sidecarPath(root: String): String = root.stripSuffix("/") + "/" + SidecarName
 
   /** Footer-read task count: one task per ~64 files once the listing
     * outgrows 32 tasks. Footer reads are small metadata I/O, and a task
@@ -98,12 +96,12 @@ object StatsSidecar {
   def collectDF(spark: SparkSession, root: String, absFiles: Seq[String]): DataFrame = {
     import spark.implicits._
     if (absFiles.isEmpty) return spark.emptyDataset[ColStat].toDF()
-    val rootC = FsUtil.stripScheme(root)
+    val hadoop = taskConf(spark)
     spark.createDataset(
       spark.sparkContext.parallelize(absFiles, footerTasks(absFiles.size))
         .mapPartitions { it =>
-          val conf = new Configuration()
-          it.flatMap(f => readFooter(conf, rootC, f))
+          val conf = hadoop.value
+          it.flatMap(f => readFooter(conf, root, f))
         }).toDF()
   }
 
@@ -130,8 +128,9 @@ object StatsSidecar {
                          column: String): Seq[Long] = {
     val files = FsUtil.listParquet(root)
     if (files.isEmpty) return Nil
+    val hadoop = taskConf(spark)
     spark.sparkContext.parallelize(files, footerTasks(files.size)).mapPartitions { it =>
-      val conf = new Configuration()
+      val conf = hadoop.value
       it.flatMap { absFile =>
         footer(conf, absFile).getBlocks.asScala.toSeq.flatMap { blk =>
           blk.getColumns.asScala.find(_.getPath.toDotString == column)
@@ -140,6 +139,14 @@ object StatsSidecar {
       }
     }.collect().toSeq
   }
+
+  /** The session's Hadoop configuration for footer-reading tasks: a
+    * fresh `Configuration` there lacks the `spark.hadoop.*` settings,
+    * such as a scheme's filesystem class or an object store's
+    * endpoint and credentials.
+    */
+  private[sources] def taskConf(spark: SparkSession) =
+    new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
 
   /** One data file's footer — the only place the management layer
     * opens parquet files for metadata. The read options come from
@@ -264,13 +271,7 @@ object StatsSidecar {
     // file PATHS — which the driver already holds from the listing.
     val rel = absFiles.map(f => FsUtil.relativize(root, f))
     val sidecarBytes =
-      if (FsUtil.exists(p)) {
-        val st = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-        try st.iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .map(java.nio.file.Files.size).sum
-        finally st.close()
-      } else 0L
+      if (FsUtil.exists(p)) FsUtil.fs(p).getContentSummary(new HPath(p)).getLength else 0L
     val df: DataFrame =
       if (absFiles.size <= SmallSidecarFiles &&
           sidecarBytes <= SmallSidecarBytes) {
@@ -288,11 +289,10 @@ object StatsSidecar {
           .map(rows(_).toSeq.filter(cs => liveSet(cs.file_path)))
           .getOrElse(Nil)
         val known = kept.map(_.file_path).toSet
-        val rootC = FsUtil.stripScheme(root)
         val conf = spark.sparkContext.hadoopConfiguration
         val freshRows = absFiles
           .filterNot(f => known.contains(FsUtil.relativize(root, f)))
-          .flatMap(f => readFooter(conf, rootC, f))
+          .flatMap(f => readFooter(conf, root, f))
         (kept ++ freshRows).toDF()
       } else {
         val live = rel.toDF("file_path")
@@ -316,7 +316,7 @@ object StatsSidecar {
     val shards = math.max(1, absFiles.size / 4096)
     df.coalesce(shards).write.mode("overwrite").parquet(tmp)
     FsUtil.deleteRecursively(p)
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmp), java.nio.file.Paths.get(p))
+    FsUtil.rename(tmp, p)
     spark.read.schema(colStatSchema).parquet(p)
   }
 }

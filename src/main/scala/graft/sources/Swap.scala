@@ -1,17 +1,19 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.charset.StandardCharsets.UTF_8
 
 import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
 
 import graft.operators.{MaintenanceCleanupError, StagedRewriteException}
 
 /** The journaled copy-on-write swap behind every rewriting operator
   * (Merge, Delete, Maintenance) — the reference's PartialWriteError
   * recovery contract (pydala/io.py:41-64, pydala/dataset.py:172-203)
-  * in one place. A plain filesystem has no multi-file atomic rename, so
-  * one swap runs:
+  * in one place. No filesystem has a multi-file atomic rename, so one
+  * swap runs, every step on the dataset's Hadoop `FileSystem` through
+  * [[FsUtil]] (a `false` from rename or delete throws):
   *
   *  1. clear the staging dir `_tmp_<op>`;
   *  2. stage: the caller writes the replacement files under it, laid
@@ -42,7 +44,10 @@ import graft.operators.{MaintenanceCleanupError, StagedRewriteException}
   * delete the journaled originals, drop the journal. Replay is
   * idempotent because the journal is only written once the staged
   * files are complete, and recovery never re-derives anything from the
-  * (possibly half-swapped) data files.
+  * (possibly half-swapped) data files. The filesystem needs only that
+  * one renamed file lands whole: atomic rename on `file:`/hdfs and an
+  * object store's copy+delete both do, and a listing may see a promote
+  * half done, which the contract above already allows.
   */
 object Swap {
 
@@ -69,16 +74,16 @@ object Swap {
         throw new StagedRewriteException(originals,
           s"staged $op rewrite failed before swap; dataset unchanged: ${e.getMessage}", e)
       }
-    // written beside the staged files, then moved into place: a torn
+    // written beside the staged files, then renamed into place: a torn
     // journal would retire only some originals on replay
-    val jp = Paths.get(journalPath(root, op))
-    val draft = Paths.get(tmp, "_journal")
-    Files.createDirectories(draft.getParent)
-    Files.write(draft, originals.map(_ + "\n").mkString.getBytes(StandardCharsets.UTF_8))
-    Files.move(draft, jp, StandardCopyOption.ATOMIC_MOVE)
+    val jp = journalPath(root, op)
+    val draft = s"$tmp/_journal"
+    val out = FsUtil.fs(draft).create(new Path(draft), true)
+    try out.write(originals.map(_ + "\n").mkString.getBytes(UTF_8)) finally out.close()
+    FsUtil.rename(draft, jp)
     val landed = FsUtil.promote(tmp, root)
     retire(root, originals)
-    Files.delete(jp)
+    FsUtil.delete(root, Seq(jp))
     ds.spark.catalog.refreshByPath(root)
     ds.refreshSchema()
     Result(landed.map(FsUtil.relativize(root, _)), rows)
@@ -92,11 +97,7 @@ object Swap {
     */
   def recover(ds: ParquetDataset): Boolean = {
     val root = ds.path
-    if (!Files.isDirectory(Paths.get(root))) return false
-    val names = {
-      val st = Files.list(Paths.get(root))
-      try st.iterator().asScala.map(_.getFileName.toString).toSeq finally st.close()
-    }
+    val names = FsUtil.children(root)
     val pending = names.collect { case Journal(op) => op }
     names.foreach {
       case n @ Staging(op) if !pending.contains(op) => FsUtil.deleteRecursively(s"$root/$n")
@@ -104,10 +105,13 @@ object Swap {
     }
     pending.foreach { op =>
       val jp = journalPath(root, op)
-      val originals = Files.readAllLines(Paths.get(jp)).asScala.toSeq.filter(_.nonEmpty)
+      val in = FsUtil.fs(jp).open(new Path(jp))
+      val originals =
+        try new String(in.readAllBytes(), UTF_8).split("\n").toSeq.filter(_.nonEmpty)
+        finally in.close()
       if (FsUtil.exists(stagingPath(root, op))) FsUtil.promote(stagingPath(root, op), root)
       FsUtil.delete(root, originals.map(r => s"$root/$r"))
-      Files.delete(Paths.get(jp))
+      FsUtil.delete(root, Seq(jp))
     }
     if (pending.isEmpty) return false
     ds.spark.catalog.refreshByPath(root)
@@ -123,7 +127,7 @@ object Swap {
     val conf = ds.spark.sparkContext.hadoopConfiguration
     FsUtil.listParquet(tmp).map { f =>
       val n = StatsSidecar.footer(conf, f).getBlocks.asScala.map(_.getRowCount).sum
-      if (n == 0) Files.delete(Paths.get(f))
+      if (n == 0) FsUtil.delete(tmp, Seq(f))
       n
     }.sum
   }

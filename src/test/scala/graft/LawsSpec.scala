@@ -225,16 +225,12 @@ class LawsSpec extends SparkSpecBase {
         if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(d)
         else java.nio.file.Files.copy(p, d)
       }
-      new ParquetDataset(spark, to)
+      new ParquetDataset(spark, ObjectStoreFs.path(to))
     }
     def state(ds: ParquetDataset): Seq[String] = {
       val d = ds.df
       d.select(d.columns.sorted.map(c => col(c).cast("string")): _*)
         .collect().map(_.mkString("|")).toSeq.sorted
-    }
-    def withProps[T](props: (String, String)*)(body: => T): T = {
-      props.foreach { case (k, v) => sys.props(k) = v }
-      try body finally props.foreach { case (k, _) => sys.props.remove(k) }
     }
     val upsertSrc = Seq(4, 105, 17, 999).map(k => (k, s"new$k", (k % 100) % 3, 0))
       .toDF("k", "v", "p", "q")
@@ -257,14 +253,14 @@ class LawsSpec extends SparkSpecBase {
       val faults: Seq[(String, ParquetDataset => Any)] = Seq(
         ("promote", (ds: ParquetDataset) => {
           val e = intercept[Exception] {
-            withProps("graft.fs.rename" -> "degraded", "graft.fs.rename.failAfter" -> "1")(op(ds))
+            ObjectStoreFs.failingAfter(ObjectStoreFs.Promote, 1)(op(ds))
           }
           assert(e.isInstanceOf[FsUtil.PromoteFailedException] ||
             (name == "upsert" && e.isInstanceOf[PartialMergeError]), s"$name: $e")
         }),
         ("cleanup", (ds: ParquetDataset) => {
           val e = intercept[Exception] {
-            withProps("graft.fs.delete.failAfter" -> "1")(op(ds))
+            ObjectStoreFs.failingAfter(ObjectStoreFs.Retire, 1)(op(ds))
           }
           assert(e.isInstanceOf[MaintenanceCleanupError] ||
             (name == "upsert" && e.isInstanceOf[MergeCleanupError]), s"$name: $e")
@@ -276,7 +272,7 @@ class LawsSpec extends SparkSpecBase {
         val got = state(ds)
         assert(got == before || got == after,
           s"$name/$point: neither before nor after (${got.size} rows)")
-        val leftovers = new java.io.File(ds.path).list()
+        val leftovers = new java.io.File(FsUtil.stripScheme(ds.path)).list()
           .filter(n => n.startsWith("_tmp_") || n.endsWith("_journal"))
         assert(leftovers.isEmpty, s"$name/$point left ${leftovers.toSeq}")
         val side = ds.stats.get.select("file_path").distinct().collect().map(_.getString(0)).toSet

@@ -359,13 +359,14 @@ class MaintenanceSpec extends SparkSpecBase {
   test("repairSchema: a failed original-delete after promote is loud, " +
     "and recovery retires the original") {
     val dir = tmpDir("rep_clean")
-    val ds = new ParquetDataset(spark, dir)
+    val ds = new ParquetDataset(spark, ObjectStoreFs.path(dir))
     Seq((1, 1.5f)).toDF("id", "v").coalesce(1).write.mode("append").parquet(dir)
     Seq((2L, 2.5)).toDF("id", "v").coalesce(1).write.mode("append").parquet(dir)
-    sys.props("graft.fs.delete.failAfter") = "0"
-    val ex = try intercept[graft.operators.MaintenanceCleanupError] {
-      Maintenance.repairSchema(ds)
-    } finally sys.props.remove("graft.fs.delete.failAfter")
+    val ex = ObjectStoreFs.failingAfter(ObjectStoreFs.Retire, 0) {
+      intercept[graft.operators.MaintenanceCleanupError] {
+        Maintenance.repairSchema(ds)
+      }
+    }
     assert(ex.remainingOriginals.size == 1, ex.remainingOriginals)
     assert(graft.operators.Delete.recover(ds))
     assert(ds.df.select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L))

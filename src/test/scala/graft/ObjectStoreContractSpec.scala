@@ -3,20 +3,22 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.{Delete, Maintenance}
 import graft.sources._
+import ObjectStoreFs.{Promote, Retire}
 
-/** The object-store (rename-degraded) write contract, matching the
-  * reference's documented best-effort guarantee for fsspec object
-  * stores (docs/user-guide/performance.md:127-131: staged output is
-  * validated before copying, no atomic reader visibility, no
-  * automatic rollback, "failed results retain recovery details for
-  * operator cleanup"). FsUtil's degraded mode replaces per-file
-  * ATOMIC_MOVE with copy+delete — s3a rename semantics — and the
-  * chaos hook `graft.fs.rename.failAfter` fails the swap mid-flight
-  * through the REAL promote path.
+/** The object-store write contract, matching the reference's
+  * documented best-effort guarantee for fsspec object stores
+  * (docs/user-guide/performance.md:127-131: staged output is validated
+  * before copying, no atomic reader visibility, no automatic rollback,
+  * "failed results retain recovery details for operator cleanup").
+  * Every dataset here lives on [[ObjectStoreFs]] (`objstore:`), whose
+  * rename is copy+delete — s3a's semantics — and whose failure hook
+  * fails a swap mid-flight through the real promote and cleanup paths.
+  * In the test names, "degraded rename" is that copy+delete rename and
+  * "atomic" the default `file:` filesystem.
   *
   * The pinned contract, on every swap site (Maintenance.compact*,
   * Delete.where via recover):
-  *   1. a COMPLETED degraded swap is value-identical to the atomic one;
+  *   1. a COMPLETED copy+delete swap is value-identical to the atomic one;
   *   2. a failure mid-swap never loses or tears rows — originals are
   *      deleted only after promote returns, so the worst state is
   *      duplicate visibility of rewritten rows;
@@ -27,56 +29,49 @@ class ObjectStoreContractSpec extends SparkSpecBase {
 
   import spark.implicits._
 
-  private def degraded[T](body: => T): T = {
-    sys.props("graft.fs.rename") = "degraded"
-    try body finally sys.props.remove("graft.fs.rename")
-  }
-
-  private def failingAfter[T](n: Int)(body: => T): T = {
-    sys.props("graft.fs.rename.failAfter") = n.toString
-    try body finally sys.props.remove("graft.fs.rename.failAfter")
-  }
+  /** A fresh directory, named on the object store. */
+  private def osDir(prefix: String): String = ObjectStoreFs.path(tmpDir(prefix))
 
   test("degraded-rename compaction completes and is value-identical " +
     "to the atomic path") {
-    val dir = tmpDir("osc_cmp")
+    val dir = osDir("osc_cmp")
     val ds = new ParquetDataset(spark, dir)
     (1 to 6).foreach { i =>
       Seq((i, s"v$i")).toDF("id", "v").coalesce(1)
         .write.mode("append").parquet(dir)
     }
     assert(ds.files.size == 6)
-    degraded { Maintenance.compactByRows(ds, maxRowsPerFile = 1000) }
+    Maintenance.compactByRows(ds, maxRowsPerFile = 1000)
     assert(ds.files.size == 1)
     assert(ds.df.select("id", "v").collect().map(r => (r.getInt(0), r.getString(1)))
       .toSet == (1 to 6).map(i => (i, s"v$i")).toSet)
   }
 
   test("degraded-rename row-level delete keeps the Delete contract") {
-    val dir = tmpDir("osc_del")
+    val dir = osDir("osc_del")
     (1 to 100).map(i => (i.toLong, i % 5)).toDF("k", "m")
       .repartition(4).write.mode("append").parquet(dir)
     val ds = new ParquetDataset(spark, dir)
-    val res = degraded { Delete.where(ds, "m = 0") }
+    val res = Delete.where(ds, "m = 0")
     assert(res.deleted == 20)
     assert(ds.df.filter("m = 0").count() == 0)
     assert(ds.df.count() == 80)
   }
 
   test("mid-swap failure loses no rows and reports recovery details") {
-    val dir = tmpDir("osc_fail")
+    val dir = osDir("osc_fail")
     val ds = new ParquetDataset(spark, dir)
     // 6 single-row files in one group → compaction stages a rewrite;
     // maxRowsPerFile=2 forces MULTIPLE staged output files so the
-    // chaos hook can land between them
+    // failure hook can land between them
     (1 to 6).foreach { i =>
       Seq((i, s"v$i")).toDF("id", "v").coalesce(1)
         .write.mode("append").parquet(dir)
     }
     val ex = intercept[FsUtil.PromoteFailedException] {
-      degraded { failingAfter(1) {
+      ObjectStoreFs.failingAfter(Promote, 1) {
         Maintenance.compactByRows(ds, maxRowsPerFile = 2)
-      } }
+      }
     }
     // recovery details: exactly one staged file landed, the rest are
     // named as still staged
@@ -94,12 +89,12 @@ class ObjectStoreContractSpec extends SparkSpecBase {
 
   test("degraded-rename merge upsert completes and is value-identical " +
     "to the atomic path") {
-    val dir = tmpDir("osc_mrg")
+    val dir = osDir("osc_mrg")
     (1 to 10).map(i => (i.toLong, s"old$i")).toDF("k", "v")
       .repartition(4).write.mode("append").parquet(dir)
     val ds = new ParquetDataset(spark, dir)
     val src = Seq((3L, "new3"), (7L, "new7"), (11L, "new11")).toDF("k", "v")
-    val res = degraded { operators.Merge(ds, src, Seq("k"), "upsert") }
+    val res = operators.Merge(ds, src, Seq("k"), "upsert")
     assert(res.updated == 2 && res.inserted == 1)
     val got = ds.df.as[(Long, String)].collect().toMap
     assert(got(3L) == "new3" && got(7L) == "new7" && got(11L) == "new11")
@@ -108,10 +103,10 @@ class ObjectStoreContractSpec extends SparkSpecBase {
 
   test("mid-swap merge failure preserves originals, raises " +
     "PartialMergeError with recovery details, and never refreshes metadata") {
-    val dir = tmpDir("osc_mrgfail")
+    val dir = osDir("osc_mrgfail")
     // one row per file so the upsert's rewrite stages MULTIPLE output
-    // files (every file matches a source key) and the chaos hook can
-    // land between the per-file moves
+    // files (every file matches a source key) and the failure hook can
+    // land between the per-file renames
     (1 to 4).foreach { i =>
       Seq((i.toLong, s"old$i")).toDF("k", "v").coalesce(1)
         .write.mode("append").parquet(dir)
@@ -124,9 +119,9 @@ class ObjectStoreContractSpec extends SparkSpecBase {
     val src = (1 to 4).map(i => (i.toLong, s"new$i")).toDF("k", "v")
       .repartition(4)
     val ex = intercept[operators.PartialMergeError] {
-      degraded { failingAfter(1) {
+      ObjectStoreFs.failingAfter(Promote, 1) {
         operators.Merge(ds, src, Seq("k"), "upsert")
-      } }
+      }
     }
     // recovery details: what landed, what's still staged, which
     // originals were affected
@@ -150,8 +145,8 @@ class ObjectStoreContractSpec extends SparkSpecBase {
   }
 
   test("atomic-mode promote is unaffected by the chaos hook being absent") {
-    // guard against the degraded branch leaking into the default path:
-    // byte-identical behavior to round-7 promote (move, originals gone)
+    // promote on the default (file:) filesystem, no hook armed: each
+    // staged file is renamed into place and gone from staging
     val src = tmpDir("osc_src")
     val dst = tmpDir("osc_dst")
     Seq((1, "a")).toDF("id", "v").coalesce(1).write.mode("append").parquet(src)
@@ -166,7 +161,7 @@ class ObjectStoreContractSpec extends SparkSpecBase {
   test("post-promote cleanup failure raises MergeCleanupError with the " +
     "not-yet-deleted originals; rows duplicated, never lost; cleanup " +
     "completes the merge") {
-    val dir = tmpDir("osc_mrgclean")
+    val dir = osDir("osc_mrgclean")
     (1 to 4).foreach { i =>
       Seq((i.toLong, s"old$i")).toDF("k", "v").coalesce(1)
         .write.mode("append").parquet(dir)
@@ -174,10 +169,11 @@ class ObjectStoreContractSpec extends SparkSpecBase {
     val ds = new ParquetDataset(spark, dir)
     val src = (1 to 4).map(i => (i.toLong, s"new$i")).toDF("k", "v")
       .repartition(4)
-    sys.props("graft.fs.delete.failAfter") = "1"
-    val ex = try intercept[operators.MergeCleanupError] {
-      operators.Merge(ds, src, Seq("k"), "update")
-    } finally sys.props.remove("graft.fs.delete.failAfter")
+    val ex = ObjectStoreFs.failingAfter(Retire, 1) {
+      intercept[operators.MergeCleanupError] {
+        operators.Merge(ds, src, Seq("k"), "update")
+      }
+    }
     // promote succeeded: the rewrite is durable and complete
     assert(ex.result.updated == 4, ex.getMessage)
     assert(ex.remainingOriginals.size == 3, ex.remainingOriginals)
@@ -197,16 +193,16 @@ class ObjectStoreContractSpec extends SparkSpecBase {
 
   test("parallel promote moves a many-file staging wave completely, " +
     "in listing order, under both modes") {
-    for (mode <- Seq("atomic", "degraded")) {
-      val src = tmpDir(s"osc_par_src_$mode")
-      val dst = tmpDir(s"osc_par_dst_$mode")
+    for (scheme <- Seq("file", "objstore")) {
+      def dir(prefix: String) =
+        if (scheme == "file") tmpDir(prefix) else osDir(prefix)
+      val src = dir(s"osc_par_src_$scheme")
+      val dst = dir(s"osc_par_dst_$scheme")
       (1 to 40).map(i => (i, s"p${i % 4}")).toDF("id", "part")
         .repartition(40).write.partitionBy("part").mode("append").parquet(src)
       val staged = FsUtil.listParquet(src)
       assert(staged.size >= 30, s"want a wide wave, got ${staged.size}")
-      val moved =
-        if (mode == "degraded") degraded { FsUtil.promote(src, dst) }
-        else FsUtil.promote(src, dst)
+      val moved = FsUtil.promote(src, dst)
       assert(moved.size == staged.size)
       // listing order preserved slot-for-slot
       staged.zip(moved).foreach { case (s0, d0) =>
@@ -220,16 +216,17 @@ class ObjectStoreContractSpec extends SparkSpecBase {
 
   test("post-promote cleanup failure in compaction raises " +
     "MaintenanceCleanupError with the undeleted originals") {
-    val dir = tmpDir("osc_cmpclean")
+    val dir = osDir("osc_cmpclean")
     val ds = new ParquetDataset(spark, dir)
     (1 to 4).foreach { i =>
       Seq((i, s"v$i")).toDF("id", "v").coalesce(1)
         .write.mode("append").parquet(dir)
     }
-    sys.props("graft.fs.delete.failAfter") = "1"
-    val ex = try intercept[operators.MaintenanceCleanupError] {
-      Maintenance.compactByRows(ds, maxRowsPerFile = 1000)
-    } finally sys.props.remove("graft.fs.delete.failAfter")
+    val ex = ObjectStoreFs.failingAfter(Retire, 1) {
+      intercept[operators.MaintenanceCleanupError] {
+        Maintenance.compactByRows(ds, maxRowsPerFile = 1000)
+      }
+    }
     assert(ex.remainingOriginals.size == 3, ex.remainingOriginals)
     // rewrite durable + duplicates visible, rows never lost
     spark.catalog.refreshByPath(dir)

@@ -21,6 +21,11 @@ object SparkTestSession {
       .config("spark.sql.warehouse.dir",
         Files.createTempDirectory("graft-warehouse").toString)
       .config("spark.ui.enabled", "false")
+      // the local disk with object-store rename semantics, as objstore:;
+      // uncached, so that, as on a cluster's executors, a task finds it
+      // only through the Hadoop settings shipped to it
+      .config("spark.hadoop.fs.objstore.impl", classOf[ObjectStoreFs].getName)
+      .config("spark.hadoop.fs.objstore.impl.disable.cache", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
