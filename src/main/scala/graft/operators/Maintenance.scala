@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -67,16 +69,33 @@ object Maintenance {
   /** Swap tag: stages under `_tmp_maint`. */
   private val TmpOp = "maint"
 
-  /** rows per data file, from footers (metadata-only). Aggregated on
-    * executors; only the file-sized (path, rows) frame is collected —
-    * never the file×row-group×column stats rows (round-9 scale fix).
+  /** What planning reads of one data file's footer: its rows and, for
+    * a `tsCol`, whether the file has that column chunk and the chunk's
+    * min and max over the row groups that carry both.
     */
+  private final case class FileFacts(rel: String, rows: Long, chunk: Boolean,
+                                     range: Option[(Long, Long)])
+
+  /** Every data file's [[FileFacts]], in listing order, from one footer
+    * pass (`StatsSidecar.footers`: metadata-only, no Spark job up to
+    * its driver bound). Bounds come from the exact bigint lanes: the
+    * double lanes round past 2^53 (nanosecond timestamps), and a
+    * rounded window bound could misassign files.
+    */
+  private def footerFacts(ds: ParquetDataset, tsCol: Option[String] = None): Seq[FileFacts] = {
+    val root = ds.path
+    StatsSidecar.footers(ds.spark, ds.files) { (f, m) =>
+      val ts = tsCol.toSeq.flatMap(c => StatsSidecar.colStats(root, f, m).filter(_.column == c))
+      val lo = ts.flatMap(s => s.min_int.orElse(s.min_num.map(_.toLong)))
+      val hi = ts.flatMap(s => s.max_int.orElse(s.max_num.map(_.toLong)))
+      FileFacts(FsUtil.relativize(root, f), m.getBlocks.asScala.map(_.getRowCount).sum,
+        ts.nonEmpty, lo.minOption.zip(hi.maxOption))
+    }
+  }
+
+  /** rows per data file with rows (metadata-only). */
   private def fileRows(ds: ParquetDataset): Map[String, Long] =
-    StatsSidecar.collectDF(ds.spark, ds.path, ds.files)
-      .select("file_path", "row_group", "rg_num_rows").distinct()
-      .groupBy("file_path")
-      .agg(org.apache.spark.sql.functions.sum("rg_num_rows").as("rows"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    footerFacts(ds).collect { case f if f.rows > 0 => f.rel -> f.rows }.toMap
 
   private def partitionOf(rel: String): String = {
     val i = rel.lastIndexOf('/')
@@ -119,67 +138,37 @@ object Maintenance {
     plan
   }
 
-  /** Split the dataset's time range into `interval` windows (from
-    * sidecar min/max of `tsCol`) and rewrite each window's files,
+  /** Split the dataset's time range into `interval` windows (from the
+    * footers' min/max of `tsCol`) and rewrite each window's files,
     * grouped by partition, in place.
     */
   def compactByTimeperiod(ds: ParquetDataset, tsCol: String, intervalMicros: Long,
                           maxRowsPerFile: Long = 10000000L,
                           dryRun: Boolean = false): CompactPlan = {
-    import org.apache.spark.sql.functions.{coalesce, col, max, min}
     if (!dryRun) Swap.recover(ds) // a pending swap would skew the plan
-    // exact bigint lanes: the double lanes round past 2^53 (nanosecond
-    // timestamps) and a rounded window bound could misassign files.
-    // Per-file bounds are aggregated on executors; the collect below is
-    // file-count-sized (round-9 scale fix — never the full stats rows).
-    val stats = StatsSidecar.collectDF(ds.spark, ds.path, ds.files)
-      .filter(col("column") === tsCol)
-      .select(col("file_path"),
-        coalesce(col("min_int"), col("min_num").cast("long")).as("mn"),
-        coalesce(col("max_int"), col("max_num").cast("long")).as("mx"))
+    val facts = footerFacts(ds, Some(tsCol))
     // a file whose tsCol carries NO usable bounds (stats disabled by a
-    // third-party writer, an all-NULL chunk, or — after schema
-    // evolution — no tsCol chunk AT ALL, so no stats row to inspect)
-    // cannot be assigned to a window — fail LOUDLY rather than
-    // silently skipping it forever (pre-round-9 this crashed with an
-    // opaque empty.min; the planner must never return a clean-looking
-    // partial plan). Both halves of the bound are required: the
-    // window-assignment below needs mn AND mx, so a one-sided bound is
-    // just as unassignable as none (round-10, advisor finding).
-    // ONE footer pass, one file-count-sized collect: guard flags and
-    // bounds come from the same aggregation (the guard used to be a
-    // separate job over the uncached footer RDD — a full extra footer
-    // read per plan)
-    val per = stats.groupBy("file_path")
-      .agg(min("mn").as("mn"), max("mx").as("mx"),
-        max((col("mn").isNotNull && col("mx").isNotNull).cast("int")).as("ok"))
-      .collect()
-    val unbounded = per.filter(_.getInt(3) == 0).take(5).map(_.getString(0))
+    // third-party writer, an all-NULL chunk) or — after schema
+    // evolution — no tsCol chunk AT ALL cannot be assigned to a window:
+    // fail LOUDLY rather than silently skipping it forever (the planner
+    // must never return a clean-looking partial plan)
+    val unbounded = facts.filter(f => f.chunk && f.range.isEmpty).take(5).map(_.rel)
     require(unbounded.isEmpty,
       s"compactByTimeperiod: ${unbounded.length}+ file(s) have no usable " +
         s"$tsCol min/max statistics and cannot be window-assigned " +
         s"(e.g. ${unbounded.take(2).mkString(", ")}); repair stats or " +
         "compact by rows instead")
-    // the stats frame is filtered to tsCol rows, so a file with no
-    // tsCol chunk never appears in it — cross-check the authoritative
-    // physical listing so those files fail the same loud contract
-    // instead of vanishing from every plan (driver-side set diff: both
-    // sides are file-PATH-sized, which the driver already holds)
-    val withStats = per.map(_.getString(0)).toSet
-    val unlisted = ds.files
-      .map(f => FsUtil.relativize(ds.path, f))
-      .filterNot(withStats).take(5)
+    val unlisted = facts.filterNot(_.chunk).take(5).map(_.rel)
     require(unlisted.isEmpty,
       s"compactByTimeperiod: ${unlisted.length}+ file(s) carry no $tsCol " +
         s"column chunk at all (schema evolution?) and cannot be " +
         s"window-assigned (e.g. ${unlisted.take(2).mkString(", ")}); " +
         "repair_schema or compact by rows instead")
-    if (per.isEmpty) return CompactPlan(Nil)
-    val fileRange: Map[String, (Long, Long)] =
-      per.map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    if (facts.isEmpty) return CompactPlan(Nil)
+    val fileRange = facts.map(f => f.rel -> f.range.get).toMap
     val lo = fileRange.values.map(_._1).min
     val hi = fileRange.values.map(_._2).max
-    val rows = fileRows(ds)
+    val rows = facts.map(f => f.rel -> f.rows).toMap
     val assigned = scala.collection.mutable.Set[String]()
     val groups = Iterator.iterate(lo)(_ + intervalMicros).takeWhile(_ <= hi).flatMap { start =>
       val end = start + intervalMicros

@@ -811,14 +811,15 @@ object Analytics8 {
         .orderBy("event_type")
     },
 
-    // Distributed stats-sidecar gate (the round-9 StatsSidecar.update
-    // rewrite): write orders hive-partitioned by status in one task
-    // (file count per partition = ceil(rows / 4096), deterministic),
-    // refresh the sidecar through the DataFrame-end-to-end path, and
-    // read the per-partition file counts, row totals, and EXACT
-    // integer key bounds back FROM THE SIDECAR — the oracle derives
-    // every number from the source table, so a sidecar that loses a
-    // file, a row group, or an int-lane bound hash-mismatches.
+    // Stats-sidecar gate (StatsSidecar.update): write orders
+    // hive-partitioned by status in one task (file count per partition
+    // = ceil(rows / 4096), deterministic), refresh the sidecar — its
+    // files (~37 at sf0.1) are far under the 2048-file driver bound, so
+    // the footers are read on the driver — and read the per-partition
+    // file counts, row totals, and EXACT integer key bounds back FROM
+    // THE SIDECAR — the oracle derives every number from the source
+    // table, so a sidecar that loses a file, a row group, or an
+    // int-lane bound hash-mismatches.
     "q521_sidecar_stats" -> { (s, d) =>
       val dir = Lifecycle.tmpDir("q521")
       val src = Tables.orders(s, d)

@@ -3,7 +3,7 @@ package graft.sources
 import java.io.{FileNotFoundException, IOException}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** The dataset layer's file operations — list, create, rename, delete
@@ -43,26 +43,31 @@ object FsUtil {
   private def check(ok: Boolean, what: => String): Unit =
     if (!ok) throw new IOException(s"$what failed")
 
-  /** Recursive listing of data files, absolute paths, sorted. Sidecar
-    * and temp dirs (`_`-prefixed) are skipped — physical data files
-    * are authoritative (reference ADR 0001). A file root lists itself.
+  /** Every file under `root` with its status, skipping `_`- and
+    * `.`-prefixed entries (sidecar, staging dirs, checksums); a file
+    * root is itself, a missing root empty. Children are named under
+    * `root` as given, so a relative root lists relative paths, as
+    * `relativize` expects.
     */
-  def listParquet(root: String): Seq[String] = {
+  def walk(root: String): Seq[(Path, FileStatus)] = {
     val base = new Path(root)
     val f = fs(root)
     val top = try f.getFileStatus(base) catch { case _: FileNotFoundException => return Nil }
-    if (top.isFile) return Seq(name(base))
-    // children are named under `root` as given, so a relative root
-    // lists relative paths, as `relativize` expects
-    def walk(dir: Path): Seq[String] = f.listStatus(dir).toSeq.flatMap { st =>
+    def go(dir: Path): Seq[(Path, FileStatus)] = f.listStatus(dir).toSeq.flatMap { st =>
       val n = st.getPath.getName
       if (n.startsWith("_") || n.startsWith(".")) Nil
-      else if (st.isDirectory) walk(new Path(dir, n))
-      else if (n.endsWith(".parquet")) Seq(name(new Path(dir, n)))
-      else Nil
+      else if (st.isDirectory) go(new Path(dir, n))
+      else Seq(new Path(dir, n) -> st)
     }
-    walk(base).sorted
+    if (top.isFile) Seq(base -> top) else go(base)
   }
+
+  /** Data files under `root`, sorted — physical data files are
+    * authoritative (reference ADR 0001). A file root lists itself.
+    */
+  def listParquet(root: String): Seq[String] = walk(root).collect {
+    case (p, _) if p.getName.endsWith(".parquet") || p == new Path(root) => name(p)
+  }.sorted
 
   /** Entry names directly under `dir` (none if it is missing). */
   def children(dir: String): Seq[String] =

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Bridge
@@ -192,21 +191,15 @@ object ParquetDataset {
   private final case class Resolved(files: Map[String, StructType], schema: StructType)
 
   /** Spark schema of each file's footer (`Bridge.footerSchema`), in
-    * `files` order: read on the driver up to `StatsSidecar.SmallSidecarFiles`
-    * files, as `StatsSidecar.update` reads them, in one executor pass beyond.
+    * `files` order, through `StatsSidecar.footers`. The converter is
+    * built where the footers are read: a serialized `SQLConf` loses its
+    * reader.
     */
   def footerSchemas(spark: SparkSession, files: Seq[String]): Seq[StructType] = {
     val conf = spark.conf.getAll
-    def read(hadoop: Configuration, fs: Iterator[String]): Iterator[StructType] = {
+    StatsSidecar.footers(spark, files) {
       val toSchema = Bridge.footerSchema(conf)
-      fs.map(f => toSchema(StatsSidecar.footer(hadoop, f)))
-    }
-    if (files.size <= StatsSidecar.SmallSidecarFiles)
-      read(spark.sparkContext.hadoopConfiguration, files.iterator).toSeq
-    else {
-      val hadoop = StatsSidecar.taskConf(spark)
-      spark.sparkContext.parallelize(files, StatsSidecar.footerTasks(files.size))
-        .mapPartitions(it => read(hadoop.value, it)).collect().toSeq
+      (_, m) => toSchema(m)
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
@@ -11,6 +12,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.util.SerializableConfiguration
@@ -45,20 +47,21 @@ final case class ColStat(
     min_int: Option[Long],
     max_int: Option[Long])
 
-/** Builds and reconciles the `_graft_stats.parquet` sidecar.
+/** Builds and reconciles the `_graft_stats.parquet` sidecar, and owns
+  * the management layer's one footer reader, [[footers]].
   *
-  * Scale notes: footers are read on EXECUTORS (parallelize file list →
-  * mapPartitions), so metadata collection is a metadata-I/O-bound
-  * distributed job, never a data scan — the same design as the
-  * reference's threaded footer collection (pydala/metadata.py:105-145)
-  * lifted to a cluster.
+  * Scale notes: footer collection is metadata I/O, never a data scan —
+  * the reference's threaded footer collection (pydala/metadata.py:
+  * 105-145) as one size rule: on the driver up to [[SmallSidecarFiles]]
+  * files, in one executor pass beyond.
   */
 object StatsSidecar {
 
   val SidecarName = "_graft_stats.parquet"
 
-  /** Fast-path bounds for [[update]]: a sidecar within BOTH limits is
-    * reconciled driver-side (one tiny local-relation write) instead of
+  /** Driver bounds: [[footers]] reads up to `SmallSidecarFiles` footers
+    * on the driver, and a sidecar within BOTH limits is reconciled
+    * driver-side by [[update]] (one tiny local-relation write) instead of
     * paying the distributed reconcile's per-call fixed cost. The file
     * bound is MEASURED, not chosen (the archived sweep in docs/SCALE.md
     * at 256/512/1024/2048 files, min of 9 reps): the fast path wins at
@@ -83,69 +86,68 @@ object StatsSidecar {
     * min(files, 32) cap goes the other way — 30k files per task on huge
     * listings).
     */
-  private[sources] def footerTasks(files: Int): Int =
+  private def footerTasks(files: Int): Int =
     math.max(1, math.min(files, math.max(32, files / 64)))
+
+  /** `reader` applied to every file and its footer, in `files` order —
+    * the one footer reader. Up to [[SmallSidecarFiles]] files the footers are read on
+    * the driver with no Spark job; beyond, in one executor pass whose
+    * tasks get the session's Hadoop configuration. `reader` is
+    * evaluated once on the driver or once per task, so a reader can
+    * build per-call state (a schema converter) where it runs.
+    */
+  def footers[T: ClassTag](spark: SparkSession, files: Seq[String])(
+      reader: => (String, ParquetMetadata) => T): Seq[T] =
+    if (files.size <= SmallSidecarFiles) {
+      val (conf, read) = (spark.sparkContext.hadoopConfiguration, reader)
+      files.map(f => read(f, footer(conf, f)))
+    } else inTasks(spark, files)(reader).collect().toSeq
+
+  /** The executor pass of [[footers]], left distributed. */
+  private def inTasks[T: ClassTag](spark: SparkSession, files: Seq[String])(
+      reader: => (String, ParquetMetadata) => T): RDD[T] = {
+    val hadoop = taskConf(spark)
+    spark.sparkContext.parallelize(files, footerTasks(files.size)).mapPartitions { it =>
+      val (conf, read) = (hadoop.value, reader)
+      it.map(f => read(f, footer(conf, f)))
+    }
+  }
 
   /** Distributed footer-stats frame: one row per file × row-group ×
     * leaf column, built on executors and NEVER collected — the
-    * `update()` path writes it straight back out (round-9: at 100 TB,
-    * ~10⁵–10⁶ files × tens of columns, the old Seq-returning collect
-    * was a multi-GB driver materialization on every update; the fix is
-    * to keep the footer RDD distributed end-to-end).
+    * distributed reconcile in [[update]] writes it straight back out
+    * (round-9: at 100 TB, ~10⁵–10⁶ files × tens of columns, a
+    * Seq-returning collect was a multi-GB driver materialization on
+    * every update).
     */
-  def collectDF(spark: SparkSession, root: String, absFiles: Seq[String]): DataFrame = {
+  private def collectDF(spark: SparkSession, root: String, absFiles: Seq[String]): DataFrame = {
     import spark.implicits._
-    if (absFiles.isEmpty) return spark.emptyDataset[ColStat].toDF()
-    val hadoop = taskConf(spark)
-    spark.createDataset(
-      spark.sparkContext.parallelize(absFiles, footerTasks(absFiles.size))
-        .mapPartitions { it =>
-          val conf = hadoop.value
-          it.flatMap(f => readFooter(conf, root, f))
-        }).toDF()
+    if (absFiles.isEmpty) spark.emptyDataset[ColStat].toDF()
+    else spark.createDataset(inTasks(spark, absFiles)(colStats(root, _, _)).flatMap(identity)).toDF()
   }
-
-  /** Driver-side ColStat view — the PLANNING tier (maintenance dry-run
-    * plans, specs). Plans are file-count-bounded by contract; the
-    * update path must use [[collectDF]] instead.
-    */
-  def collect(spark: SparkSession, root: String, absFiles: Seq[String]): Seq[ColStat] =
-    rows(collectDF(spark, root, absFiles)).toSeq
 
   /** Bloom-filter footer offsets for `column`: one entry per row
-    * group per data file under `root` (−1 = no bloom stamped).
-    * Empty-row-group files contribute nothing. Metadata-only — used
-    * by the bloom write gate (WriteConfig.bloomFilterCols) and its
-    * specs to pin the physical effect across ALL files, not just the
-    * lexicographically first. Footer reads run on the same executor
-    * tier as [[collectDF]] (round-10: this was the last sequential
-    * driver-side `ParquetFileReader.open` loop); the collect is
-    * offset-count-sized — row groups × matched files, never data.
-    * Ordering is deterministic: listing order, block order within a
-    * file (RDD collect concatenates partitions in order).
+    * group per data file under `root` (−1 = no bloom stamped), in
+    * listing order, then block order. Empty-row-group files contribute
+    * nothing. Metadata-only — used by the bloom write gate
+    * (WriteConfig.bloomFilterCols) and its specs to pin the physical
+    * effect across ALL files, not just the lexicographically first.
     */
   def bloomFilterOffsets(spark: SparkSession, root: String,
-                         column: String): Seq[Long] = {
-    val files = FsUtil.listParquet(root)
-    if (files.isEmpty) return Nil
-    val hadoop = taskConf(spark)
-    spark.sparkContext.parallelize(files, footerTasks(files.size)).mapPartitions { it =>
-      val conf = hadoop.value
-      it.flatMap { absFile =>
-        footer(conf, absFile).getBlocks.asScala.toSeq.flatMap { blk =>
-          blk.getColumns.asScala.find(_.getPath.toDotString == column)
-            .map(_.getBloomFilterOffset)
-        }
+                         column: String): Seq[Long] =
+    footers(spark, FsUtil.listParquet(root)) { (_, m) =>
+      m.getBlocks.asScala.toSeq.flatMap { blk =>
+        blk.getColumns.asScala.find(_.getPath.toDotString == column)
+          .map(_.getBloomFilterOffset)
       }
-    }.collect().toSeq
-  }
+    }.flatten
 
   /** The session's Hadoop configuration for footer-reading tasks: a
     * fresh `Configuration` there lacks the `spark.hadoop.*` settings,
     * such as a scheme's filesystem class or an object store's
     * endpoint and credentials.
     */
-  private[sources] def taskConf(spark: SparkSession) =
+  private def taskConf(spark: SparkSession) =
     new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
 
   /** One data file's footer — the only place the management layer
@@ -154,15 +156,16 @@ object StatsSidecar {
     * executor task: `ParquetFileReader.open(inputFile)` alone builds a
     * fresh one per file, which costs more than the footer read.
     */
-  private[sources] def footer(conf: Configuration, file: String): ParquetMetadata = {
+  private def footer(conf: Configuration, file: String): ParquetMetadata = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new HPath(file), conf),
       HadoopReadOptions.builder(conf).build())
     try reader.getFooter finally reader.close()
   }
 
-  private[sources] def readFooter(conf: Configuration, root: String, absFile: String): Seq[ColStat] = {
+  /** The sidecar rows of one data file's footer `m`. */
+  def colStats(root: String, absFile: String, m: ParquetMetadata): Seq[ColStat] = {
     val rel = FsUtil.relativize(root, absFile)
-    footer(conf, absFile).getBlocks.asScala.toSeq.zipWithIndex.flatMap { case (blk, rg) =>
+    m.getBlocks.asScala.toSeq.zipWithIndex.flatMap { case (blk, rg) =>
       blk.getColumns.asScala.toSeq.map { cc =>
         val name = cc.getPath.toDotString
         val pt = cc.getPrimitiveType
@@ -245,9 +248,9 @@ object StatsSidecar {
   private val colStatEncoder: Encoder[ColStat] = Encoders.product[ColStat]
 
   /** Stats rows on the driver, in one job — the reader behind the
-    * small-sidecar reconcile in [[update]], [[collect]] and the scan
-    * pruner. With `columns`, only those leaf columns' rows are read (an
-    * IN filter pushed into the parquet scan).
+    * small-sidecar reconcile in [[update]] and the scan pruner. With
+    * `columns`, only those leaf columns' rows are read (an IN filter
+    * pushed into the parquet scan).
     */
   def rows(sidecar: DataFrame, columns: Option[Seq[String]] = None): Array[ColStat] =
     columns.fold(sidecar)(cs => sidecar.filter(col("column").isin(cs: _*)))
@@ -289,11 +292,8 @@ object StatsSidecar {
           .map(rows(_).toSeq.filter(cs => liveSet(cs.file_path)))
           .getOrElse(Nil)
         val known = kept.map(_.file_path).toSet
-        val conf = spark.sparkContext.hadoopConfiguration
-        val freshRows = absFiles
-          .filterNot(f => known.contains(FsUtil.relativize(root, f)))
-          .flatMap(f => readFooter(conf, root, f))
-        (kept ++ freshRows).toDF()
+        val fresh = absFiles.filterNot(f => known.contains(FsUtil.relativize(root, f)))
+        (kept ++ footers(spark, fresh)(colStats(root, _, _)).flatten).toDF()
       } else {
         val live = rel.toDF("file_path")
         val existing: DataFrame = read(spark, root)

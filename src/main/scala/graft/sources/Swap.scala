@@ -124,12 +124,11 @@ object Swap {
     * non-partitioned Spark write leaves one even when it has no rows).
     */
   private def dropEmpty(ds: ParquetDataset, tmp: String): Long = {
-    val conf = ds.spark.sparkContext.hadoopConfiguration
-    FsUtil.listParquet(tmp).map { f =>
-      val n = StatsSidecar.footer(conf, f).getBlocks.asScala.map(_.getRowCount).sum
-      if (n == 0) FsUtil.delete(tmp, Seq(f))
-      n
-    }.sum
+    val staged = FsUtil.listParquet(tmp)
+    val rows = StatsSidecar.footers(ds.spark, staged)((_, m) =>
+      m.getBlocks.asScala.map(_.getRowCount).sum)
+    FsUtil.delete(tmp, staged.zip(rows).collect { case (f, 0L) => f })
+    rows.sum
   }
 
   /** Step 5; a failure reports the originals that still exist (all of

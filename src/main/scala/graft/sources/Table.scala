@@ -102,20 +102,9 @@ final class JsonDataset(val spark: SparkSession, val path: String,
   // Hadoop FS listing, not java.nio: the dataset path can be any
   // scheme Spark reads (s3a/hdfs/abfs); a local-only walk would
   // return a constant signature there and silently never invalidate.
-  private def listSig: Seq[(String, Long, Long)] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) Nil
-    else {
-      val out = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        out += ((st.getPath.toString, st.getLen, st.getModificationTime))
-      }
-      out.toSeq.sortBy(_._1)
-    }
-  }
+  private def listSig: Seq[(String, Long, Long)] =
+    FsUtil.walk(path).map { case (p, st) => (p.toString, st.getLen, st.getModificationTime) }
+      .sortBy(_._1)
   private def dtypeProposal: Map[String, org.apache.spark.sql.types.DataType] = {
     val sig = listSig
     dtypeCache match {

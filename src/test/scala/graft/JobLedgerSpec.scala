@@ -1,0 +1,70 @@
+package graft
+
+import java.sql.Timestamp
+
+import graft.operators.{Delete, Maintenance, Merge}
+import graft.sources._
+
+/** The job ledger: how many Spark jobs each lifecycle operation
+  * launches on one small partitioned dataset with a stats sidecar.
+  * Footer reads take no job up to `StatsSidecar.SmallSidecarFiles`
+  * files and exactly one past it; the other pins are the operations'
+  * current counts, so a change that cuts a job lowers a number here
+  * and a change that adds one fails.
+  */
+class JobLedgerSpec extends SparkSpecBase {
+
+  import spark.implicits._
+
+  private val cfg = WriteConfig(partitionBy = Seq("p"))
+
+  private def batch(ks: Range, v: String) = ks.map { k =>
+    (k.toLong, s"$v$k", k % 2, new Timestamp(1704067200000L + k * 3600000L))
+  }.toDF("k", "v", "p", "ts")
+
+  /** Two appends over two partitions (four data files), with a sidecar. */
+  private def fixture(name: String): ParquetDataset = {
+    val ds = new ParquetDataset(spark, tmpDir(name))
+    ds.write(batch(0 until 40, "v").coalesce(1), cfg)
+    ds.write(batch(40 until 80, "v").coalesce(1), cfg)
+    ds.updateStats()
+    ds
+  }
+
+  private def pastDriverBound[T](f: => T): T = {
+    sys.props("graft.sidecar.small.files") = "1"
+    try f finally sys.props.remove("graft.sidecar.small.files")
+  }
+
+  private val footerReaders: Seq[(String, ParquetDataset => Any)] = Seq(
+    "compactPartitions(dryRun)" -> (Maintenance.compactPartitions(_, dryRun = true)),
+    "compactByTimeperiod(dryRun)" -> (Maintenance.compactByTimeperiod(_, "ts",
+      Maintenance.parseInterval("1d"), dryRun = true)),
+    "bloomFilterOffsets" -> (ds => StatsSidecar.bloomFilterOffsets(spark, ds.path, "k")))
+
+  footerReaders.foreach { case (name, op) =>
+    test(s"$name reads footers in no job below the driver bound and in one past it") {
+      val ds = fixture("ledger_footers")
+      assert(ds.files.size == 4)
+      var onDriver, inTasks: Any = null
+      assert(jobsLaunched { onDriver = op(ds) } == 0)
+      assert(pastDriverBound(jobsLaunched { inTasks = op(ds) }) == 1)
+      assert(inTasks == onDriver)
+    }
+  }
+
+  private val lifecycle: Seq[(String, Int, ParquetDataset => Any)] = Seq(
+    ("append", 3, _.write(batch(80 until 90, "v"), cfg)),
+    ("upsert", 12, Merge(_, batch(35 until 45, "new"), Seq("k"), "upsert")),
+    ("insert", 9, Merge(_, batch(75 until 85, "new"), Seq("k"), "insert")),
+    ("update", 14, Merge(_, batch(35 until 45, "new"), Seq("k"), "update")),
+    ("Delete.where", 5, Delete.where(_, "k % 7 = 0")),
+    ("compactPartitions", 4, Maintenance.compactPartitions(_)))
+
+  lifecycle.foreach { case (name, jobs, op) =>
+    test(s"$name launches $jobs Spark jobs") {
+      val ds = fixture("ledger_ops")
+      assert(jobsLaunched(op(ds)) == jobs)
+    }
+  }
+}

@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (and `FsUtil`, which implements promote) may stage, promote or
   * observe counts, so a second copy of the copy-on-write swap cannot be
   * forked back into an operator; only `ParquetDataset` reads a
-  * dataset's files by path, so every reader shares its one schema; and
-  * every file operation goes through the dataset's Hadoop filesystem.
+  * dataset's files by path, so every reader shares its one schema; only
+  * `StatsSidecar` opens data-file footers; and every file operation goes
+  * through the dataset's Hadoop filesystem.
   */
 class SwapSeamSpec extends AnyFunSuite {
 
@@ -48,6 +49,14 @@ class SwapSeamSpec extends AnyFunSuite {
     // a bare read infers its schema from one footer; a basePath read
     // picks its own; both bypass the dataset's one schema
     val found = offenders(Seq("read.parquet(", "\"basePath\""), Set("ParquetDataset.scala"))
+    assert(found.isEmpty, found.mkString("; "))
+  }
+
+  test("only StatsSidecar opens data-file footers") {
+    // one reader with one driver/executor size rule; a second opener
+    // brings back a second rule
+    val found = offenders(Seq("StatsSidecar.footer(", "readFooter(", "collectDF(", "footerTasks("),
+      Set("StatsSidecar.scala"))
     assert(found.isEmpty, found.mkString("; "))
   }
 
