@@ -40,9 +40,10 @@ final case class RetentionResult(
   *    swapping operator, or an explicit [[Delete.recover]]) completes
   *    the swap from the journal.
   *
-  * Scale notes: the discovery pass filters on the predicate, which
-  * pushes down to parquet — files whose row-group stats exclude the
-  * predicate are never decoded, so deleting a key range from a
+  * Scale notes: the discovery pass reads only the files the sidecar
+  * cannot rule out (`ds.pruneFiles`) and filters on the predicate,
+  * which pushes down to parquet — files whose row-group stats exclude
+  * the predicate are never decoded, so deleting a key range from a
   * key-sorted 100 TB dataset reads only the matching slab. The
   * rewrite reads exactly the affected files. No shuffle anywhere —
   * both passes are narrow scans.
@@ -60,15 +61,19 @@ object Delete {
     if (ds.isEmpty) return DeleteResult(0, Nil, Nil)
 
     val pred = expr(graft.sources.Sanitize(predicate))
+    // only files the sidecar cannot rule out can hold a pred-TRUE row
+    val all = ds.relFiles
+    val candidates = ds.pruneFiles(predicate)
+    if (candidates.isEmpty) return DeleteResult(0, Nil, all)
     // the discovery pass traverses exactly the pred-TRUE rows, which
     // ARE the deleted rows: per-file counts give both the affected
     // files and the deleted total
-    val perFile = ds.df.withColumn("__file", input_file_name())
+    val perFile = ds.read(candidates).withColumn("__file", input_file_name())
       .filter(pred).groupBy("__file").count().collect()
     val deleted = perFile.map(_.getLong(1)).sum
     val affectedRel = perFile
       .map(r => FsUtil.relativize(ds.path, r.getString(0))).sorted.toSeq
-    val preserved = ds.relFiles.filterNot(affectedRel.contains)
+    val preserved = all.filterNot(affectedRel.contains)
     if (affectedRel.isEmpty) return DeleteResult(0, Nil, preserved)
 
     Swap(ds, "delete", affectedRel) { tmp =>

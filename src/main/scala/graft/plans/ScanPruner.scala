@@ -27,9 +27,10 @@ import graft.sources.{ColStat, StatsSidecar}
   *  - selected files return ALL their rows — scan() is file-level
   *    pruning, not row filtering.
   *
-  * Evaluation: one sidecar read collects the rows of the atoms'
-  * non-partition columns (an IN filter pushed into the parquet scan),
-  * and survival is decided in plain Scala. That result holds row
+  * Evaluation: survival is decided in plain Scala over the sidecar
+  * rows of the atoms' non-partition columns — the rows a dataset holds
+  * on the driver, or one sidecar read with an IN filter pushed into the
+  * parquet scan ([[selectFiles]]). Those rows hold row
   * groups × atom columns — the same order of size as the file listing
   * the caller already holds on the driver — so a per-atom distributed
   * join plan would buy nothing but fixed job overhead. Predicates that
@@ -301,14 +302,24 @@ object ScanPruner {
     case Gt => c > 0; case Ge => c >= 0; case Lt => c < 0; case Le => c <= 0; case Eq => c == 0
   }
 
-  /** Select the dataset-relative files that may contain matching rows.
-    *
-    * `statsDF` is the sidecar (may be empty); `allRelFiles` is the
-    * authoritative physical listing. Files without stats survive.
-    * Returns None when the predicate cannot prune (keep all).
+  /** Select the dataset-relative files that may contain matching rows,
+    * with the sidecar as a DataFrame (may be empty): [[select]] over
+    * the rows of the atoms' columns, collected in one job.
     */
   def selectFiles(statsDF: Option[DataFrame], allRelFiles: Seq[String],
-                  filterSql: String): Option[Seq[String]] = {
+                  filterSql: String): Option[Seq[String]] =
+    select(statsDF.map(df => cols => StatsSidecar.rows(df, Some(cols)).toSeq), allRelFiles, filterSql)
+
+  /** Select the dataset-relative files that may contain matching rows.
+    *
+    * `statRows` gives the sidecar rows of the given columns (None: no
+    * sidecar); it is called only when some atom is not on a partition
+    * column. `allRelFiles` is the authoritative physical listing. Files
+    * without stats survive. Returns None when the predicate cannot
+    * prune (keep all).
+    */
+  def select(statRows: Option[Seq[String] => Seq[ColStat]], allRelFiles: Seq[String],
+             filterSql: String): Option[Seq[String]] = {
     val atoms = parse(filterSql) match {
       case Some(as) if as.nonEmpty => as
       case _ => return None
@@ -321,8 +332,8 @@ object ScanPruner {
 
     val rows: Seq[ColStat] =
       if (statAtoms.isEmpty) Nil
-      else statsDF match {
-        case Some(df) => StatsSidecar.rows(df, Some(statAtoms.map(_.column).distinct)).toSeq
+      else statRows match {
+        case Some(of) => of(statAtoms.map(_.column).distinct)
         case None => return None
       }
     // a column we know nothing about makes the whole predicate unsafe

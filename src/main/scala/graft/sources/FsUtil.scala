@@ -35,7 +35,7 @@ object FsUtil {
     */
   def name(p: String): String = name(new Path(p))
 
-  private def name(p: Path): String = p.toUri.getScheme match {
+  def name(p: Path): String = p.toUri.getScheme match {
     case null | "file" => p.toUri.getPath
     case _ => p.toString
   }
@@ -65,9 +65,15 @@ object FsUtil {
   /** Data files under `root`, sorted — physical data files are
     * authoritative (reference ADR 0001). A file root lists itself.
     */
-  def listParquet(root: String): Seq[String] = walk(root).collect {
-    case (p, _) if p.getName.endsWith(".parquet") || p == new Path(root) => name(p)
-  }.sorted
+  def listParquet(root: String): Seq[String] = dataFiles(root).map(_._1)
+
+  /** [[listParquet]] with each file's length and modification time:
+    * the key of one version of the files under `root`.
+    */
+  def dataFiles(root: String): Seq[(String, Long, Long)] = walk(root).collect {
+    case (p, st) if p.getName.endsWith(".parquet") || p == new Path(root) =>
+      (name(p), st.getLen, st.getModificationTime)
+  }.sortBy(_._1)
 
   /** Entry names directly under `dir` (none if it is missing). */
   def children(dir: String): Seq[String] =

@@ -42,26 +42,44 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
     })
     .getOrElse(Nil)
 
-  /** This version's footer schemas, resolved once; dropped by
-    * [[refreshSchema]], which every mutating path (write, swap) calls.
-    * An EXTERNAL writer to the same path must use its own instance.
+  /** The version last resolved: its files, footer schemas, unified
+    * schema and the one frame (and Spark `FileIndex`) every read uses.
+    * [[df]], [[read]] and [[scan]] check it against a fresh listing;
+    * [[schema]] and [[schemaOf]] re-check only after [[refreshSchema]],
+    * which every mutating path (write, swap) calls.
     */
-  @volatile private var resolved: Option[ParquetDataset.Resolved] = None
+  @volatile private var version: Option[ParquetDataset.Version] = None
+  @volatile private var checked = false
 
   /** Forget the resolved schema — called after every mutation of the
     * underlying files (the schema can evolve on append, repartition's
-    * dateparts, dtype optimization, schema repair).
+    * dateparts, dtype optimization, schema repair). The footer schemas
+    * of files that did not change are carried into the next version.
     */
-  def refreshSchema(): Unit = resolved = None
+  def refreshSchema(): Unit = checked = false
 
-  private def resolve(): ParquetDataset.Resolved = resolved.getOrElse {
-    val fs = files
-    val perFile = fs.zip(ParquetDataset.footerSchemas(spark, fs)).toMap
-    // no files: Spark's own "unable to infer schema" error, as before
-    val reader = if (fs.isEmpty) spark.read else spark.read.schema(SchemaOps.unify(fs.map(perFile)))
-    val r = ParquetDataset.Resolved(perFile, reader.parquet(path).schema)
-    resolved = Some(r)
-    r
+  private def resolve(): ParquetDataset.Version =
+    version.filter(_ => checked).getOrElse(current())
+
+  /** The version of the files on disk now: the held one if the listing
+    * still matches its key, else a new one that reads only the footers
+    * of files new to it (names are never reused; a changed length or
+    * modification time counts as new).
+    */
+  private def current(): ParquetDataset.Version = synchronized {
+    val key = FsUtil.dataFiles(path)
+    val v = version.filter(_.key == key).getOrElse {
+      val known = version.fold(Map.empty[ParquetDataset.FileKey, StructType])(_.footers)
+      val fresh = key.filterNot(known.contains)
+      val footers = known ++ fresh.zip(ParquetDataset.footerSchemas(spark, fresh.map(_._1)))
+      // no files: Spark's own "unable to infer schema" error, as before
+      val reader = if (key.isEmpty) spark.read else spark.read.schema(SchemaOps.unify(key.map(footers)))
+      ParquetDataset.Version(key, key.map(k => FsUtil.relativize(path, k._1)),
+        key.map(k => k -> footers(k)).toMap, reader.parquet(path))
+    }
+    version = Some(v)
+    checked = true
+    v
   }
 
   /** The [[SchemaOps.unify]] of every file's footer schema in path
@@ -70,35 +88,55 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
     * compaction all read in it, so a column only a later file carries
     * survives; types Spark cannot read under it fail at read time
     * (`Maintenance.repairSchema` rewrites them). Cost per version: one
-    * footer read per file and no Spark job up to
+    * footer read per new file and no Spark job up to
     * `StatsSidecar.SmallSidecarFiles` files, one executor pass beyond.
     */
-  def schema: StructType = resolve().schema
+  def schema: StructType = resolve().frame.schema
 
   /** Footer schema of one data file (absolute path); a file this
     * version does not know yet re-resolves.
     */
   def schemaOf(file: String): StructType =
-    resolve().files.getOrElse(file, { refreshSchema(); resolve().files(file) })
+    resolve().schemaOf.getOrElse(file, current().schemaOf(file))
 
   /** The full lazy scan. Partition discovery and row-group pruning
     * are native; this is the entry point for all relational work.
     */
-  def df: DataFrame = spark.read.schema(schema).parquet(path)
+  def df: DataFrame = Bridge.fileRelation(current().frame, None)
 
-  /** The given dataset-relative files, with their partition columns. */
-  def read(rel: Seq[String]): DataFrame =
-    spark.read.option("basePath", path).schema(schema).parquet(rel.map(f => s"$path/$f"): _*)
+  /** The given dataset-relative files, with their partition columns,
+    * through the version's `FileIndex`: no listing and no Spark job
+    * however many files.
+    */
+  def read(rel: Seq[String]): DataFrame = subset(current(), rel)
+
+  private def subset(v: ParquetDataset.Version, rel: Seq[String]): DataFrame = {
+    val want = rel.toSet
+    val missing = want -- v.relSet
+    if (missing.nonEmpty)
+      throw new java.io.FileNotFoundException(s"not in dataset $path: ${missing.toSeq.sorted.mkString(", ")}")
+    Bridge.fileRelation(v.frame, Option.when(want.size < v.relSet.size) { p =>
+      want(FsUtil.relativize(qualifiedPath, FsUtil.name(p)))
+    })
+  }
+
+  /** The root as Spark's file index names it (absolute, qualified). */
+  private lazy val qualifiedPath: String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    FsUtil.name(FsUtil.fs(path).makeQualified(p))
+  }
 
   /** SQL-string filter — the reference's whole predicate-translation
     * subsystem collapses into Catalyst (SURVEY §2.2).
     */
   def filter(sql: String): DataFrame = df.filter(Sanitize(sql))
 
-  def count(): Long = stats match {
+  def count(): Long = sidecarRows() match {
     // metadata-only count from the sidecar when available (one row
     // group appears once per column — dedupe first)
-    case Some(s) =>
+    case Some(Right(rows)) =>
+      rows.map(r => (r.file_path, r.row_group, r.rg_num_rows)).distinct.map(_._3).sum
+    case Some(Left(s)) =>
       val r = s.select("file_path", "row_group", "rg_num_rows").distinct()
         .agg(sum("rg_num_rows")).collect()(0)
       if (r.isNullAt(0)) 0L else r.getLong(0)
@@ -107,10 +145,51 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
 
   // ---- stats sidecar ------------------------------------------------
 
-  def stats: Option[DataFrame] = StatsSidecar.read(spark, path)
+  /** The sidecar rows this instance holds, keyed by the sidecar's
+    * part-file listing: handed over by [[updateStats]] or read once on
+    * first use, within the driver bounds of `StatsSidecar` (nothing is
+    * held past them).
+    */
+  @volatile private var held: Option[StatsSidecar.Held] = None
+
+  private def heldAt(key: Seq[(String, Long, Long)]) = held.filter(_.key == key)
+
+  /** The rows of the sidecar at `key`: the held ones, else read in one
+    * job and held; None past the driver bounds.
+    */
+  private def rowsAt(key: Seq[(String, Long, Long)]): Option[Seq[ColStat]] = {
+    held = heldAt(key).orElse(StatsSidecar.load(spark, path, key))
+    held.map(_.rows)
+  }
+
+  /** The sidecar's rows on the driver, or past the driver bounds its
+    * frame; None without a sidecar.
+    */
+  private def sidecarRows(): Option[Either[DataFrame, Seq[ColStat]]] =
+    StatsSidecar.listing(path).map(key => rowsAt(key).toRight(StatsSidecar.frame(spark, path)))
+
+  /** The sidecar; a local frame over the held rows while they match it. */
+  def stats: Option[DataFrame] = StatsSidecar.listing(path).map { key =>
+    heldAt(key).fold(StatsSidecar.frame(spark, path))(_.frame)
+  }
 
   /** Reconcile the sidecar with the physical files. */
-  def updateStats(): DataFrame = StatsSidecar.update(spark, path)
+  def updateStats(): DataFrame = {
+    val (frame, h) = StatsSidecar.update(spark, path, held)
+    held = h
+    frame
+  }
+
+  /** The sidecar rows of some columns for [[ScanPruner.select]], read
+    * only when it asks; None without a sidecar.
+    */
+  private def statRows: Option[Seq[String] => Seq[ColStat]] =
+    StatsSidecar.listing(path).map(key => cols => rowsAt(key) match {
+      case Some(rows) =>
+        val cs = cols.toSet
+        rows.filter(r => cs(r.column))
+      case None => StatsSidecar.rows(StatsSidecar.frame(spark, path), Some(cols)).toSeq
+    })
 
   /** File-level pruned scan: translate the row predicate into a
     * conservative range predicate over the sidecar, read only the
@@ -118,18 +197,15 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
     * reference scan(), pydala/dataset.py:1200-1246).
     */
   def scan(filterSql: String): DataFrame = {
-    val all = relFiles
-    if (all.isEmpty) return df.limit(0)
-    val chosen = ScanPruner.selectFiles(stats, all, Sanitize(filterSql)).getOrElse(all)
-    if (chosen.isEmpty) df.limit(0)
-    else if (chosen.size == all.size) df
-    else read(chosen)
+    val v = current()
+    val chosen = ScanPruner.select(statRows, v.rel, Sanitize(filterSql)).getOrElse(v.rel)
+    if (chosen.isEmpty) subset(v, v.rel).limit(0) else subset(v, chosen)
   }
 
   /** Files a scan(filter) would read — the dry-run face of pruning. */
   def pruneFiles(filterSql: String): Seq[String] = {
     val all = relFiles
-    ScanPruner.selectFiles(stats, all, Sanitize(filterSql)).getOrElse(all)
+    ScanPruner.select(statRows, all, Sanitize(filterSql)).getOrElse(all)
   }
 
   /** Dataset time range for a timestamp column, metadata-only from the
@@ -137,14 +213,20 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
     * pydala/dataset.py:2303-2307). Epoch-micros bounds, None when the
     * sidecar or stats are missing.
     */
-  def timeRange(column: String): Option[(Long, Long)] = stats.flatMap { s =>
+  def timeRange(column: String): Option[(Long, Long)] = sidecarRows().flatMap {
     // exact lanes; sidecars written before them read back with null
     // min_int/max_int and fall back to the double lane
-    def bound(exact: String, num: String) = coalesce(col(exact), col(num).cast("long"))
-    val r = s.filter(col("column") === column && col("typ") === "timestamp")
-      .agg(min(bound("min_int", "min_num")), max(bound("max_int", "max_num"))).collect()(0)
-    if (r.isNullAt(0) || r.isNullAt(1)) None
-    else Some((r.getLong(0), r.getLong(1)))
+    case Right(rows) =>
+      val ts = rows.filter(r => r.column == column && r.typ == "timestamp")
+      val lo = ts.flatMap(r => r.min_int.orElse(r.min_num.map(_.toLong)))
+      val hi = ts.flatMap(r => r.max_int.orElse(r.max_num.map(_.toLong)))
+      if (lo.isEmpty || hi.isEmpty) None else Some((lo.min, hi.max))
+    case Left(s) =>
+      def bound(exact: String, num: String) = coalesce(col(exact), col(num).cast("long"))
+      val r = s.filter(col("column") === column && col("typ") === "timestamp")
+        .agg(min(bound("min_int", "min_num")), max(bound("max_int", "max_num"))).collect()(0)
+      if (r.isNullAt(0) || r.isNullAt(1)) None
+      else Some((r.getLong(0), r.getLong(1)))
   }
 
   /** First timestamp column of the schema (reference timestamp-column
@@ -188,7 +270,17 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
 
 object ParquetDataset {
 
-  private final case class Resolved(files: Map[String, StructType], schema: StructType)
+  private type FileKey = (String, Long, Long)
+
+  /** One version of the files on disk: its listing (`key`, with the
+    * dataset-relative names `rel`), each file's footer schema, and the
+    * frame read in their unified schema.
+    */
+  private final case class Version(key: Seq[FileKey], rel: Seq[String],
+                                   footers: Map[FileKey, StructType], frame: DataFrame) {
+    lazy val relSet: Set[String] = rel.toSet
+    lazy val schemaOf: Map[String, StructType] = footers.map { case (k, s) => k._1 -> s }
+  }
 
   /** Spark schema of each file's footer (`Bridge.footerSchema`), in
     * `files` order, through `StatsSidecar.footers`. The converter is

@@ -13,7 +13,7 @@ import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.util.SerializableConfiguration
 
@@ -72,7 +72,8 @@ object StatsSidecar {
     * reason the distributed path exists) starts to matter before the
     * wall does. The byte
     * bound guards the shrunk-dataset edge (few live files, huge stale
-    * sidecar).
+    * sidecar). A `ParquetDataset` holds its sidecar rows on the driver
+    * ([[Held]]) within the same two bounds.
     */
   def SmallSidecarFiles: Int =
     sys.props.get("graft.sidecar.small.files").map(_.toInt).getOrElse(2048)
@@ -239,72 +240,125 @@ object StatsSidecar {
   private val colStatSchema = org.apache.spark.sql.types.StructType(
     Encoders.product[ColStat].schema.map(f => f.copy(nullable = true)))
 
-  def read(spark: SparkSession, root: String): Option[DataFrame] = {
-    val p = sidecarPath(root)
-    if (FsUtil.exists(p)) Some(spark.read.schema(colStatSchema).parquet(p))
-    else None
+  /** The sidecar as a parquet read. */
+  def frame(spark: SparkSession, root: String): DataFrame =
+    spark.read.schema(colStatSchema).parquet(sidecarPath(root))
+
+  /** The sidecar's part files with their length and modification time
+    * (the key its rows are held under), or None without a sidecar.
+    * Part file names are never reused, so a sidecar rewritten by anyone
+    * lists differently.
+    */
+  def listing(root: String): Option[Seq[(String, Long, Long)]] = {
+    val key = FsUtil.dataFiles(sidecarPath(root))
+    Option.when(key.nonEmpty || FsUtil.exists(sidecarPath(root)))(key)
   }
+
+  /** Sidecar rows on the driver, with the listing of the part files
+    * they were read from or written as.
+    */
+  final class Held(val key: Seq[(String, Long, Long)], val rows: Seq[ColStat], spark: SparkSession) {
+
+    /** The rows as a local frame in the sidecar's schema: collecting it
+      * launches no job, and [[StatsSidecar.rows]] answers it from
+      * `rows` without planning a query.
+      */
+    lazy val frame: DataFrame = {
+      val f = spark.createDataFrame(rows.map(r => Row.fromSeq(r.productIterator.map {
+        case o: Option[_] => o.getOrElse(null)
+        case v => v
+      }.toSeq)).asJava, colStatSchema)
+      heldFrames.put(f, rows)
+      f
+    }
+  }
+
+  /** The rows behind each live [[Held.frame]] (weak keys: an entry goes
+    * with its frame).
+    */
+  private val heldFrames =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[DataFrame, Seq[ColStat]])
+
+  /** A sidecar listed as `key` for a dataset of `files` data files is
+    * within both driver bounds.
+    */
+  private def onDriver(key: Seq[(String, Long, Long)], files: => Int): Boolean =
+    key.map(_._2).sum <= SmallSidecarBytes && files <= SmallSidecarFiles
+
+  /** The rows of the sidecar at `key`, read in one job, when it is
+    * within both driver bounds; None past them.
+    */
+  def load(spark: SparkSession, root: String, key: Seq[(String, Long, Long)]): Option[Held] =
+    Option.when(onDriver(key, FsUtil.listParquet(root).size))(
+      new Held(key, rows(frame(spark, root)).toSeq, spark))
 
   private val colStatEncoder: Encoder[ColStat] = Encoders.product[ColStat]
 
-  /** Stats rows on the driver, in one job — the reader behind the
-    * small-sidecar reconcile in [[update]] and the scan pruner. With
-    * `columns`, only those leaf columns' rows are read (an IN filter
-    * pushed into the parquet scan).
+  /** Stats rows on the driver, in one job — the reader behind [[load]]
+    * and the scan pruner past the driver bound; a held frame is
+    * answered from its rows. With `columns`, only those leaf columns'
+    * rows are read (an IN filter pushed into the parquet scan).
     */
   def rows(sidecar: DataFrame, columns: Option[Seq[String]] = None): Array[ColStat] =
-    columns.fold(sidecar)(cs => sidecar.filter(col("column").isin(cs: _*)))
-      .as(colStatEncoder).collect()
+    Option(heldFrames.get(sidecar)) match {
+      case Some(held) => columns.fold(held)(cs => held.filter(r => cs.contains(r.column))).toArray
+      case None =>
+        columns.fold(sidecar)(cs => sidecar.filter(col("column").isin(cs: _*)))
+          .as(colStatEncoder).collect()
+    }
 
   /** Reconcile the sidecar with the physical files — physical discovery
     * is authoritative (ADR 0001; pydala/metadata.py:809-862): stats for
     * removed files are dropped, new files get footers read, and an
-    * empty dataset removes the stale sidecar entirely.
+    * empty dataset removes the stale sidecar entirely. `held` rows
+    * whose key still matches the sidecar's listing stand in for
+    * re-reading it. Returns the new sidecar and, on the driver path,
+    * its rows to hold.
     */
-  def update(spark: SparkSession, root: String): DataFrame = {
+  def update(spark: SparkSession, root: String,
+             held: Option[Held] = None): (DataFrame, Option[Held]) = {
     import spark.implicits._
     val absFiles = FsUtil.listParquet(root)
     val p = sidecarPath(root)
     if (absFiles.isEmpty) {
       FsUtil.deleteRecursively(p)
-      return spark.emptyDataset[ColStat].toDF()
+      return (spark.emptyDataset[ColStat].toDF(), None)
     }
     // Past the fast-path bounds the reconcile is DataFrame end-to-end
     // (round-9, verdict #2): no ColStat row lands on the driver, only
     // file PATHS — which the driver already holds from the listing.
     val rel = absFiles.map(f => FsUtil.relativize(root, f))
-    val sidecarBytes =
-      if (FsUtil.exists(p)) FsUtil.fs(p).getContentSummary(new HPath(p)).getLength else 0L
-    val df: DataFrame =
-      if (absFiles.size <= SmallSidecarFiles &&
-          sidecarBytes <= SmallSidecarBytes) {
+    val key = listing(root)
+    val written: Option[Seq[ColStat]] =
+      Option.when(onDriver(key.getOrElse(Nil), absFiles.size)) {
         // FAST PATH (round-10, verdict #3): at sf0.1 the distributed
         // reconcile's fixed cost — sidecar scan + left-semi join +
         // footer-RDD union lineage — is ~0.4–1.1 s per call, which
         // dominated the lifecycle write cluster (q104/q107/q108/q112/
-        // q113/q115). A sidecar this small (≤2048 files AND ≤16 MB on
-        // disk — the byte guard covers a dataset that SHRANK from a
-        // huge listing) is by definition driver-safe: filter retained
+        // q113/q115). A sidecar this small (≤2048 files AND ≤16 MB of
+        // part files — the byte guard covers a dataset that SHRANK from
+        // a huge listing) is by definition driver-safe: filter retained
         // rows in memory and read the few fresh footers inline. The
         // 100 TB path below is unchanged.
         val liveSet = rel.toSet
-        val kept: Seq[ColStat] = read(spark, root)
-          .map(rows(_).toSeq.filter(cs => liveSet(cs.file_path)))
-          .getOrElse(Nil)
+        val prior = held.filter(h => key.contains(h.key)).map(_.rows)
+          .orElse(key.map(_ => rows(frame(spark, root)).toSeq))
+        val kept = prior.getOrElse(Nil).filter(cs => liveSet(cs.file_path))
         val known = kept.map(_.file_path).toSet
         val fresh = absFiles.filterNot(f => known.contains(FsUtil.relativize(root, f)))
-        (kept ++ footers(spark, fresh)(colStats(root, _, _)).flatten).toDF()
-      } else {
-        val live = rel.toDF("file_path")
-        val existing: DataFrame = read(spark, root)
-          .map(_.join(live, Seq("file_path"), "left_semi"))
-          .getOrElse(spark.emptyDataset[ColStat].toDF())
-        val known = existing.select("file_path").distinct().as[String]
-          .collect().toSet // file-count-sized, not stats-sized
-        val freshFiles =
-          absFiles.filterNot(f => known.contains(FsUtil.relativize(root, f)))
-        existing.unionByName(collectDF(spark, root, freshFiles))
+        kept ++ footers(spark, fresh)(colStats(root, _, _)).flatten
       }
+    val df: DataFrame = written.map(_.toDF()).getOrElse {
+      val live = rel.toDF("file_path")
+      val existing: DataFrame = key.map(_ => frame(spark, root))
+        .map(_.join(live, Seq("file_path"), "left_semi"))
+        .getOrElse(spark.emptyDataset[ColStat].toDF())
+      val known = existing.select("file_path").distinct().as[String]
+        .collect().toSet // file-count-sized, not stats-sized
+      val freshFiles =
+        absFiles.filterNot(f => known.contains(FsUtil.relativize(root, f)))
+      existing.unionByName(collectDF(spark, root, freshFiles))
+    }
     // stage + atomic-ish swap so a crash never leaves a torn sidecar;
     // the staged write reads the OLD sidecar (still in place) for the
     // retained rows, so the delete below is strictly after the copy.
@@ -317,6 +371,7 @@ object StatsSidecar {
     df.coalesce(shards).write.mode("overwrite").parquet(tmp)
     FsUtil.deleteRecursively(p)
     FsUtil.rename(tmp, p)
-    spark.read.schema(colStatSchema).parquet(p)
+    val now = FsUtil.dataFiles(p)
+    (frame(spark, root), written.filter(_ => onDriver(now, absFiles.size)).map(new Held(now, _, spark)))
   }
 }

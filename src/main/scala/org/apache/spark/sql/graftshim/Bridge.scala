@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -7,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
@@ -56,5 +58,33 @@ object Bridge {
     confs.foreach { case (k, v) => conf.setConfString(k, v) }
     val converter = new ParquetToSparkSchemaConverter(conf)
     m => ParquetFileFormat.readSchemaFromFooter(new Footer(null, m), converter).asNullable
+  }
+
+  /** A fresh instance of the file relation `df` reads (new attribute
+    * ids, the same `FileIndex`, so no listing), restricted to the files
+    * `keep` accepts when given.
+    */
+  def fileRelation(df: DataFrame, keep: Option[Path => Boolean]): DataFrame =
+    ofRows(df.sparkSession, df.queryExecution.analyzed.transform {
+      case l @ LogicalRelation(r: HadoopFsRelation, _, _, _, _) =>
+        val rel = keep.fold(r)(k => r.copy(location = new SubsetIndex(r.location, k))(r.sparkSession))
+        l.copy(relation = rel).newInstance()
+    })
+
+  /** `base` seen through a file filter: its listing, partitions and
+    * caches are `base`'s; only the files `keep` rejects are left out.
+    */
+  private final class SubsetIndex(base: FileIndex, keep: Path => Boolean) extends FileIndex {
+    override def rootPaths: Seq[Path] = base.rootPaths
+    override def partitionSchema: StructType = base.partitionSchema
+    override def refresh(): Unit = base.refresh()
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      base.listFiles(partitionFilters, dataFilters)
+        .map(d => d.copy(files = d.files.filter(f => keep(f.getPath))))
+        .filter(_.files.nonEmpty)
+    override def inputFiles: Array[String] =
+      base.inputFiles.filter(f => keep(new Path(new java.net.URI(f))))
+    override lazy val sizeInBytes: Long = listFiles(Nil, Nil).flatMap(_.files).map(_.getLen).sum
   }
 }
