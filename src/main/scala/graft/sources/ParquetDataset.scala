@@ -145,33 +145,32 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
 
   // ---- stats sidecar ------------------------------------------------
 
-  /** The sidecar rows this instance holds, keyed by the sidecar's
-    * part-file listing: handed over by [[updateStats]] or read once on
-    * first use, within the driver bounds of `StatsSidecar` (nothing is
-    * held past them).
+  /** The sidecar this instance holds, keyed by the sidecar's part-file
+    * listing: handed over by [[updateStats]] or read once on first use.
+    * Its rows are held only within `StatsSidecar.SmallSidecarFiles` data
+    * files and `StatsSidecar.HeldSidecarBytes`; past them it holds the
+    * listing alone, so the bounds are judged once per sidecar.
     */
   @volatile private var held: Option[StatsSidecar.Held] = None
 
-  private def heldAt(key: Seq[(String, Long, Long)]) = held.filter(_.key == key)
-
-  /** The rows of the sidecar at `key`: the held ones, else read in one
-    * job and held; None past the driver bounds.
+  /** The rows of the sidecar at `key` for a dataset of `files` data
+    * files: the held ones, else read in one job and held; None past the
+    * bounds. `files` is evaluated only for a sidecar not held.
     */
-  private def rowsAt(key: Seq[(String, Long, Long)]): Option[Seq[ColStat]] = {
-    held = heldAt(key).orElse(StatsSidecar.load(spark, path, key))
-    held.map(_.rows)
+  private def rowsAt(key: Seq[(String, Long, Long)], files: => Int): Option[Seq[ColStat]] = {
+    val h = held.filter(_.key == key).getOrElse(StatsSidecar.load(spark, path, key, files))
+    held = Some(h)
+    h.rows
   }
 
-  /** The sidecar's rows on the driver, or past the driver bounds its
-    * frame; None without a sidecar.
+  /** The sidecar's held rows, or past the bounds its frame; None
+    * without a sidecar.
     */
   private def sidecarRows(): Option[Either[DataFrame, Seq[ColStat]]] =
-    StatsSidecar.listing(path).map(key => rowsAt(key).toRight(StatsSidecar.frame(spark, path)))
+    StatsSidecar.listing(path).map(key => rowsAt(key, files.size).toRight(StatsSidecar.frame(spark, path)))
 
-  /** The sidecar; a local frame over the held rows while they match it. */
-  def stats: Option[DataFrame] = StatsSidecar.listing(path).map { key =>
-    heldAt(key).fold(StatsSidecar.frame(spark, path))(_.frame)
-  }
+  /** The sidecar as a parquet read; None without one. */
+  def stats: Option[DataFrame] = StatsSidecar.listing(path).map(_ => StatsSidecar.frame(spark, path))
 
   /** Reconcile the sidecar with the physical files. */
   def updateStats(): DataFrame = {
@@ -181,10 +180,11 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
   }
 
   /** The sidecar rows of some columns for [[ScanPruner.select]], read
-    * only when it asks; None without a sidecar.
+    * only when it asks; None without a sidecar. `files` is the data-file
+    * count the caller has listed.
     */
-  private def statRows: Option[Seq[String] => Seq[ColStat]] =
-    StatsSidecar.listing(path).map(key => cols => rowsAt(key) match {
+  private def statRows(files: Int): Option[Seq[String] => Seq[ColStat]] =
+    StatsSidecar.listing(path).map(key => cols => rowsAt(key, files) match {
       case Some(rows) =>
         val cs = cols.toSet
         rows.filter(r => cs(r.column))
@@ -198,14 +198,14 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
     */
   def scan(filterSql: String): DataFrame = {
     val v = current()
-    val chosen = ScanPruner.select(statRows, v.rel, Sanitize(filterSql)).getOrElse(v.rel)
+    val chosen = ScanPruner.select(statRows(v.rel.size), v.rel, Sanitize(filterSql)).getOrElse(v.rel)
     if (chosen.isEmpty) subset(v, v.rel).limit(0) else subset(v, chosen)
   }
 
   /** Files a scan(filter) would read — the dry-run face of pruning. */
   def pruneFiles(filterSql: String): Seq[String] = {
     val all = relFiles
-    ScanPruner.select(statRows, all, Sanitize(filterSql)).getOrElse(all)
+    ScanPruner.select(statRows(all.size), all, Sanitize(filterSql)).getOrElse(all)
   }
 
   /** Dataset time range for a timestamp column, metadata-only from the

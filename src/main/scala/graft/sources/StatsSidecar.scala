@@ -13,7 +13,7 @@ import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.util.SerializableConfiguration
 
@@ -72,12 +72,19 @@ object StatsSidecar {
     * reason the distributed path exists) starts to matter before the
     * wall does. The byte
     * bound guards the shrunk-dataset edge (few live files, huge stale
-    * sidecar). A `ParquetDataset` holds its sidecar rows on the driver
-    * ([[Held]]) within the same two bounds.
+    * sidecar).
     */
   def SmallSidecarFiles: Int =
     sys.props.get("graft.sidecar.small.files").map(_.toInt).getOrElse(2048)
   val SmallSidecarBytes: Long = 16L * 1024 * 1024
+
+  /** The rows a `ParquetDataset` holds for its lifetime ([[Held]]) stay
+    * under a lower byte bound than the reconcile's transient ones: a
+    * sidecar decodes to ~17 bytes of driver heap per part-file byte
+    * (measured in docs/SCALE.md: 264 MiB for a 15.7 MiB sidecar), so
+    * 2 MiB holds at most ~35 MiB per instance.
+    */
+  val HeldSidecarBytes: Long = 2L * 1024 * 1024
 
   def sidecarPath(root: String): String = root.stripSuffix("/") + "/" + SidecarName
 
@@ -254,66 +261,43 @@ object StatsSidecar {
     Option.when(key.nonEmpty || FsUtil.exists(sidecarPath(root)))(key)
   }
 
-  /** Sidecar rows on the driver, with the listing of the part files
-    * they were read from or written as.
+  /** A sidecar's part-file listing and, within the file bound and
+    * [[HeldSidecarBytes]], its rows on the driver; past them `rows` is
+    * None, so the bounds are judged once per listing.
     */
-  final class Held(val key: Seq[(String, Long, Long)], val rows: Seq[ColStat], spark: SparkSession) {
-
-    /** The rows as a local frame in the sidecar's schema: collecting it
-      * launches no job, and [[StatsSidecar.rows]] answers it from
-      * `rows` without planning a query.
-      */
-    lazy val frame: DataFrame = {
-      val f = spark.createDataFrame(rows.map(r => Row.fromSeq(r.productIterator.map {
-        case o: Option[_] => o.getOrElse(null)
-        case v => v
-      }.toSeq)).asJava, colStatSchema)
-      heldFrames.put(f, rows)
-      f
-    }
-  }
-
-  /** The rows behind each live [[Held.frame]] (weak keys: an entry goes
-    * with its frame).
-    */
-  private val heldFrames =
-    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[DataFrame, Seq[ColStat]])
+  final case class Held(key: Seq[(String, Long, Long)], rows: Option[Seq[ColStat]])
 
   /** A sidecar listed as `key` for a dataset of `files` data files is
-    * within both driver bounds.
+    * within the file bound and `bytes`.
     */
-  private def onDriver(key: Seq[(String, Long, Long)], files: => Int): Boolean =
-    key.map(_._2).sum <= SmallSidecarBytes && files <= SmallSidecarFiles
+  private def onDriver(key: Seq[(String, Long, Long)], files: => Int,
+                       bytes: Long = SmallSidecarBytes): Boolean =
+    key.map(_._2).sum <= bytes && files <= SmallSidecarFiles
 
-  /** The rows of the sidecar at `key`, read in one job, when it is
-    * within both driver bounds; None past them.
+  /** The sidecar at `key` for a dataset of `files` data files: its rows
+    * read in one job within the bounds for holding them, none past them.
     */
-  def load(spark: SparkSession, root: String, key: Seq[(String, Long, Long)]): Option[Held] =
-    Option.when(onDriver(key, FsUtil.listParquet(root).size))(
-      new Held(key, rows(frame(spark, root)).toSeq, spark))
+  def load(spark: SparkSession, root: String, key: Seq[(String, Long, Long)], files: => Int): Held =
+    Held(key, Option.when(onDriver(key, files, HeldSidecarBytes))(rows(frame(spark, root)).toSeq))
 
   private val colStatEncoder: Encoder[ColStat] = Encoders.product[ColStat]
 
   /** Stats rows on the driver, in one job — the reader behind [[load]]
-    * and the scan pruner past the driver bound; a held frame is
-    * answered from its rows. With `columns`, only those leaf columns'
-    * rows are read (an IN filter pushed into the parquet scan).
+    * and the scan pruner past the driver bound. With `columns`, only
+    * those leaf columns' rows are read (an IN filter pushed into the
+    * parquet scan).
     */
   def rows(sidecar: DataFrame, columns: Option[Seq[String]] = None): Array[ColStat] =
-    Option(heldFrames.get(sidecar)) match {
-      case Some(held) => columns.fold(held)(cs => held.filter(r => cs.contains(r.column))).toArray
-      case None =>
-        columns.fold(sidecar)(cs => sidecar.filter(col("column").isin(cs: _*)))
-          .as(colStatEncoder).collect()
-    }
+    columns.fold(sidecar)(cs => sidecar.filter(col("column").isin(cs: _*)))
+      .as(colStatEncoder).collect()
 
   /** Reconcile the sidecar with the physical files — physical discovery
     * is authoritative (ADR 0001; pydala/metadata.py:809-862): stats for
     * removed files are dropped, new files get footers read, and an
     * empty dataset removes the stale sidecar entirely. `held` rows
     * whose key still matches the sidecar's listing stand in for
-    * re-reading it. Returns the new sidecar and, on the driver path,
-    * its rows to hold.
+    * re-reading it. Returns the new sidecar and its [[Held]] (rows only
+    * on the driver path); None once the sidecar is removed.
     */
   def update(spark: SparkSession, root: String,
              held: Option[Held] = None): (DataFrame, Option[Held]) = {
@@ -341,7 +325,7 @@ object StatsSidecar {
         // rows in memory and read the few fresh footers inline. The
         // 100 TB path below is unchanged.
         val liveSet = rel.toSet
-        val prior = held.filter(h => key.contains(h.key)).map(_.rows)
+        val prior = held.filter(h => key.contains(h.key)).flatMap(_.rows)
           .orElse(key.map(_ => rows(frame(spark, root)).toSeq))
         val kept = prior.getOrElse(Nil).filter(cs => liveSet(cs.file_path))
         val known = kept.map(_.file_path).toSet
@@ -372,6 +356,6 @@ object StatsSidecar {
     FsUtil.deleteRecursively(p)
     FsUtil.rename(tmp, p)
     val now = FsUtil.dataFiles(p)
-    (frame(spark, root), written.filter(_ => onDriver(now, absFiles.size)).map(new Held(now, _, spark)))
+    (frame(spark, root), Some(Held(now, written.filter(_ => onDriver(now, absFiles.size, HeldSidecarBytes)))))
   }
 }

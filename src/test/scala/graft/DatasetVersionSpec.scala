@@ -89,6 +89,24 @@ class DatasetVersionSpec extends SparkSpecBase {
     }
   }
 
+  test("rows of a sidecar past the held-rows bound are read on every call, not held") {
+    val dir = tmpDir("ver_heldbound")
+    val n = 150000L
+    // one row group of 10 rows per sidecar row, random (incompressible) bounds
+    spark.range(n).select(
+      concat(lit("f"), (col("id") / 8).cast("string"), lit(".parquet")).as("file_path"),
+      (col("id") % 8).cast("int").as("row_group"), lit(10L).as("rg_num_rows"),
+      lit("id").as("column"), lit("long").as("typ"),
+      (rand(1) * 1e15).cast("long").as("min_int"), (rand(2) * 1e15).cast("long").as("max_int"),
+      rand(3).as("min_num"), rand(4).as("max_num"))
+      .coalesce(1).write.parquet(StatsSidecar.sidecarPath(dir))
+    val bytes = StatsSidecar.listing(dir).get.map(_._2).sum
+    assert(bytes > StatsSidecar.HeldSidecarBytes && bytes <= StatsSidecar.SmallSidecarBytes)
+    val ds = new ParquetDataset(spark, dir)
+    assert(jobsLaunched(assert(ds.count() == 10 * n)) >= 1)
+    assert(jobsLaunched(assert(ds.count() == 10 * n)) >= 1)
+  }
+
   Seq("file" -> ((d: String) => d), "objstore" -> ((d: String) => ObjectStoreFs.path(d))).foreach {
     case (scheme, on) =>
       test(s"an instance sees another instance's append and sidecar refresh ($scheme)") {
