@@ -81,7 +81,7 @@ object Delete {
       WritePipeline.write(ds.read(affectedRel).filter(!coalesce(pred, lit(false))), tmp,
         WriteConfig(partitionBy = ds.partitionColumns))
     }
-    if (ds.stats.nonEmpty) ds.updateStats()
+    if (ds.hasStats) ds.updateStats()
     DeleteResult(deleted, affectedRel, preserved)
   }
 

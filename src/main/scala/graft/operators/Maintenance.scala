@@ -214,7 +214,7 @@ object Maintenance {
           WriteConfig(maxRowsPerFile = maxRowsPerFile))
       }
     }
-    if (ds.stats.nonEmpty) ds.updateStats()
+    if (ds.hasStats) ds.updateStats()
   }
 
   // ---- repartition --------------------------------------------------
@@ -235,7 +235,7 @@ object Maintenance {
       dateparts = dateparts,
       maxRowsPerFile = maxRowsPerFile)
     Swap(ds, TmpOp, ds.relFiles)(WritePipeline.write(ds.df, _, cfg))
-    if (ds.stats.nonEmpty) ds.updateStats()
+    if (ds.hasStats) ds.updateStats()
   }
 
   // ---- dtype optimization ------------------------------------------
@@ -329,7 +329,7 @@ object Maintenance {
         System.err.println(s"[repair] $f left intact: ${e.getCause.getMessage}")
       }
     }
-    if (ds.stats.nonEmpty) ds.updateStats()
+    if (ds.hasStats) ds.updateStats()
     plan
   }
 
@@ -344,7 +344,7 @@ object Maintenance {
       WritePipeline.write(SchemaOps.align(transform(ds.df), target), tmp,
         WriteConfig(partitionBy = ds.partitionColumns, maxRowsPerFile = maxRowsPerFile))
     }
-    if (ds.stats.nonEmpty) ds.updateStats()
+    if (ds.hasStats) ds.updateStats()
   }
 
   // ---- z-order clustering ------------------------------------------

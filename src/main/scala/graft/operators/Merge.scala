@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Bridge
+import org.apache.spark.sql.types._
 import graft.functions.SchemaOps
 import graft.sources.{FsUtil, ParquetDataset, Swap, WriteConfig, WritePipeline}
 
@@ -78,24 +82,38 @@ final class MergeCleanupError(
   * `_tmp_merge`): update stages `keep ∪ matched source`, upsert
   * `keep ∪ source` — every target row whose key the source carries
   * lies in an affected file, so the unmatched source rows are exactly
-  * the inserts — and insert stages the anti-join and retires nothing.
+  * the inserts — and insert stages the unmatched source rows and
+  * retires nothing.
+  *
+  * Two paths with one contract. A source whose deduplicated plan Spark
+  * estimates at or below `spark.sql.autoBroadcastJoinThreshold` (the
+  * bound Spark broadcasts a join side under; `-1` turns this path off
+  * too) and that holds at most [[SmallSourceKeys]] distinct keys is
+  * held on the driver: collected once, deduplicated there, and
+  * matched against the target by a null-safe IN set of its keys
+  * that pushes into the parquet scan — one job returns the file, key
+  * and partition values of every matched row, and the staged rows
+  * reach the write as a local relation. Its key and partition columns
+  * must have the same exactly comparable types on both sides, and the
+  * match job's distinct (file, key) rows must stay within a small
+  * multiple of the source (`MatchRowsPerKey`). Any other source takes
+  * the distributed path: a cached window dedup, key-range bounds, and
+  * joins.
+  *
   * Counts come from passes the merge runs anyway: `updated` is the
-  * discovery pass's distinct matched source keys, `inserted` is
+  * number of distinct matched source keys (from the driver's matched
+  * rows, or the distributed discovery aggregate), `inserted` is
   * `sourceCount − updated` for upsert and the staged files' footer row
   * counts for insert.
-  *
-  * Scale notes: the only shuffles are the key joins; matched-file
-  * discovery rides on `input_file_name()` so no extra pass over the
-  * target is needed; unmatched files are never read past their footer
-  * (semi-join probes push the key filter down).
   *
   * Source-reads-target rule: a `source` may read this same dataset
   * (incremental index maintenance — new values computed from current
   * values). Every read of the source, and of the target, finishes in
-  * the staged write, before anything is promoted. Once the swap
-  * promotes, `refreshByPath` invalidates every cached plan over the
-  * target path, so a caller that reuses such a frame after the merge
-  * sees the new state, not the one the merge read.
+  * the staged write (on the driver path, before it), before anything
+  * is promoted. Once the swap promotes, `refreshByPath` invalidates
+  * every cached plan over the target path, so a caller that reuses
+  * such a frame after the merge sees the new state, not the one the
+  * merge read.
   */
 object Merge {
 
@@ -117,26 +135,11 @@ object Merge {
 
     val ks = effectiveKeys(source.columns.toSeq, ds.schema.fieldNames.toSeq, keys)
     require(ks.nonEmpty, "no common key columns between source and target")
-    val src = dedupLastWins(source, ks).cache()
-
-    try {
-      // every target-side scan is range-bounded by the source's key
-      // min/max (the reference's delta pre-filter) — the predicates
-      // push down to parquet, so target row groups outside the merge's
-      // key range are never decoded
-      val (bounds, srcCount) = keyBounds(src, ks)
-      val tgtB = rangeBound(ds.df, ks, bounds)
-      if (strategy == "insert") {
-        val before = ds.relFiles
-        val newRows = src.join(keysOf(tgtB, ks).distinct(), keyCond(src, ks), "left_anti")
-        val ins = swap(ds, Nil, SchemaOps.align(newRows, ds.schema), partCols)
-        MergeResult(srcCount, ins.rows, 0, Nil, ins.files, before)
-      } else rewrite(ds, src, ks, partCols, strategy == "upsert", tgtB, srcCount)
-    } finally {
-      // a long-lived session runs many merges — don't let per-merge
-      // caches accumulate executor memory
-      src.unpersist()
-    }
+    val deduped = dedupLastWins(source, ks)
+    val small =
+      if (onDriver(deduped, source.schema, ds.schema, ks, partCols)) local(ds, source, ks, partCols, strategy)
+      else None
+    small.getOrElse(distributed(ds, deduped.cache(), ks, partCols, strategy))
   }
 
   /** Multi-source form: a list of sources is ONE logical batch
@@ -169,6 +172,137 @@ object Merge {
       .filter(col("__rn") === 1)
       .drop("__ord", "__rn")
   }
+
+  // ---- driver path ---------------------------------------------------
+
+  /** The deduplicated source is within the broadcast threshold, it
+    * names every key, and each key and partition column it carries has
+    * one type on both sides that Scala equality compares as Spark's
+    * `<=>` does.
+    */
+  private def onDriver(deduped: DataFrame, src: StructType, tgt: StructType,
+                       ks: Seq[String], partCols: Seq[String]): Boolean = {
+    def exact(t: DataType) = t match {
+      case ByteType | ShortType | IntegerType | LongType | BooleanType | DateType |
+           TimestampType | TimestampNTZType | _: DecimalType => true
+      case t => t == StringType // the default collation compares bytes
+    }
+    Bridge.withinBroadcastThreshold(deduped) && ks.forall(src.fieldNames.contains) &&
+      (ks ++ partCols).filter(src.fieldNames.contains).forall(c => tgt.fieldNames.contains(c) &&
+        src(c).dataType == tgt(c).dataType && exact(src(c).dataType))
+  }
+
+  /** The most distinct keys a source merges with on the driver path.
+    * Its cost grows with the keys (collected, deduplicated, and carried
+    * as an IN set by the match scan and the staged write); the
+    * distributed path's is mostly fixed jobs. MEASURED, not chosen: in
+    * the upsert sweep in docs/SCALE.md the driver path wins up to
+    * 10,000 keys, breaks even there for a two-column key, and loses
+    * from 30,000, well inside what the broadcast threshold admits (a
+    * 10 MB estimate is ~150k rows of a local relation, ~1M of parquet).
+    */
+  val SmallSourceKeys = 10000
+
+  /** The driver path's match job returns distinct (file, key, partition
+    * values) rows, at most `MatchRowsPerKey` per source key and at
+    * least `MatchRowsFloor` in all. Target keys need not be unique,
+    * so a few source keys can match a key in every file; past the cap
+    * the merge takes the distributed path, which reduces its matches on
+    * the executors, and the driver holds a small multiple of the source
+    * it has already collected.
+    */
+  private val MatchRowsPerKey = 4
+  private val MatchRowsFloor = 1024
+
+  /** The merge of a source held on the driver (see the class doc), or
+    * None past [[SmallSourceKeys]] or the match cap above. The source's
+    * rows come back in its row order, so the last of each key wins as
+    * in [[dedupLastWins]].
+    */
+  private def local(ds: ParquetDataset, source: DataFrame, ks: Seq[String],
+                    partCols: Seq[String], strategy: String): Option[MergeResult] = {
+    val schema = source.schema
+    val ki = ks.map(schema.fieldIndex)
+    def keyOf(r: Row): Seq[Any] = ki.map(r.get)
+    val src = source.collect().toSeq.reverse.distinctBy(keyOf).reverse
+    if (src.size > SmallSourceKeys) return None
+    val srcCount = src.size.toLong
+    val hit = keyIn(ks, ki.map(schema(_).dataType), src.map(keyOf))
+    def frame(rows: Seq[Row]) =
+      SchemaOps.align(ds.spark.createDataFrame(rows.asJava, schema), ds.schema)
+
+    // the one target job: file, key and partition values per matched
+    // row, repeats dropped and capped within each scan task
+    val cap = math.max(MatchRowsPerKey * src.size, MatchRowsFloor)
+    val srcPartCols = partCols.filter(schema.fieldNames.contains)
+    val found = ds.df.filter(hit)
+      .select(input_file_name() +: (ks ++ srcPartCols).map(col): _*)
+      .rdd.mapPartitions(_.distinct.take(cap + 1)).collect().distinct
+    if (found.length > cap) return None
+    def foundKey(r: Row): Seq[Any] = ks.indices.map(i => r.get(1 + i))
+    val matched = found.iterator.map(foundKey).toSet
+
+    if (strategy == "insert") {
+      val before = ds.relFiles
+      val ins = swap(ds, Nil, frame(src.filterNot(r => matched(keyOf(r)))), partCols)
+      return Some(MergeResult(srcCount, ins.rows, 0, Nil, ins.files, before))
+    }
+    val bySrcKey = src.map(r => keyOf(r) -> r).toMap
+    val pi = srcPartCols.map(schema.fieldIndex)
+    if (found.exists(r => pi.zipWithIndex.exists { case (i, j) =>
+        bySrcKey(foundKey(r)).get(i) != r.get(1 + ks.size + j) }))
+      throw new IllegalArgumentException(
+        "merge update would change a partition value; rewrite rejected")
+    val affectedRel = found.map(r => FsUtil.relativize(ds.path, r.getString(0))).distinct.sorted.toSeq
+    val upsert = strategy == "upsert"
+    val updated = matched.size.toLong
+    Some(rewrite(ds, partCols, affectedRel, upsert, srcCount, updated) { affected =>
+      val incoming = frame(if (upsert) src else src.filter(r => matched(keyOf(r))))
+      affected.foldLeft(incoming) { (in, a) =>
+        SchemaOps.align(a.filter(!coalesce(hit, lit(false))), ds.schema).unionByName(in)
+      }
+    })
+  }
+
+  /** A target row's key is among `keys` (tuples in `ks` order, of the
+    * column types `types`), null-safe: an IN set per column, which the
+    * parquet scan can push down, made exact for a compound key by an IN
+    * set of key structs (struct ordering matches null fields).
+    */
+  private def keyIn(ks: Seq[String], types: Seq[DataType], keys: Seq[Seq[Any]]): Column = {
+    if (keys.isEmpty) return lit(false)
+    val perColumn = ks.indices.map { i =>
+      val (nulls, vals) = keys.map(_(i)).distinct.partition(_ == null)
+      val in = Option.when(vals.nonEmpty)(Bridge.inSet(col(ks(i)), types(i), vals))
+      (in ++ Option.when(nulls.nonEmpty)(col(ks(i)).isNull)).reduce(_ || _)
+    }.reduce(_ && _)
+    if (ks.size == 1) perColumn
+    else perColumn && Bridge.inSet(struct(ks.map(col): _*),
+      StructType(ks.indices.map(i => StructField(ks(i), types(i)))), keys.map(Row.fromSeq))
+  }
+
+  // ---- distributed path ----------------------------------------------
+
+  private def distributed(ds: ParquetDataset, src: DataFrame, ks: Seq[String],
+                          partCols: Seq[String], strategy: String): MergeResult =
+    try {
+      // every target-side scan is range-bounded by the source's key
+      // min/max (the reference's delta pre-filter) — the predicates
+      // push down to parquet, so target row groups outside the merge's
+      // key range are never decoded
+      val (bounds, srcCount) = keyBounds(src, ks)
+      val tgtB = rangeBound(ds.df, ks, bounds)
+      if (strategy == "insert") {
+        val before = ds.relFiles
+        val newRows = src.join(keysOf(tgtB, ks).distinct(), keyCond(src, ks), "left_anti")
+        val ins = swap(ds, Nil, SchemaOps.align(newRows, ds.schema), partCols)
+        MergeResult(srcCount, ins.rows, 0, Nil, ins.files, before)
+      } else discover(ds, src, ks, partCols, strategy == "upsert", tgtB, srcCount)
+    } finally {
+      // a long-lived session runs many merges — don't let per-merge
+      // caches accumulate executor memory
+      src.unpersist()
+    }
 
   /** The reference's delta pre-filter (_get_delta_other_df,
     * pydala/dataset.py:808-863): bound the target's key read with
@@ -210,32 +344,19 @@ object Merge {
   private def keyCond(t: DataFrame, ks: Seq[String]): Column =
     ks.map(k => t(k) <=> col(s"__k_$k")).reduce(_ && _)
 
-  /** The merge's one swap: stage `data` under `_tmp_merge`, retire
-    * `originals`. A failed promote surfaces as [[PartialMergeError]].
+  /** Matched-file discovery for update and upsert: ONE bounded pass
+    * over the target, one global aggregate giving the matched-file set
+    * (only these are rewritten), the distinct matched source keys
+    * (`updated`; source keys are unique after dedupLastWins) and the
+    * partition-change rejection (tests/test_dataset_merge.py:400-427: a
+    * source row's partition value must equal the matched target row's).
+    * Discovery rides on `input_file_name()`, so unmatched files are
+    * never read past their footer.
     */
-  private def swap(ds: ParquetDataset, originals: Seq[String], data: DataFrame,
-                   partCols: Seq[String]): Swap.Result = {
-    val res =
-      try Swap(ds, "merge", originals) { tmp =>
-        WritePipeline.write(data, tmp, WriteConfig(partitionBy = partCols))
-      } catch { case e: FsUtil.PromoteFailedException =>
-        throw new PartialMergeError(originals, e.promoted, e.remaining, e)
-      }
-    if (ds.stats.nonEmpty) ds.updateStats()
-    res
-  }
-
-  private def rewrite(ds: ParquetDataset, src: DataFrame, ks: Seq[String],
-                      partCols: Seq[String], upsert: Boolean,
-                      tgtB: DataFrame, srcCount: Long): MergeResult = {
+  private def discover(ds: ParquetDataset, src: DataFrame, ks: Seq[String],
+                       partCols: Seq[String], upsert: Boolean,
+                       tgtB: DataFrame, srcCount: Long): MergeResult = {
     val tgtF = tgtB.withColumn("__file", input_file_name())
-
-    // ONE bounded pass over the target, one global aggregate: the
-    // matched-file set (only these are rewritten), the distinct
-    // matched source keys (`updated`; source keys are unique after
-    // dedupLastWins) and the partition-change rejection
-    // (tests/test_dataset_merge.py:400-427: a source row's partition
-    // value must equal the matched target row's)
     val srcPartCols = partCols.filter(src.columns.contains)
     val srcProj = src.select(ks.map(k => col(k).as(s"__k_$k")) ++
       srcPartCols.map(p => col(p).as(s"__p_$p")): _*)
@@ -252,25 +373,50 @@ object Merge {
         "merge update would change a partition value; rewrite rejected")
     val affectedRel = found.getSeq[String](0)
       .map(f => FsUtil.relativize(ds.path, f)).sorted
-    val updated = found.getLong(1)
+    rewrite(ds, partCols, affectedRel, upsert, srcCount, found.getLong(1)) { affected =>
+      // upsert stages the whole source; update only its matched rows
+      val incoming =
+        if (upsert) src
+        else src.join(keysOf(affected.get, ks).distinct(), keyCond(src, ks), "left_semi")
+      // rows whose key is NOT being merged survive as-is
+      affected.foldLeft(SchemaOps.align(incoming, ds.schema)) { (in, a) =>
+        SchemaOps.align(a.join(keysOf(src, ks), keyCond(a, ks), "left_anti"), ds.schema)
+          .unionByName(in)
+      }
+    }
+  }
+
+  // ---- the swap --------------------------------------------------------
+
+  /** The merge's one swap: stage `data` under `_tmp_merge`, retire
+    * `originals`. A failed promote surfaces as [[PartialMergeError]].
+    */
+  private def swap(ds: ParquetDataset, originals: Seq[String], data: DataFrame,
+                   partCols: Seq[String]): Swap.Result = {
+    val res =
+      try Swap(ds, "merge", originals) { tmp =>
+        WritePipeline.write(data, tmp, WriteConfig(partitionBy = partCols))
+      } catch { case e: FsUtil.PromoteFailedException =>
+        throw new PartialMergeError(originals, e.promoted, e.remaining, e)
+      }
+    if (ds.hasStats) ds.updateStats()
+    res
+  }
+
+  /** Update and upsert's swap: the `affectedRel` files are replaced by
+    * `stage` of their read (None without an affected file, where
+    * update has nothing to do and upsert stages the source alone).
+    */
+  private def rewrite(ds: ParquetDataset, partCols: Seq[String], affectedRel: Seq[String],
+                      upsert: Boolean, srcCount: Long, updated: Long)(
+                      stage: Option[DataFrame] => DataFrame): MergeResult = {
     val inserted = if (upsert) srcCount - updated else 0L
     val allRel = ds.relFiles
     val preserved = allRel.filterNot(affectedRel.contains)
     if (affectedRel.isEmpty && !upsert)
       return MergeResult(srcCount, 0, 0, Nil, Nil, preserved)
-
-    val affected = Option.when(affectedRel.nonEmpty)(ds.read(affectedRel))
-    // upsert stages the whole source; update only its matched rows
-    val incoming =
-      if (upsert) src
-      else src.join(keysOf(affected.get, ks).distinct(), keyCond(src, ks), "left_semi")
-    // rows whose key is NOT being merged survive as-is
-    val data = affected.foldLeft(SchemaOps.align(incoming, ds.schema)) { (in, a) =>
-      SchemaOps.align(a.join(keysOf(src, ks), keyCond(a, ks), "left_anti"), ds.schema)
-        .unionByName(in)
-    }
     val staged =
-      try swap(ds, affectedRel, data, partCols)
+      try swap(ds, affectedRel, stage(Option.when(affectedRel.nonEmpty)(ds.read(affectedRel))), partCols)
       catch { case e: MaintenanceCleanupError =>
         // the rewrite landed; only the superseded originals remain
         val landed = scala.util.Try(ds.relFiles.filterNot(allRel.contains)).getOrElse(Nil)

@@ -172,6 +172,9 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
   /** The sidecar as a parquet read; None without one. */
   def stats: Option[DataFrame] = StatsSidecar.listing(path).map(_ => StatsSidecar.frame(spark, path))
 
+  /** Whether the dataset has a sidecar: a listing, no parquet relation. */
+  def hasStats: Boolean = StatsSidecar.listing(path).nonEmpty
+
   /** Reconcile the sidecar with the physical files. */
   def updateStats(): DataFrame = {
     val (frame, h) = StatsSidecar.update(spark, path, held)
@@ -245,7 +248,7 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
   def write(data: DataFrame, cfg: WriteConfig = WriteConfig()): Unit = {
     WritePipeline.write(data, path, cfg)
     refreshSchema() // appends can evolve the unified schema
-    if (stats.nonEmpty || cfg.mode == "overwrite") updateStats()
+    if (hasStats || cfg.mode == "overwrite") updateStats()
   }
 
   // ---- maintenance --------------------------------------------------
@@ -264,7 +267,7 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
     refreshSchema()
     // keep the sidecar in sync: count()/timeRange()/scan() prefer it, so a
     // stale sidecar would keep serving rows for the files just deleted
-    if (stats.nonEmpty) updateStats()
+    if (hasStats) updateStats()
   }
 }
 

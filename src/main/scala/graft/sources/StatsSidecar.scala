@@ -6,15 +6,17 @@ import scala.reflect.ClassTag
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.{CompressionCodecName, ParquetMetadata}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.schema.LogicalTypeAnnotation.{DateLogicalTypeAnnotation, StringLogicalTypeAnnotation, TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.util.SerializableConfiguration
 
 /** One row of the stats sidecar: file × row-group × column min/max
@@ -61,7 +63,7 @@ object StatsSidecar {
 
   /** Driver bounds: [[footers]] reads up to `SmallSidecarFiles` footers
     * on the driver, and a sidecar within BOTH limits is reconciled
-    * driver-side by [[update]] (one tiny local-relation write) instead of
+    * driver-side by [[update]] (one part file written on the driver) instead of
     * paying the distributed reconcile's per-call fixed cost. The file
     * bound is MEASURED, not chosen (the archived sweep in docs/SCALE.md
     * at 256/512/1024/2048 files, min of 9 reps): the fast path wins at
@@ -291,6 +293,36 @@ object StatsSidecar {
     columns.fold(sidecar)(cs => sidecar.filter(col("column").isin(cs: _*)))
       .as(colStatEncoder).collect()
 
+  /** `rows` as one snappy part file under `dir`, written on the driver
+    * with parquet-hadoop's writer: the parquet schema Spark's writer
+    * gives the [[ColStat]] encoder's schema, in Spark's default codec,
+    * without its job. Fields are set by name.
+    */
+  private def writeOnDriver(spark: SparkSession, dir: String, rows: Seq[ColStat]): Unit = {
+    val file = new HPath(dir, s"part-00000-${java.util.UUID.randomUUID()}-c000.snappy.parquet")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val schema = Bridge.parquetSchema(spark, colStatEncoder.schema)
+    val out = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(file, conf))
+      .withConf(conf).withType(schema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    try rows.foreach { r =>
+      val g = new SimpleGroup(schema)
+      r.productElementNames.zip(r.productIterator).foreach {
+        case (_, None) =>
+        case (f, Some(v)) => add(g, f, v)
+        case (f, v) => add(g, f, v)
+      }
+      out.write(g)
+    } finally out.close()
+  }
+
+  private def add(g: SimpleGroup, f: String, v: Any): Unit = v match {
+    case s: String => g.add(f, s)
+    case n: Int => g.add(f, n)
+    case n: Long => g.add(f, n)
+    case d: Double => g.add(f, d)
+  }
+
   /** Reconcile the sidecar with the physical files — physical discovery
     * is authoritative (ADR 0001; pydala/metadata.py:809-862): stats for
     * removed files are dropped, new files get footers read, and an
@@ -332,27 +364,29 @@ object StatsSidecar {
         val fresh = absFiles.filterNot(f => known.contains(FsUtil.relativize(root, f)))
         kept ++ footers(spark, fresh)(colStats(root, _, _)).flatten
       }
-    val df: DataFrame = written.map(_.toDF()).getOrElse {
-      val live = rel.toDF("file_path")
-      val existing: DataFrame = key.map(_ => frame(spark, root))
-        .map(_.join(live, Seq("file_path"), "left_semi"))
-        .getOrElse(spark.emptyDataset[ColStat].toDF())
-      val known = existing.select("file_path").distinct().as[String]
-        .collect().toSet // file-count-sized, not stats-sized
-      val freshFiles =
-        absFiles.filterNot(f => known.contains(FsUtil.relativize(root, f)))
-      existing.unionByName(collectDF(spark, root, freshFiles))
-    }
     // stage + atomic-ish swap so a crash never leaves a torn sidecar;
     // the staged write reads the OLD sidecar (still in place) for the
     // retained rows, so the delete below is strictly after the copy.
-    // Sharded for huge listings: ~4k files of stats per output shard
-    // keeps each write task bounded without funneling a 10⁶-file
-    // dataset's stats through one task.
+    // The driver path writes its rows as one part file with no Spark
+    // job; past it the write is sharded for huge listings: ~4k files
+    // of stats per output shard keeps each write task bounded without
+    // funneling a 10⁶-file dataset's stats through one task.
     val tmp = p + ".tmp"
     FsUtil.deleteRecursively(tmp)
-    val shards = math.max(1, absFiles.size / 4096)
-    df.coalesce(shards).write.mode("overwrite").parquet(tmp)
+    written match {
+      case Some(rows) => writeOnDriver(spark, tmp, rows)
+      case None =>
+        val live = rel.toDF("file_path")
+        val existing: DataFrame = key.map(_ => frame(spark, root))
+          .map(_.join(live, Seq("file_path"), "left_semi"))
+          .getOrElse(spark.emptyDataset[ColStat].toDF())
+        val known = existing.select("file_path").distinct().as[String]
+          .collect().toSet // file-count-sized, not stats-sized
+        val freshFiles =
+          absFiles.filterNot(f => known.contains(FsUtil.relativize(root, f)))
+        existing.unionByName(collectDF(spark, root, freshFiles))
+          .coalesce(math.max(1, absFiles.size / 4096)).write.mode("overwrite").parquet(tmp)
+    }
     FsUtil.deleteRecursively(p)
     FsUtil.rename(tmp, p)
     val now = FsUtil.dataFiles(p)

@@ -116,7 +116,7 @@ object Swap {
     if (pending.isEmpty) return false
     ds.spark.catalog.refreshByPath(root)
     ds.refreshSchema()
-    if (ds.stats.nonEmpty) ds.updateStats()
+    if (ds.hasStats) ds.updateStats()
     true
   }
 

@@ -33,10 +33,12 @@ final case class UniqueOn(columns: Seq[String]) extends UniqueSpec
   * (reference pydala/io.py:381-437 prepare, 533-664 write).
   *
   * Scale notes: every stage is a narrow/declarative DataFrame op —
-  * Catalyst fuses the casts and dateparts into the write scan; the only
-  * shuffles are the optional global sort (range partitioner) and the
-  * dedup (hash partition on the key subset). `maxRecordsPerFile` bounds
-  * file sizes without a repartition.
+  * Catalyst fuses the casts and dateparts into the write scan; the
+  * shuffles are the optional global sort (range partitioner), the
+  * dedup (hash partition on the key subset) and, for a partitioned
+  * write, one rebalance on the partition columns, so each partition
+  * value lands in one file per advisory-size slice rather than one per
+  * write task. `maxRecordsPerFile` still caps every file.
   */
 final case class WriteConfig(
     mode: String = "append", // append | overwrite
@@ -164,9 +166,15 @@ object WritePipeline {
   /** Execute the pipeline and write. `overwrite` reproduces the
     * reference's write-new-then-delete-old crash semantics
     * (pydala/dataset.py:995-1002).
+    *
+    * A partitioned write is clustered by its partition columns with
+    * Spark's `REBALANCE`: AQE splits a partition value past the
+    * advisory partition size and merges small ones, so a write leaves
+    * one file per partition value it touches (per advisory-size slice
+    * of it), not one per task and value.
     */
   def write(df: DataFrame, path: String, cfg: WriteConfig): Unit = {
-    val prepared = prepare(df, cfg)
+    val prepared = clustered(df, cfg)
     val before: Set[String] =
       if (cfg.mode == "overwrite") FsUtil.listParquet(path).toSet else Set.empty
 
@@ -191,6 +199,25 @@ object WritePipeline {
     // drop the session's cached file listing for this path — Spark's
     // shared FileStatusCache otherwise serves the pre-write listing
     df.sparkSession.catalog.refreshByPath(path)
+  }
+
+  /** [[prepare]], rebalanced on the partition columns for a
+    * partitioned write. A `sortBy` order is then a sort within each
+    * rebalanced task, which gives every file its order; prepare's
+    * global sort, a range shuffle the rebalance would undo, runs only
+    * where `unique` keeps the first row of that order. A write that
+    * drops a sort column keeps the global sort and is not rebalanced.
+    */
+  private def clustered(df: DataFrame, cfg: WriteConfig): DataFrame = {
+    val parts = cfg.partitionBy.map(col)
+    lazy val unsorted = prepare(df, cfg.copy(sortBy = Nil))
+    if (parts.isEmpty) prepare(df, cfg)
+    else if (cfg.sortBy.isEmpty) unsorted.hint("rebalance", parts: _*)
+    else if (cfg.sortBy.forall(k => unsorted.columns.contains(k.column)))
+      (if (cfg.unique == UniqueOff) unsorted else prepare(df, cfg))
+        .hint("rebalance", parts: _*)
+        .sortWithinPartitions(parts ++ cfg.sortBy.map(_.toColumn): _*)
+    else prepare(df, cfg)
   }
 
   /** List-of-sources write: each element is written as its own batch —

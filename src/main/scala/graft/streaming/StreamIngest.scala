@@ -29,7 +29,7 @@ object StreamIngest {
     * (incremental refreshes ride the batch path after that).
     */
   private def ensureSidecar(ds: ParquetDataset): Unit =
-    if (ds.stats.isEmpty) { ds.updateStats(); () }
+    if (!ds.hasStats) { ds.updateStats(); () }
 
   /** Append-mode ingestion through the normalizing write pipeline. */
   def append(stream: DataFrame, path: String, cfg: WriteConfig,

@@ -3,15 +3,17 @@ package org.apache.spark.sql.graftshim
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Expression, InSet}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter, SparkToParquetSchemaConverter}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Column ⇄ Expression bridge. Spark 4 made these converters
   * `private[sql]`; a shim package under org.apache.spark.sql is the
@@ -46,6 +48,34 @@ object Bridge {
                               ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
     ext.registerFunctions(
       spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry)
+
+  /** `c IN values` as one `InSet` over the values in Catalyst's
+    * internal form: one expression however many values, where `isin`
+    * builds, analyzes and folds a literal per value. The parquet scan
+    * takes it on a column as a pushed IN filter. `values` are external
+    * (`Row`) values of `dataType`, without null.
+    */
+  def inSet(c: Column, dataType: DataType, values: Iterable[Any]): Column = {
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dataType)
+    column(InSet(expression(c), values.iterator.map(toCatalyst).toSet))
+  }
+
+  /** Spark's size estimate of `df`'s optimized plan is within the
+    * session's `spark.sql.autoBroadcastJoinThreshold`, the bound under
+    * which it broadcasts a join side; never when that is negative (off).
+    */
+  def withinBroadcastThreshold(df: DataFrame): Boolean = {
+    val bound = df.sparkSession.asInstanceOf[classic.SparkSession].sessionState.conf
+      .autoBroadcastJoinThreshold
+    bound >= 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= bound
+  }
+
+  /** The parquet schema Spark's parquet writer gives `schema` under the
+    * session's settings.
+    */
+  def parquetSchema(spark: SparkSession, schema: StructType): MessageType =
+    new SparkToParquetSchemaConverter(spark.asInstanceOf[classic.SparkSession].sessionState.conf)
+      .convert(schema)
 
   /** Spark's footer-to-schema rule under the settings `confs` (a
     * session's `spark.conf.getAll`: plain strings, which an executor

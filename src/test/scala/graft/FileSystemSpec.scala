@@ -42,10 +42,12 @@ class FileSystemSpec extends SparkSpecBase {
     }
   }
 
-  /** Write, `scan(p)`, upsert, `Delete.where` and `compactPartitions`
-    * on the dataset at `root`: each step's rows and data files per
-    * partition. With `failPromote` the compaction fails after one
-    * promote rename and `Swap.recover` completes it.
+  /** Write, `scan(p)`, upsert, `Delete.where`, an append and
+    * `compactPartitions` on the dataset at `root`: each step's rows and
+    * data files per partition. The append leaves two files in every
+    * partition, so the compaction rewrites each. With `failPromote` the
+    * delete and the compaction each fail after one promote rename and
+    * `Swap.recover` completes them.
     */
   private def lifecycle(root: String, failPromote: Boolean): Seq[(String, Seq[String], Seq[String])] = {
     val ds = new ParquetDataset(spark, root)
@@ -54,6 +56,13 @@ class FileSystemSpec extends SparkSpecBase {
       d.select("k", "v", "p").collect().map(_.mkString("|")).toSeq.sorted,
       ds.relFiles.groupBy(f => f.substring(0, f.lastIndexOf('/')))
         .map { case (p, fs) => s"$p: ${fs.size}" }.toSeq.sorted)
+    def promoting(op: => Any): Unit =
+      if (failPromote) {
+        intercept[FsUtil.PromoteFailedException] {
+          ObjectStoreFs.failingAfter(ObjectStoreFs.Promote, 1)(op)
+        }
+        assert(Swap.recover(ds))
+      } else op
     val cfg = WriteConfig(partitionBy = Seq("p"))
     ds.write(batch(0 until 30, "v"), cfg)
     ds.write(batch(30 until 60, "v"), cfg)
@@ -61,22 +70,20 @@ class FileSystemSpec extends SparkSpecBase {
     val written = Seq(seen("write", ds.df), seen("scan", ds.scan("p = 1")))
     Merge(ds, batch(25 until 35, "new"), Seq("k"), "upsert")
     val upserted = seen("upsert", ds.df)
-    Delete.where(ds, "k % 7 = 0")
+    promoting(Delete.where(ds, "k % 7 = 0"))
     val deleted = seen("delete", ds.df)
-    if (failPromote) {
-      intercept[FsUtil.PromoteFailedException] {
-        ObjectStoreFs.failingAfter(ObjectStoreFs.Promote, 1)(Maintenance.compactPartitions(ds))
-      }
-      assert(Swap.recover(ds))
-    } else Maintenance.compactPartitions(ds)
-    written ++ Seq(upserted, deleted, seen("compact", ds.df))
+    ds.write(batch(60 until 66, "v"), cfg)
+    val appended = seen("append", ds.df)
+    promoting(Maintenance.compactPartitions(ds))
+    written ++ Seq(upserted, deleted, appended, seen("compact", ds.df))
   }
 
   test("on an object store the lifecycle, with recovery from a failed promote, " +
     "gives the rows and files it gives on file:") {
     val local = lifecycle(tmpDir("fs_file"), failPromote = false)
     val objstore = lifecycle(ObjectStoreFs.path(tmpDir("fs_objstore")), failPromote = true)
-    assert(local.map(_._2.size) == Seq(60, 20, 60, 51, 51), local.map(_._3))
+    assert(local.map(_._2.size) == Seq(60, 20, 60, 51, 57, 57), local.map(_._3))
+    assert(local(4)._3 == Seq("p=0: 2", "p=1: 2", "p=2: 2"), local(4)._3)
     assert(local.last._3 == Seq("p=0: 1", "p=1: 1", "p=2: 1"), local.last._3)
     local.zip(objstore).foreach { case (l, o) =>
       assert(o._2 == l._2, s"${l._1}: rows differ")

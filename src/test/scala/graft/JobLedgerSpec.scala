@@ -12,7 +12,10 @@ import graft.sources._
   * current counts, so a change that cuts a job lowers a number here
   * and a change that adds one fails. The fixture's instance holds the
   * sidecar rows its last `updateStats` wrote, so each operation's
-  * sidecar refresh reconciles from them without re-reading the sidecar.
+  * sidecar refresh reconciles from them without re-reading the sidecar,
+  * and writes the new sidecar on the driver. The merges' 10-row
+  * sources are held on the driver: one job matches the target, and
+  * the staged write's rebalance and write take two.
   */
 class JobLedgerSpec extends SparkSpecBase {
 
@@ -55,18 +58,33 @@ class JobLedgerSpec extends SparkSpecBase {
     }
   }
 
-  private val lifecycle: Seq[(String, Int, ParquetDataset => Any)] = Seq(
-    ("append", 2, _.write(batch(80 until 90, "v"), cfg)),
-    ("upsert", 11, Merge(_, batch(35 until 45, "new"), Seq("k"), "upsert")),
-    ("insert", 8, Merge(_, batch(75 until 85, "new"), Seq("k"), "insert")),
-    ("update", 13, Merge(_, batch(35 until 45, "new"), Seq("k"), "update")),
-    ("Delete.where", 4, Delete.where(_, "k % 7 = 0")),
-    ("compactPartitions", 3, Maintenance.compactPartitions(_)))
+  /** Each operation with its job pin and the new data files it leaves
+    * on the fixture: one per partition value it writes (both values
+    * here), since partitioned writes are rebalanced by partition.
+    */
+  private val lifecycle: Seq[(String, Int, Int, ParquetDataset => Any)] = Seq(
+    ("append", 2, 2, _.write(batch(80 until 90, "v"), cfg)),
+    ("upsert", 3, 2, Merge(_, batch(35 until 45, "new"), Seq("k"), "upsert")),
+    ("insert", 3, 2, Merge(_, batch(75 until 85, "new"), Seq("k"), "insert")),
+    ("update", 3, 2, Merge(_, batch(35 until 45, "new"), Seq("k"), "update")),
+    ("Delete.where", 4, 2, Delete.where(_, "k % 7 = 0")),
+    ("compactPartitions", 2, 2, Maintenance.compactPartitions(_)))
 
-  lifecycle.foreach { case (name, jobs, op) =>
+  lifecycle.foreach { case (name, jobs, _, op) =>
     test(s"$name launches $jobs Spark jobs") {
       val ds = fixture("ledger_ops")
       assert(jobsLaunched(op(ds)) == jobs)
+    }
+  }
+
+  lifecycle.foreach { case (name, _, files, op) =>
+    test(s"$name leaves $files new files, at most one per partition value") {
+      val ds = fixture("ledger_files")
+      val before = ds.relFiles.toSet
+      op(ds)
+      val added = ds.relFiles.filterNot(before)
+      assert(added.size == files, added)
+      assert(added.map(_.split("/").head).distinct.size == added.size, added)
     }
   }
 }
