@@ -2,8 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Bridge
 import graft.functions.SchemaOps
-import graft.sources.{FsUtil, ParquetDataset}
+import graft.sources.{FsUtil, StatsSidecar}
 
 /** Canonical access to the driver-generated test tables.
   *
@@ -219,14 +220,20 @@ object Tables {
   }
 
   /** An input table — one parquet file or a directory of them — read in
-    * the unified schema of its footers (`ParquetDataset.footerSchemas`:
-    * about a millisecond a file, no Spark job). Nothing is remembered
-    * between loads, so a table regenerated at the same path reads in
-    * its new schema.
+    * the unified schema of its footers (`StatsSidecar.footers`: about a
+    * millisecond a file, no Spark job; the converter is built where the
+    * footers are read, as a serialized `SQLConf` loses its reader).
+    * Nothing is remembered between loads, so a table regenerated at the
+    * same path reads in its new schema.
     */
-  private def read(spark: SparkSession, p: String): DataFrame =
-    spark.read.schema(SchemaOps.unify(ParquetDataset.footerSchemas(spark, FsUtil.listParquet(p))))
-      .parquet(p)
+  private def read(spark: SparkSession, p: String): DataFrame = {
+    val conf = spark.conf.getAll
+    val schemas = StatsSidecar.footers(spark, FsUtil.listParquet(p)) {
+      val toSchema = Bridge.footerSchema(conf)
+      (_, m) => toSchema(m)
+    }
+    spark.read.schema(SchemaOps.unify(schemas)).parquet(p)
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

@@ -1,12 +1,10 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.functions.SchemaOps
-import graft.sources.{FsUtil, ParquetDataset, SortKey, StatsSidecar, Swap, UniqueAll, UniqueOff, WriteConfig, WritePipeline}
+import graft.sources.{FsUtil, ParquetDataset, SortKey, Swap, UniqueAll, UniqueOff, WriteConfig, WritePipeline}
 
 /** Dry-run plan shapes (reference pydala/dataset.py:129-219: every
   * maintenance op returns a plain plan when dry_run=True).
@@ -58,44 +56,20 @@ final class MaintenanceCleanupError(
   * latter two the next swapping call completes the swap from its
   * journal. The stats sidecar refreshes only after a successful swap.
   *
-  * Scale notes: planning is metadata-only (footers / sidecar, never a
-  * data scan); execution reads exactly the planned file groups; the
-  * whole-dataset paths (repartition, optimize) are single
-  * read→write jobs whose parallelism is the cluster's, not the
+  * Scale notes: planning is metadata-only: compaction plans from the
+  * rows and `tsCol` bounds the dataset version read from each footer
+  * once (`ParquetDataset.footers`), so a held version plans with no
+  * footer opened and no Spark job (past its bounds a version keeps the
+  * timestamp lane's bounds alone, and a `tsCol` of another lane is read
+  * again); execution reads exactly the planned
+  * file groups; the whole-dataset paths (repartition, optimize) are
+  * single read→write jobs whose parallelism is the cluster's, not the
   * driver's.
   */
 object Maintenance {
 
   /** Swap tag: stages under `_tmp_maint`. */
   private val TmpOp = "maint"
-
-  /** What planning reads of one data file's footer: its rows and, for
-    * a `tsCol`, whether the file has that column chunk and the chunk's
-    * min and max over the row groups that carry both.
-    */
-  private final case class FileFacts(rel: String, rows: Long, chunk: Boolean,
-                                     range: Option[(Long, Long)])
-
-  /** Every data file's [[FileFacts]], in listing order, from one footer
-    * pass (`StatsSidecar.footers`: metadata-only, no Spark job up to
-    * its driver bound). Bounds come from the exact bigint lanes: the
-    * double lanes round past 2^53 (nanosecond timestamps), and a
-    * rounded window bound could misassign files.
-    */
-  private def footerFacts(ds: ParquetDataset, tsCol: Option[String] = None): Seq[FileFacts] = {
-    val root = ds.path
-    StatsSidecar.footers(ds.spark, ds.files) { (f, m) =>
-      val ts = tsCol.toSeq.flatMap(c => StatsSidecar.colStats(root, f, m).filter(_.column == c))
-      val lo = ts.flatMap(s => s.min_int.orElse(s.min_num.map(_.toLong)))
-      val hi = ts.flatMap(s => s.max_int.orElse(s.max_num.map(_.toLong)))
-      FileFacts(FsUtil.relativize(root, f), m.getBlocks.asScala.map(_.getRowCount).sum,
-        ts.nonEmpty, lo.minOption.zip(hi.maxOption))
-    }
-  }
-
-  /** rows per data file with rows (metadata-only). */
-  private def fileRows(ds: ParquetDataset): Map[String, Long] =
-    footerFacts(ds).collect { case f if f.rows > 0 => f.rel -> f.rows }.toMap
 
   private def partitionOf(rel: String): String = {
     val i = rel.lastIndexOf('/')
@@ -111,9 +85,8 @@ object Maintenance {
                         sortBy: Seq[SortKey] = Nil,
                         dryRun: Boolean = false): CompactPlan = {
     if (!dryRun) Swap.recover(ds) // a pending swap would skew the plan
-    val rows = fileRows(ds)
-    val groups = rows.keys.toSeq.groupBy(partitionOf).toSeq
-      .map { case (p, fs) => CompactGroup(p, fs.sorted, fs.map(rows).sum) }
+    val groups = ds.footers.filter(_.rows > 0).groupBy(f => partitionOf(f.rel)).toSeq
+      .map { case (p, fs) => CompactGroup(p, fs.map(_.rel).sorted, fs.map(_.rows).sum) }
       .filter(g => g.files.size > 1 && g.rows < maxRowsPerFile)
       .sortBy(_.partition)
     val plan = CompactPlan(groups)
@@ -130,45 +103,53 @@ object Maintenance {
     if (ds.partitionColumns.nonEmpty)
       return compactPartitions(ds, maxRowsPerFile, sortBy, dryRun)
     if (!dryRun) Swap.recover(ds) // a pending swap would skew the plan
-    val rows = fileRows(ds)
+    val fs = ds.footers.filter(_.rows > 0)
     val plan =
-      if (rows.size <= 1) CompactPlan(Nil)
-      else CompactPlan(Seq(CompactGroup("", rows.keys.toSeq.sorted, rows.values.sum)))
+      if (fs.size <= 1) CompactPlan(Nil)
+      else CompactPlan(Seq(CompactGroup("", fs.map(_.rel).sorted, fs.map(_.rows).sum)))
     if (!dryRun) execute(ds, plan, maxRowsPerFile, sortBy)
     plan
   }
 
   /** Split the dataset's time range into `interval` windows (from the
-    * footers' min/max of `tsCol`) and rewrite each window's files,
-    * grouped by partition, in place.
+    * footers' min/max of `tsCol`, as the dataset version holds them)
+    * and rewrite each window's files, grouped by partition, in place.
+    * Bounds come from the exact bigint lanes: the double lanes round
+    * past 2^53 (nanosecond timestamps), and a rounded window bound
+    * could misassign files.
     */
   def compactByTimeperiod(ds: ParquetDataset, tsCol: String, intervalMicros: Long,
                           maxRowsPerFile: Long = 10000000L,
                           dryRun: Boolean = false): CompactPlan = {
     if (!dryRun) Swap.recover(ds) // a pending swap would skew the plan
-    val facts = footerFacts(ds, Some(tsCol))
+    val files = ds.footersWith(tsCol)
+    val chunks = files.map(f => f.rel -> f.stats.filter(_.column == tsCol))
+    val range = chunks.map { case (f, ts) =>
+      f -> ts.flatMap(s => s.min_int.orElse(s.min_num.map(_.toLong))).minOption
+        .zip(ts.flatMap(s => s.max_int.orElse(s.max_num.map(_.toLong))).maxOption)
+    }.toMap
     // a file whose tsCol carries NO usable bounds (stats disabled by a
     // third-party writer, an all-NULL chunk) or — after schema
     // evolution — no tsCol chunk AT ALL cannot be assigned to a window:
     // fail LOUDLY rather than silently skipping it forever (the planner
     // must never return a clean-looking partial plan)
-    val unbounded = facts.filter(f => f.chunk && f.range.isEmpty).take(5).map(_.rel)
+    val unbounded = chunks.collect { case (f, ts) if ts.nonEmpty && range(f).isEmpty => f }.take(5)
     require(unbounded.isEmpty,
       s"compactByTimeperiod: ${unbounded.length}+ file(s) have no usable " +
         s"$tsCol min/max statistics and cannot be window-assigned " +
         s"(e.g. ${unbounded.take(2).mkString(", ")}); repair stats or " +
         "compact by rows instead")
-    val unlisted = facts.filterNot(_.chunk).take(5).map(_.rel)
+    val unlisted = chunks.collect { case (f, ts) if ts.isEmpty => f }.take(5)
     require(unlisted.isEmpty,
       s"compactByTimeperiod: ${unlisted.length}+ file(s) carry no $tsCol " +
         s"column chunk at all (schema evolution?) and cannot be " +
         s"window-assigned (e.g. ${unlisted.take(2).mkString(", ")}); " +
         "repair_schema or compact by rows instead")
-    if (facts.isEmpty) return CompactPlan(Nil)
-    val fileRange = facts.map(f => f.rel -> f.range.get).toMap
+    if (files.isEmpty) return CompactPlan(Nil)
+    val fileRange = range.map { case (f, r) => f -> r.get }
     val lo = fileRange.values.map(_._1).min
     val hi = fileRange.values.map(_._2).max
-    val rows = facts.map(f => f.rel -> f.rows).toMap
+    val rows = files.map(f => f.rel -> f.rows).toMap
     val assigned = scala.collection.mutable.Set[String]()
     val groups = Iterator.iterate(lo)(_ + intervalMicros).takeWhile(_ <= hi).flatMap { start =>
       val end = start + intervalMicros

@@ -1,5 +1,7 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Bridge
@@ -42,8 +44,8 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
     })
     .getOrElse(Nil)
 
-  /** The version last resolved: its files, footer schemas, unified
-    * schema and the one frame (and Spark `FileIndex`) every read uses.
+  /** The version last resolved: its files, what each file's footer
+    * says, and the one frame (and Spark `FileIndex`) every read uses.
     * [[df]], [[read]] and [[scan]] check it against a fresh listing;
     * [[schema]] and [[schemaOf]] re-check only after [[refreshSchema]],
     * which every mutating path (write, swap) calls.
@@ -51,31 +53,49 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
   @volatile private var version: Option[ParquetDataset.Version] = None
   @volatile private var checked = false
 
+  private var handed = Map.empty[(String, Long), ParquetDataset.FileFooter]
+
   /** Forget the resolved schema — called after every mutation of the
     * underlying files (the schema can evolve on append, repartition's
-    * dateparts, dtype optimization, schema repair). The footer schemas
-    * of files that did not change are carried into the next version.
+    * dateparts, dtype optimization, schema repair). The footers of
+    * files that did not change are carried into the next version, and
+    * it adopts those a swap read of the files it `staged`.
     */
-  def refreshSchema(): Unit = checked = false
+  def refreshSchema(staged: Map[(String, Long), ParquetDataset.FileFooter] = Map.empty): Unit =
+    synchronized { handed ++= staged; checked = false }
 
   private def resolve(): ParquetDataset.Version =
     version.filter(_ => checked).getOrElse(current())
 
   /** The version of the files on disk now: the held one if the listing
     * still matches its key, else a new one that reads only the footers
-    * of files new to it (names are never reused; a changed length or
-    * modification time counts as new).
+    * no version or swap has read. A footer the last version held is
+    * known by (path, length, modification time); one a swap read while
+    * staging by (dataset-relative name, length), since the promoting
+    * rename keeps content but not, on an object store, the time. Within
+    * `StatsSidecar.SmallSidecarFiles` files and
+    * `StatsSidecar.HeldStatRows` stat rows it holds every file's stats,
+    * past them the timestamp lane's.
     */
   private def current(): ParquetDataset.Version = synchronized {
     val key = FsUtil.dataFiles(path)
-    val v = version.filter(_.key == key).getOrElse {
-      val known = version.fold(Map.empty[ParquetDataset.FileKey, StructType])(_.footers)
-      val fresh = key.filterNot(known.contains)
-      val footers = known ++ fresh.zip(ParquetDataset.footerSchemas(spark, fresh.map(_._1)))
-      // no files: Spark's own "unable to infer schema" error, as before
-      val reader = if (key.isEmpty) spark.read else spark.read.schema(SchemaOps.unify(key.map(footers)))
-      ParquetDataset.Version(key, key.map(k => FsUtil.relativize(path, k._1)),
-        key.map(k => k -> footers(k)).toMap, reader.parquet(path))
+    val v = version.filter(v => v.key == key && v.full == ParquetDataset.fits(key.size, v.statRows)).getOrElse {
+      val rel = key.map(k => FsUtil.relativize(path, k._1))
+      val had = version.fold(Map.empty[(String, Long, Long), ParquetDataset.FileFooter])(v => v.key.zip(v.footers).toMap)
+      val known = key.zip(rel).map { case (k, r) => had.get(k).orElse(handed.get((r, k._2))) }
+      // a trimmed footer is read again once the dataset is back within the bounds
+      val fits = ParquetDataset.fits(key.size, known.flatten.map(_.statRows).sum)
+      val again = key.indices.filter(i => known(i).forall(f => fits && !f.full))
+      val budget = if (fits) StatsSidecar.HeldStatRows - known.flatten.filter(_.full).map(_.statRows).sum else 0L
+      val read = again.zip(ParquetDataset.footers(spark, path, again.map(key(_)._1), budget)).toMap
+      val footers = key.indices.map(i => read.getOrElse(i, known(i).get))
+      handed = Map.empty
+      // a read comes back full only inside the budget, so all full means it fits
+      val held = if (fits && footers.forall(_.full)) footers else footers.map(_.lean)
+      new ParquetDataset.Version(key, rel, held,
+        // no files: Spark's own "unable to infer schema" error, as before
+        if (key.isEmpty) spark.read.parquet(path)
+        else spark.read.schema(SchemaOps.unify(held.map(_.schema))).parquet(path))
     }
     version = Some(v)
     checked = true
@@ -172,14 +192,32 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
   /** The sidecar as a parquet read; None without one. */
   def stats: Option[DataFrame] = StatsSidecar.listing(path).map(_ => StatsSidecar.frame(spark, path))
 
-  /** Whether the dataset has a sidecar: a listing, no parquet relation. */
-  def hasStats: Boolean = StatsSidecar.listing(path).nonEmpty
+  /** Whether the dataset has a sidecar (or its aside): a listing, no parquet relation. */
+  def hasStats: Boolean =
+    StatsSidecar.listing(path).nonEmpty || FsUtil.exists(StatsSidecar.asidePath(path))
 
-  /** Reconcile the sidecar with the physical files. */
+  /** Reconcile the sidecar with the physical files of this version. */
   def updateStats(): DataFrame = {
-    val (frame, h) = StatsSidecar.update(spark, path, held)
+    val v = current()
+    val (frame, h) = StatsSidecar.update(spark, path, v.key.map(_._1), v.rows)
     held = h
     frame
+  }
+
+  /** What each data file's footer says, in listing order: no footer
+    * read for a held version.
+    */
+  private[graft] def footers: Seq[ParquetDataset.FileFooter] = current().footers
+
+  /** [[footers]] with `column`'s sidecar rows wherever a file has the
+    * column: a footer trimmed to the timestamp lane is read again for a
+    * column of another lane.
+    */
+  private[graft] def footersWith(column: String): Seq[ParquetDataset.FileFooter] = {
+    val v = current()
+    val again = v.footers.indices.filter(i => !v.footers(i).full && !v.footers(i).stats.exists(_.column == column))
+    val read = again.zip(ParquetDataset.footers(spark, path, again.map(v.key(_)._1), 0, _.column == column)).toMap
+    v.footers.indices.map(i => read.getOrElse(i, v.footers(i)))
   }
 
   /** The sidecar rows of some columns for [[ScanPruner.select]], read
@@ -273,28 +311,60 @@ final class ParquetDataset(val spark: SparkSession, rawPath: String) {
 
 object ParquetDataset {
 
-  private type FileKey = (String, Long, Long)
-
-  /** One version of the files on disk: its listing (`key`, with the
-    * dataset-relative names `rel`), each file's footer schema, and the
-    * frame read in their unified schema.
+  /** What one footer says of a data file: its name under the root it
+    * was read from, schema, rows, how many sidecar rows its stats make
+    * (`statRows`, row groups × columns) and those rows: all of them
+    * (`full`) or, past a version's bounds, one lane's alone.
     */
-  private final case class Version(key: Seq[FileKey], rel: Seq[String],
-                                   footers: Map[FileKey, StructType], frame: DataFrame) {
-    lazy val relSet: Set[String] = rel.toSet
-    lazy val schemaOf: Map[String, StructType] = footers.map { case (k, s) => k._1 -> s }
+  final case class FileFooter(rel: String, schema: StructType, rows: Long, statRows: Long,
+                              stats: Seq[ColStat], full: Boolean) {
+    def lean: FileFooter = if (full) copy(stats = stats.filter(Timestamps), full = false) else this
   }
 
-  /** Spark schema of each file's footer (`Bridge.footerSchema`), in
-    * `files` order, through `StatsSidecar.footers`. The converter is
-    * built where the footers are read: a serialized `SQLConf` loses its
-    * reader.
+  /** The lane a trimmed footer keeps: compaction's usual `tsCol` bounds. */
+  private val Timestamps: ColStat => Boolean = _.typ == "timestamp"
+
+  /** Whether a version of `files` files whose stats make `statRows`
+    * rows holds them all.
     */
-  def footerSchemas(spark: SparkSession, files: Seq[String]): Seq[StructType] = {
+  private def fits(files: Int, statRows: Long): Boolean =
+    files <= StatsSidecar.SmallSidecarFiles && statRows <= StatsSidecar.HeldStatRows
+
+  /** One version of the files on disk: its listing (`key`, with the
+    * dataset-relative names `rel`), what each file's footer says, and
+    * the frame read in their unified schema, built on first use.
+    */
+  private final class Version(val key: Seq[(String, Long, Long)], val rel: Seq[String],
+                              val footers: Seq[FileFooter], frameOf: => DataFrame) {
+    lazy val frame: DataFrame = frameOf
+    lazy val relSet: Set[String] = rel.toSet
+    lazy val schemaOf: Map[String, StructType] = key.map(_._1).zip(footers.map(_.schema)).toMap
+    lazy val full: Boolean = footers.forall(_.full)
+    lazy val statRows: Long = footers.map(_.statRows).sum
+    /** Every file's sidecar rows, when the version holds them. */
+    def rows: Option[Seq[ColStat]] = Option.when(full)(footers.flatMap(_.stats))
+  }
+
+  /** Each file's [[FileFooter]], named under `root`, in `files` order,
+    * from one `StatsSidecar.footers` pass: full while the stat rows built
+    * so far stay within `budget` (none past the driver bound), `lane`'s
+    * rows alone after. The schema converter is built where the footers
+    * are read: a serialized `SQLConf` loses its reader.
+    */
+  def footers(spark: SparkSession, root: String, files: Seq[String], budget: Long,
+              lane: ColStat => Boolean = Timestamps): Seq[FileFooter] = {
     val conf = spark.conf.getAll
+    val room = if (files.size <= StatsSidecar.SmallSidecarFiles) budget else 0L
     StatsSidecar.footers(spark, files) {
       val toSchema = Bridge.footerSchema(conf)
-      (_, m) => toSchema(m)
+      var left = room
+      (f, m) =>
+        val blocks = m.getBlocks.asScala
+        val n = blocks.map(_.getColumns.size.toLong).sum
+        left -= n
+        val stats = StatsSidecar.colStats(root, f, m)
+        FileFooter(FsUtil.relativize(root, f), toSchema(m), blocks.map(_.getRowCount).sum, n,
+          if (left >= 0) stats else stats.filter(lane), left >= 0)
     }
   }
 }

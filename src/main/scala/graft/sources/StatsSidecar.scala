@@ -55,40 +55,60 @@ final case class ColStat(
   * Scale notes: footer collection is metadata I/O, never a data scan —
   * the reference's threaded footer collection (pydala/metadata.py:
   * 105-145) as one size rule: on the driver up to [[SmallSidecarFiles]]
-  * files, in one executor pass beyond.
+  * files, in one executor pass beyond. Within it, [[update]] writes the
+  * rows the dataset version read from each footer once.
   */
 object StatsSidecar {
 
   val SidecarName = "_graft_stats.parquet"
 
-  /** Driver bounds: [[footers]] reads up to `SmallSidecarFiles` footers
-    * on the driver, and a sidecar within BOTH limits is reconciled
-    * driver-side by [[update]] (one part file written on the driver) instead of
-    * paying the distributed reconcile's per-call fixed cost. The file
-    * bound is MEASURED, not chosen (the archived sweep in docs/SCALE.md
-    * at 256/512/1024/2048 files, min of 9 reps): the fast path wins at
-    * every size through 2048 (276–305 ms vs the distributed path's
-    * 409–444 ms fixed cost) with a ~16 µs/file slope, so the wall
-    * crossover extrapolates to ~10⁴ files — far above this bound; the
-    * limit stays 2048 because past it the DRIVER-MEMORY argument (the
-    * reason the distributed path exists) starts to matter before the
-    * wall does. The byte
-    * bound guards the shrunk-dataset edge (few live files, huge stale
-    * sidecar).
+  /** Driver bound: [[footers]] reads up to `SmallSidecarFiles` footers
+    * on the driver, and a dataset within it has its sidecar written
+    * driver-side by [[update]] (one part file written on the driver)
+    * instead of paying the distributed reconcile's per-call fixed cost.
+    * The bound is MEASURED, not chosen (the archived sweep in
+    * docs/SCALE.md at 256/512/1024/2048 files, min of 9 reps): the fast
+    * path wins at every size through 2048 (276–305 ms vs the
+    * distributed path's 409–444 ms fixed cost) with a ~16 µs/file
+    * slope, so the wall crossover extrapolates to ~10⁴ files — far
+    * above this bound; the limit stays 2048 because past it the
+    * DRIVER-MEMORY argument (the reason the distributed path exists)
+    * starts to matter before the wall does.
     */
   def SmallSidecarFiles: Int =
     sys.props.get("graft.sidecar.small.files").map(_.toInt).getOrElse(2048)
-  val SmallSidecarBytes: Long = 16L * 1024 * 1024
 
-  /** The rows a `ParquetDataset` holds for its lifetime ([[Held]]) stay
-    * under a lower byte bound than the reconcile's transient ones: a
-    * sidecar decodes to ~17 bytes of driver heap per part-file byte
+  /** The sidecar rows a `ParquetDataset` holds for its lifetime
+    * ([[Held]]) stay under a byte bound: a sidecar decodes to ~17
+    * bytes of driver heap per part-file byte
     * (measured in docs/SCALE.md: 264 MiB for a 15.7 MiB sidecar), so
-    * 2 MiB holds at most ~35 MiB per instance.
+    * 2 MiB holds at most ~35 MiB per instance, beside the dataset
+    * version's [[HeldStatRows]].
     */
   val HeldSidecarBytes: Long = 2L * 1024 * 1024
 
+  /** The sidecar rows a dataset version builds from footers and holds
+    * (`ParquetDataset.FileFooter`) stay under a row bound, judged before
+    * they are built from each footer's row groups × columns: a row
+    * retains ~330 B of driver heap (measured in docs/SCALE.md), so
+    * 100,000 rows hold about 32 MiB, the heap [[HeldSidecarBytes]]
+    * allows held rows. Past it the refresh takes the distributed path.
+    */
+  val HeldStatRows: Long = 100000L
+
   def sidecarPath(root: String): String = root.stripSuffix("/") + "/" + SidecarName
+
+  /** Where [[update]] moves the old sidecar while the new one lands. */
+  def asidePath(root: String): String = sidecarPath(root) + ".aside"
+
+  /** Finish a sidecar swap a crash cut short: a lone aside goes back
+    * into place, one beside a sidecar (the new one landed) is dropped.
+    */
+  def restore(root: String): Unit =
+    if (FsUtil.exists(asidePath(root))) {
+      if (FsUtil.exists(sidecarPath(root))) FsUtil.deleteRecursively(asidePath(root))
+      else FsUtil.rename(asidePath(root), sidecarPath(root))
+    }
 
   /** Footer-read task count: one task per ~64 files once the listing
     * outgrows 32 tasks. Footer reads are small metadata I/O, and a task
@@ -113,27 +133,18 @@ object StatsSidecar {
       files.map(f => read(f, footer(conf, f)))
     } else inTasks(spark, files)(reader).collect().toSeq
 
-  /** The executor pass of [[footers]], left distributed. */
+  /** The executor pass of [[footers]], left distributed. Its tasks get
+    * the session's Hadoop configuration: a fresh one there lacks the
+    * `spark.hadoop.*` settings (a scheme's filesystem class, an object
+    * store's endpoint and credentials).
+    */
   private def inTasks[T: ClassTag](spark: SparkSession, files: Seq[String])(
       reader: => (String, ParquetMetadata) => T): RDD[T] = {
-    val hadoop = taskConf(spark)
+    val hadoop = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
     spark.sparkContext.parallelize(files, footerTasks(files.size)).mapPartitions { it =>
       val (conf, read) = (hadoop.value, reader)
       it.map(f => read(f, footer(conf, f)))
     }
-  }
-
-  /** Distributed footer-stats frame: one row per file × row-group ×
-    * leaf column, built on executors and NEVER collected — the
-    * distributed reconcile in [[update]] writes it straight back out
-    * (round-9: at 100 TB, ~10⁵–10⁶ files × tens of columns, a
-    * Seq-returning collect was a multi-GB driver materialization on
-    * every update).
-    */
-  private def collectDF(spark: SparkSession, root: String, absFiles: Seq[String]): DataFrame = {
-    import spark.implicits._
-    if (absFiles.isEmpty) spark.emptyDataset[ColStat].toDF()
-    else spark.createDataset(inTasks(spark, absFiles)(colStats(root, _, _)).flatMap(identity)).toDF()
   }
 
   /** Bloom-filter footer offsets for `column`: one entry per row
@@ -151,14 +162,6 @@ object StatsSidecar {
           .map(_.getBloomFilterOffset)
       }
     }.flatten
-
-  /** The session's Hadoop configuration for footer-reading tasks: a
-    * fresh `Configuration` there lacks the `spark.hadoop.*` settings,
-    * such as a scheme's filesystem class or an object store's
-    * endpoint and credentials.
-    */
-  private def taskConf(spark: SparkSession) =
-    new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
 
   /** One data file's footer — the only place the management layer
     * opens parquet files for metadata. The read options come from
@@ -270,17 +273,16 @@ object StatsSidecar {
   final case class Held(key: Seq[(String, Long, Long)], rows: Option[Seq[ColStat]])
 
   /** A sidecar listed as `key` for a dataset of `files` data files is
-    * within the file bound and `bytes`.
+    * within the file bound and [[HeldSidecarBytes]].
     */
-  private def onDriver(key: Seq[(String, Long, Long)], files: => Int,
-                       bytes: Long = SmallSidecarBytes): Boolean =
-    key.map(_._2).sum <= bytes && files <= SmallSidecarFiles
+  private def holdable(key: Seq[(String, Long, Long)], files: => Int): Boolean =
+    key.map(_._2).sum <= HeldSidecarBytes && files <= SmallSidecarFiles
 
   /** The sidecar at `key` for a dataset of `files` data files: its rows
     * read in one job within the bounds for holding them, none past them.
     */
   def load(spark: SparkSession, root: String, key: Seq[(String, Long, Long)], files: => Int): Held =
-    Held(key, Option.when(onDriver(key, files, HeldSidecarBytes))(rows(frame(spark, root)).toSeq))
+    Held(key, Option.when(holdable(key, files))(rows(frame(spark, root)).toSeq))
 
   private val colStatEncoder: Encoder[ColStat] = Encoders.product[ColStat]
 
@@ -323,73 +325,56 @@ object StatsSidecar {
     case d: Double => g.add(f, d)
   }
 
-  /** Reconcile the sidecar with the physical files — physical discovery
-    * is authoritative (ADR 0001; pydala/metadata.py:809-862): stats for
-    * removed files are dropped, new files get footers read, and an
-    * empty dataset removes the stale sidecar entirely. `held` rows
-    * whose key still matches the sidecar's listing stand in for
-    * re-reading it. Returns the new sidecar and its [[Held]] (rows only
-    * on the driver path); None once the sidecar is removed.
+  /** Reconcile the sidecar with the physical `files` — physical
+    * discovery is authoritative (ADR 0001; pydala/metadata.py:809-862):
+    * stats for removed files are dropped, new files get footers read,
+    * and an empty dataset removes the stale sidecar entirely. `rows`,
+    * when the dataset version holds every file's, are written as they
+    * are on the driver: no footer and no old sidecar is read. Without
+    * them the reconcile is distributed. Returns the new sidecar and its
+    * [[Held]] (rows only from the driver path); None once the sidecar is
+    * removed.
     */
-  def update(spark: SparkSession, root: String,
-             held: Option[Held] = None): (DataFrame, Option[Held]) = {
+  def update(spark: SparkSession, root: String, files: Seq[String],
+             rows: Option[Seq[ColStat]]): (DataFrame, Option[Held]) = {
     import spark.implicits._
-    val absFiles = FsUtil.listParquet(root)
     val p = sidecarPath(root)
-    if (absFiles.isEmpty) {
+    restore(root)
+    if (files.isEmpty) {
       FsUtil.deleteRecursively(p)
       return (spark.emptyDataset[ColStat].toDF(), None)
     }
-    // Past the fast-path bounds the reconcile is DataFrame end-to-end
-    // (round-9, verdict #2): no ColStat row lands on the driver, only
-    // file PATHS — which the driver already holds from the listing.
-    val rel = absFiles.map(f => FsUtil.relativize(root, f))
-    val key = listing(root)
-    val written: Option[Seq[ColStat]] =
-      Option.when(onDriver(key.getOrElse(Nil), absFiles.size)) {
-        // FAST PATH (round-10, verdict #3): at sf0.1 the distributed
-        // reconcile's fixed cost — sidecar scan + left-semi join +
-        // footer-RDD union lineage — is ~0.4–1.1 s per call, which
-        // dominated the lifecycle write cluster (q104/q107/q108/q112/
-        // q113/q115). A sidecar this small (≤2048 files AND ≤16 MB of
-        // part files — the byte guard covers a dataset that SHRANK from
-        // a huge listing) is by definition driver-safe: filter retained
-        // rows in memory and read the few fresh footers inline. The
-        // 100 TB path below is unchanged.
-        val liveSet = rel.toSet
-        val prior = held.filter(h => key.contains(h.key)).flatMap(_.rows)
-          .orElse(key.map(_ => rows(frame(spark, root)).toSeq))
-        val kept = prior.getOrElse(Nil).filter(cs => liveSet(cs.file_path))
-        val known = kept.map(_.file_path).toSet
-        val fresh = absFiles.filterNot(f => known.contains(FsUtil.relativize(root, f)))
-        kept ++ footers(spark, fresh)(colStats(root, _, _)).flatten
-      }
-    // stage + atomic-ish swap so a crash never leaves a torn sidecar;
-    // the staged write reads the OLD sidecar (still in place) for the
-    // retained rows, so the delete below is strictly after the copy.
+    // staged, then swapped in, so a crash never leaves a torn sidecar.
     // The driver path writes its rows as one part file with no Spark
-    // job; past it the write is sharded for huge listings: ~4k files
-    // of stats per output shard keeps each write task bounded without
-    // funneling a 10⁶-file dataset's stats through one task.
+    // job. The distributed path is DataFrame end-to-end (no ColStat row
+    // lands on the driver, only file paths, which it already holds); it
+    // reads the old sidecar, still in place, for the retained rows, and
+    // its write is sharded for huge listings: ~4k files of stats per
+    // output shard keeps each write task bounded without funneling a
+    // 10⁶-file dataset's stats through one task.
     val tmp = p + ".tmp"
     FsUtil.deleteRecursively(tmp)
-    written match {
-      case Some(rows) => writeOnDriver(spark, tmp, rows)
+    rows match {
+      case Some(rs) => writeOnDriver(spark, tmp, rs)
       case None =>
-        val live = rel.toDF("file_path")
-        val existing: DataFrame = key.map(_ => frame(spark, root))
-          .map(_.join(live, Seq("file_path"), "left_semi"))
-          .getOrElse(spark.emptyDataset[ColStat].toDF())
+        val rel = files.map(f => FsUtil.relativize(root, f))
+        val existing = listing(root).map(_ => frame(spark, root).join(rel.toDF("file_path"), Seq("file_path"),
+          "left_semi")).getOrElse(spark.emptyDataset[ColStat].toDF())
         val known = existing.select("file_path").distinct().as[String]
           .collect().toSet // file-count-sized, not stats-sized
-        val freshFiles =
-          absFiles.filterNot(f => known.contains(FsUtil.relativize(root, f)))
-        existing.unionByName(collectDF(spark, root, freshFiles))
-          .coalesce(math.max(1, absFiles.size / 4096)).write.mode("overwrite").parquet(tmp)
+        val freshFiles = files.filterNot(f => known.contains(FsUtil.relativize(root, f)))
+        // the fresh files' rows are built on executors and never
+        // collected: at 10⁵–10⁶ files a collect is a multi-GB driver load
+        val fresh = inTasks(spark, freshFiles)(colStats(root, _, _)).flatMap(identity)
+        existing.unionByName(spark.createDataset(fresh).toDF())
+          .coalesce(math.max(1, files.size / 4096)).write.mode("overwrite").parquet(tmp)
     }
-    FsUtil.deleteRecursively(p)
+    // the old sidecar goes aside until the new one is in place, so a
+    // crash between the renames leaves one [[restore]] puts back
+    if (FsUtil.exists(p)) FsUtil.rename(p, asidePath(root))
     FsUtil.rename(tmp, p)
+    FsUtil.deleteRecursively(asidePath(root))
     val now = FsUtil.dataFiles(p)
-    (frame(spark, root), Some(Held(now, written.filter(_ => onDriver(now, absFiles.size, HeldSidecarBytes)))))
+    (frame(spark, root), Some(Held(now, rows.filter(_ => holdable(now, files.size)))))
   }
 }

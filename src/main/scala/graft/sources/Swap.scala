@@ -2,8 +2,6 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 
 import graft.operators.{MaintenanceCleanupError, StagedRewriteException}
@@ -24,8 +22,8 @@ import graft.operators.{MaintenanceCleanupError, StagedRewriteException}
   *  4. promote the staged files into the dataset root;
   *  5. delete the originals;
   *  6. drop the journal;
-  *  7. `refreshByPath` and `refreshSchema`. The stats sidecar is the
-  *     caller's to refresh, once per operation.
+  *  7. `refreshByPath` and `refreshSchema` with the staged footers. The
+  *     stats sidecar is the caller's to refresh, once per operation.
   *
   * Failure contract:
   *  - in step 2: the staging dir is removed and
@@ -67,7 +65,7 @@ object Swap {
     val root = ds.path
     val tmp = stagingPath(root, op)
     FsUtil.deleteRecursively(tmp)
-    val rows =
+    val staged =
       try { stage(tmp); dropEmpty(ds, tmp) }
       catch { case e: Exception =>
         FsUtil.deleteRecursively(tmp)
@@ -85,19 +83,21 @@ object Swap {
     retire(root, originals)
     FsUtil.delete(root, Seq(jp))
     ds.spark.catalog.refreshByPath(root)
-    ds.refreshSchema()
-    Result(landed.map(FsUtil.relativize(root, _)), rows)
+    ds.refreshSchema(staged)
+    Result(landed.map(FsUtil.relativize(root, _)), staged.values.map(_.rows).sum)
   }
 
-  /** Complete every swap a journal records as pending, and discard
-    * staging dirs no journal covers (a swap that failed or crashed
-    * before its journal: nothing was promoted). Refreshes the sidecar,
+  /** Complete every swap a journal records as pending, discard staging
+    * dirs no journal covers (a swap that failed or crashed before its
+    * journal: nothing was promoted), and finish a sidecar swap a crash
+    * cut short (`StatsSidecar.restore`). Refreshes the sidecar,
     * if there is one, after completing a swap. Safe to call any time;
     * returns true if a pending swap was completed.
     */
   def recover(ds: ParquetDataset): Boolean = {
     val root = ds.path
     val names = FsUtil.children(root)
+    StatsSidecar.restore(root)
     val pending = names.collect { case Journal(op) => op }
     names.foreach {
       case n @ Staging(op) if !pending.contains(op) => FsUtil.deleteRecursively(s"$root/$n")
@@ -120,15 +120,15 @@ object Swap {
     true
   }
 
-  /** Row count of the staged files; zero-row files are deleted (a
-    * non-partitioned Spark write leaves one even when it has no rows).
+  /** The staged files' footers by (dataset-relative name, length), the
+    * one read of them; zero-row files are deleted (a non-partitioned
+    * Spark write leaves one even when it has no rows).
     */
-  private def dropEmpty(ds: ParquetDataset, tmp: String): Long = {
-    val staged = FsUtil.listParquet(tmp)
-    val rows = StatsSidecar.footers(ds.spark, staged)((_, m) =>
-      m.getBlocks.asScala.map(_.getRowCount).sum)
-    FsUtil.delete(tmp, staged.zip(rows).collect { case (f, 0L) => f })
-    rows.sum
+  private def dropEmpty(ds: ParquetDataset, tmp: String): Map[(String, Long), ParquetDataset.FileFooter] = {
+    val files = FsUtil.dataFiles(tmp)
+    val staged = files.zip(ParquetDataset.footers(ds.spark, tmp, files.map(_._1), StatsSidecar.HeldStatRows))
+    FsUtil.delete(tmp, staged.collect { case ((f, _, _), m) if m.rows == 0 => f })
+    staged.collect { case ((_, len, _), m) if m.rows > 0 => (m.rel, len) -> m }.toMap
   }
 
   /** Step 5; a failure reports the originals that still exist (all of

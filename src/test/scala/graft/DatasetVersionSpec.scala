@@ -101,7 +101,7 @@ class DatasetVersionSpec extends SparkSpecBase {
       rand(3).as("min_num"), rand(4).as("max_num"))
       .coalesce(1).write.parquet(StatsSidecar.sidecarPath(dir))
     val bytes = StatsSidecar.listing(dir).get.map(_._2).sum
-    assert(bytes > StatsSidecar.HeldSidecarBytes && bytes <= StatsSidecar.SmallSidecarBytes)
+    assert(bytes > StatsSidecar.HeldSidecarBytes && bytes <= 16L * 1024 * 1024)
     val ds = new ParquetDataset(spark, dir)
     assert(jobsLaunched(assert(ds.count() == 10 * n)) >= 1)
     assert(jobsLaunched(assert(ds.count() == 10 * n)) >= 1)

@@ -6,16 +6,20 @@ import graft.operators.{Delete, Maintenance, Merge}
 import graft.sources._
 
 /** The job ledger: how many Spark jobs each lifecycle operation
-  * launches on one small partitioned dataset with a stats sidecar.
-  * Footer reads take no job up to `StatsSidecar.SmallSidecarFiles`
-  * files and exactly one past it; the other pins are the operations'
-  * current counts, so a change that cuts a job lowers a number here
-  * and a change that adds one fails. The fixture's instance holds the
-  * sidecar rows its last `updateStats` wrote, so each operation's
-  * sidecar refresh reconciles from them without re-reading the sidecar,
-  * and writes the new sidecar on the driver. The merges' 10-row
-  * sources are held on the driver: one job matches the target, and
-  * the staged write's rebalance and write take two.
+  * launches on one small partitioned dataset with a stats sidecar, and
+  * which data-file footers it opens. Footer reads take no job up to
+  * `StatsSidecar.SmallSidecarFiles` files and exactly one past it;
+  * compaction planning reads the footers its instance's dataset
+  * version already holds, so a held version plans in no job on either
+  * side of the bound. The other pins are the operations' current
+  * counts, so a change that cuts a job lowers a number here and a
+  * change that adds one fails. The fixture's instance holds a dataset
+  * version with every file's sidecar rows, read once from each footer
+  * (a swap's staged files from the swap's own read), so each
+  * operation's sidecar refresh writes the version's rows on the
+  * driver: it reads no footer and not the old sidecar. The merges'
+  * 10-row sources are held on the driver: one job matches the target,
+  * and the staged write's rebalance and write take two.
   */
 class JobLedgerSpec extends SparkSpecBase {
 
@@ -27,9 +31,11 @@ class JobLedgerSpec extends SparkSpecBase {
     (k.toLong, s"$v$k", k % 2, new Timestamp(1704067200000L + k * 3600000L))
   }.toDF("k", "v", "p", "ts")
 
-  /** Two appends over two partitions (four data files), with a sidecar. */
-  private def fixture(name: String): ParquetDataset = {
-    val ds = new ParquetDataset(spark, tmpDir(name))
+  /** Two appends over two partitions (four data files), with a sidecar,
+    * in a local directory named as `on` names it.
+    */
+  private def fixture(name: String, on: String => String = identity): ParquetDataset = {
+    val ds = new ParquetDataset(spark, on(tmpDir(name)))
     ds.write(batch(0 until 40, "v").coalesce(1), cfg)
     ds.write(batch(40 until 80, "v").coalesce(1), cfg)
     ds.updateStats()
@@ -41,19 +47,27 @@ class JobLedgerSpec extends SparkSpecBase {
     try f finally sys.props.remove("graft.sidecar.small.files")
   }
 
-  private val footerReaders: Seq[(String, ParquetDataset => Any)] = Seq(
-    "compactPartitions(dryRun)" -> (Maintenance.compactPartitions(_, dryRun = true)),
-    "compactByTimeperiod(dryRun)" -> (Maintenance.compactByTimeperiod(_, "ts",
+  /** Footer readers, each with whether it plans from the version. */
+  private val footerReaders: Seq[(String, Boolean, ParquetDataset => Any)] = Seq(
+    ("compactPartitions(dryRun)", true, Maintenance.compactPartitions(_, dryRun = true)),
+    ("compactByTimeperiod(dryRun)", true, Maintenance.compactByTimeperiod(_, "ts",
       Maintenance.parseInterval("1d"), dryRun = true)),
-    "bloomFilterOffsets" -> (ds => StatsSidecar.bloomFilterOffsets(spark, ds.path, "k")))
+    ("bloomFilterOffsets", false, ds => StatsSidecar.bloomFilterOffsets(spark, ds.path, "k")))
 
-  footerReaders.foreach { case (name, op) =>
+  footerReaders.foreach { case (name, planner, op) =>
     test(s"$name reads footers in no job below the driver bound and in one past it") {
       val ds = fixture("ledger_footers")
       assert(ds.files.size == 4)
-      var onDriver, inTasks: Any = null
+      var onDriver, held, inTasks: Any = null
       assert(jobsLaunched { onDriver = op(ds) } == 0)
-      assert(pastDriverBound(jobsLaunched { inTasks = op(ds) }) == 1)
+      // a planner reads the held version: no footer, past the bound too;
+      // a fresh instance's version reads the footers in one executor pass
+      val past = if (!planner) ds else {
+        assert(pastDriverBound(jobsLaunched { held = op(ds) }) == 0)
+        assert(held == onDriver)
+        new ParquetDataset(spark, ds.path)
+      }
+      assert(pastDriverBound(jobsLaunched { inTasks = op(past) }) == 1)
       assert(inTasks == onDriver)
     }
   }
@@ -85,6 +99,18 @@ class JobLedgerSpec extends SparkSpecBase {
       val added = ds.relFiles.filterNot(before)
       assert(added.size == files, added)
       assert(added.map(_.split("/").head).distinct.size == added.size, added)
+    }
+  }
+
+  lifecycle.foreach { case (name, _, _, op) =>
+    test(s"$name opens each new data file's footer once and no other file's (objstore)") {
+      val ds = fixture("ledger_opens", ObjectStoreFs.path)
+      val before = ds.files.toSet
+      val opens = ObjectStoreFs.dataOpens(op(ds))
+      val added = ds.files.filterNot(before)
+      assert(added.nonEmpty)
+      assert(opens == added.map(f => FsUtil.stripScheme(f) -> 1).toMap)
+      assert(ObjectStoreFs.dataOpens { ds.df; ds.scan("k >= 85") }.isEmpty)
     }
   }
 }

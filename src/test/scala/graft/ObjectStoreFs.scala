@@ -2,9 +2,12 @@ package graft
 
 import java.io.IOException
 import java.net.URI
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.hadoop.fs.{FileUtil, Path, RawLocalFileSystem}
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FSDataInputStream, FileUtil, Path, RawLocalFileSystem}
 
 /** The local disk served as an object store under the `objstore:`
   * scheme (registered by [[SparkTestSession]] as
@@ -17,7 +20,9 @@ import org.apache.hadoop.fs.{FileUtil, Path, RawLocalFileSystem}
   *  - no checksum files.
   *
   * One failure hook, [[ObjectStoreFs.failingAfter]], fails every
-  * promote rename or every original delete after the first `n`.
+  * promote rename or every original delete after the first `n`; one
+  * ledger, [[ObjectStoreFs.dataOpens]], counts the data files a thread
+  * opens.
   */
 class ObjectStoreFs extends RawLocalFileSystem {
 
@@ -34,6 +39,11 @@ class ObjectStoreFs extends RawLocalFileSystem {
   override def delete(p: Path, recursive: Boolean): Boolean = {
     ObjectStoreFs.trip(ObjectStoreFs.Retire, ObjectStoreFs.isOriginal(p))
     super.delete(p, recursive)
+  }
+
+  override def open(p: Path, bufferSize: Int): FSDataInputStream = {
+    ObjectStoreFs.opened(p)
+    super.open(p, bufferSize)
   }
 }
 
@@ -65,6 +75,28 @@ object ObjectStoreFs {
     calls.set(0)
     armed = Some(op -> n)
     try body finally armed = None
+  }
+
+  @volatile private var ledger: Option[(Thread, ConcurrentHashMap[String, Int])] = None
+
+  /** The data files the calling thread opens inside `body`, with how
+    * often: a file is named by its local path with any staging dir left
+    * out, so a staged file and the file it is promoted to are one. The
+    * stats sidecar's part files are not data files; opens of files in
+    * Spark's `_temporary` commit dir (the copy half of a commit rename)
+    * and from other threads (Spark's executor tasks, which read data,
+    * not footers) do not count.
+    */
+  def dataOpens(body: => Any): Map[String, Int] = {
+    val m = new ConcurrentHashMap[String, Int]
+    ledger = Some(Thread.currentThread() -> m)
+    try body finally ledger = None
+    m.asScala.toMap
+  }
+
+  private def opened(p: Path): Unit = ledger.foreach { case (t, m) =>
+    if ((Thread.currentThread() eq t) && isData(p) && !commit(p) && !in(p, _.startsWith("_graft_stats")))
+      m.merge(p.toUri.getPath.split("/").filterNot(_.startsWith("_tmp_")).mkString("/"), 1, _ + _)
   }
 
   private def trip(op: Op, counted: Boolean): Unit = armed match {

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * observe counts, so a second copy of the copy-on-write swap cannot be
   * forked back into an operator; only `ParquetDataset` reads a
   * dataset's files by path, so every reader shares its one schema; only
-  * `StatsSidecar` opens data-file footers; and every file operation goes
+  * `StatsSidecar` opens data-file footers, and only the dataset version
+  * and the swap ask it for their stats; and every file operation goes
   * through the dataset's Hadoop filesystem.
   */
 class SwapSeamSpec extends AnyFunSuite {
@@ -57,6 +58,15 @@ class SwapSeamSpec extends AnyFunSuite {
     // brings back a second rule
     val found = offenders(Seq("StatsSidecar.footer(", "readFooter(", "collectDF(", "footerTasks("),
       Set("StatsSidecar.scala"))
+    assert(found.isEmpty, found.mkString("; "))
+  }
+
+  test("only the dataset version and the swap read footers through StatsSidecar") {
+    // each footer is read once, into the dataset version (a swap's staged
+    // files by the swap); a planner reads the version, not a footer pass
+    // of its own
+    val found = offenders(Seq("StatsSidecar.footers(", "colStats("),
+      Set("ParquetDataset.scala", "Swap.scala", "StatsSidecar.scala"))
     assert(found.isEmpty, found.mkString("; "))
   }
 
